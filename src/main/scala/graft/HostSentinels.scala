@@ -1,7 +1,7 @@
 package graft
 
 /** Fixed-work HOST-IDLENESS sentinels, shared by every measurement main
-  * (`Bench`, `LoopStress`, `TakedownProbe`, `IngestProbe`): zero-Spark
+  * (`Bench`, `SentinelProbe`; the probe readings are in SCALE.md): zero-Spark
   * probes whose wall time depends only on this process's share of one
   * core (cpu), of memory bandwidth (mem), and of the storage tier (io).
   * A measurement that prints its own in-band sentinel triple is

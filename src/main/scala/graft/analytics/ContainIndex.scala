@@ -5,8 +5,6 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.VersionedArtifact
-
 /** PERSISTED containment index — the artifact
   * [[DedupQueries.qDedupContainmentIncremental]]'s scaladoc names ("the
   * part a production deployment persists"): built once at corpus ingest,
@@ -30,8 +28,8 @@ import graft.streaming.VersionedArtifact
   * `ContainIndexSpec` pins probe output equal to the in-session
   * incremental face, which ranks by live df.
   *
-  * Versioning + idempotent probe-then-admit come from
-  * [[graft.streaming.VersionedArtifact]], shared with [[DedupIndex]]:
+  * Versioning + idempotent probe-then-admit come from the
+  * [[DurableIndex]] lifecycle, shared with [[DedupIndex]]:
   * a retried at-least-once admission is a no-op (duplicate `sets` rows
   * would double every pair the verify join emits), a crash mid-admission
   * leaves the previous version intact, and probes resolve every table
@@ -49,9 +47,20 @@ import graft.streaming.VersionedArtifact
   * and df scans to the delta's token set, and admission/compaction
   * preserve the layout.
   */
-object ContainIndex {
+object ContainIndex extends DurableIndex {
 
-  private val Tables = Seq("tokens", "prefix", "sets", "df")
+  protected val tables = Seq("tokens", "prefix", "sets", "df")
+  val idColumn = "doc_id"
+  protected val clusterKey = Map("tokens" -> "hx", "prefix" -> "hx",
+    "sets" -> "doc_id", "df" -> "hx")
+  // df (token → document frequency) has no doc-id column: a purge carries
+  // it as a LINK — a deleted doc's contribution is an efficiency-only
+  // drift by the prefix filter's order-independence, the same frozen-df
+  // argument [[append]] rests on; re-freshen with a periodic [[build]]
+  override protected val linkTables = Seq("df")
+  // `sets` is the one-row-per-doc table
+  protected val ratioTable = "sets"
+  protected val l0Tables = Seq("tokens", "prefix")
 
   /** Distinct-token ceiling for [[append]]'s broadcast df-shrink: 4 M
     * 8-byte hashes ≈ 32 MB on the wire (plus the shrunk df rows they
@@ -60,22 +69,6 @@ object ContainIndex {
     * shuffle instead of broadcasting.
     */
   private val MaxBroadcastTokens = 1L << 22
-
-  /** Corpus-build counter — see [[DedupIndex.buildRuns]]. */
-  val buildRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Whether the artifact has a committed current version. */
-  def hasCurrent(indexDir: String): Boolean =
-    artifact(indexDir).currentVersion.isDefined
-
-  private def artifact(indexDir: String) = new VersionedArtifact(indexDir)
-
-  /** The committed version id behind the _CURRENT pointer — one file
-    * read; what a long-lived prober polls per micro-batch to bound its
-    * cache's staleness to one batch (see `IngestDedup`).
-    */
-  def currentVersion(indexDir: String): Option[Long] =
-    artifact(indexDir).currentVersion
 
   private def shingled(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("text"))
@@ -97,25 +90,6 @@ object ContainIndex {
       .withColumn("sz", size(col("hs")).cast("long"))
       .filter(col("sz") >= 20)
 
-  /** The current version's path for `table` — observability/spec hook. */
-  def tablePath(indexDir: String, table: String): String =
-    artifact(indexDir).tablePath(table)
-
-  /** Delta ids already admitted into the current version. */
-  def appliedDeltas(indexDir: String): Set[String] =
-    artifact(indexDir).appliedDeltas
-
-  private def writePostings(r: DataFrame, sh: DataFrame, ver: File,
-      mode: String): Unit = {
-    r.select(col("hx"), col("doc_id"))
-      .write.mode(mode).parquet(new File(ver, "tokens").toString)
-    DedupQueries.containPrefix(r)
-      .select(col("hx"), col("doc_id"))
-      .write.mode(mode).parquet(new File(ver, "prefix").toString)
-    setsOf(sh)
-      .write.mode(mode).parquet(new File(ver, "sets").toString)
-  }
-
   /** Build (or fully REBUILD, re-freshening df) from a `(doc_id, text)`
     * corpus frame. The BUCKETED layout is the DEFAULT (byte-sized counts
     * unless `buckets` pins them, full spec recorded in the artifact
@@ -124,85 +98,50 @@ object ContainIndex {
     */
   def build(spark: SparkSession, docs: DataFrame, indexDir: String,
       bucketed: Boolean = true, buckets: Int = 0): Unit = {
-    buildRuns.incrementAndGet()
-    // carrier conf, same contract as DedupIndex.build (bucketed-only)
-    val carrier = DedupIndex.carrierMetaOf(spark)
-    require(bucketed || carrier.isEmpty,
-      "manifest carrier needs the bucketed layout (see DedupIndex.build)")
-    if (!bucketed)
-      artifact(indexDir).build { next =>
-        val sh = shingled(docs).persist()
-        try {
-          val dfTable = sh.groupBy(col("hx")).agg(count(lit(1)).as("df"))
-          dfTable.write.mode("overwrite")
-            .parquet(new File(next, "df").toString)
-          writePostings(DedupQueries.containRanked(sh, dfTable), sh, next,
-            "overwrite")
-        } finally { sh.unpersist(); () }
-      }
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      val sh = shingled(docs).persist()
-      val dfFrame = sh.groupBy(col("hx")).agg(count(lit(1)).as("df"))
-        .persist()
-      try {
-        // buckets = 0: per-table sizing from bytes (Bucketing
-        // .indexBuckets — 32 MB index target, parallelism floor),
-        // counted on the persisted frames the writes reuse. tokens = the
-        // full posting list at ~16 B/row; prefix ≈ 1/10 of it; df = one
-        // row per DISTINCT token; sets pack the same hashes as tokens at
-        // ~8 B plus per-doc framing
-        val shRows = if (buckets > 0) 0L else sh.count()
-        val dfRows = if (buckets > 0) 0L else dfFrame.count()
-        def n(bytes: Long): Int =
-          if (buckets > 0) buckets
-          else Bucketing.indexBuckets(spark, bytes)
-        val postings = Map(
-          "tokens" -> n(shRows * 16L), "prefix" -> n(shRows * 16L / 10),
-          "df" -> n(dfRows * 16L))
-        // schema DDLs: postings tables are (hx, doc_id); df is (hx, df);
-        // sets is setsOf's (doc_id, hs, sz). Derived from the actual
-        // frame (metadata-only), like every other table's spec — a
-        // caller-supplied non-Long doc_id must register as what the
-        // files really hold, or cross-session re-registration reads wrong
-        val postingDDL = DedupQueries.containRanked(sh, dfFrame)
-          .select(col("hx"), col("doc_id")).schema.toDDL
-        val meta = carrier ++ Map(
-          IndexLayout.LayoutKey -> IndexLayout.BucketedValue) ++
-          IndexLayout.metaFor("tokens", IndexLayout.TableSpec(
-            postings("tokens"), Seq("hx"), Seq("hx"), postingDDL)) ++
-          IndexLayout.metaFor("prefix", IndexLayout.TableSpec(
-            postings("prefix"), Seq("hx"), Seq("hx"), postingDDL)) ++
-          IndexLayout.metaFor("df", IndexLayout.TableSpec(
-            postings("df"), Seq("hx"), Seq("hx"),
-            dfFrame.schema.toDDL)) ++
-          IndexLayout.metaFor("sets", IndexLayout.TableSpec(
-            n(shRows * 9L), Seq("doc_id"), Seq("doc_id"),
-            setsOf(sh).schema.toDDL))
-        artifact(indexDir).build({ next =>
-          writeBucketed(family, sh, dfFrame, next, meta)
-        }, buildMeta = meta)
-      } finally { sh.unpersist(); dfFrame.unpersist(); () }
+    val carrier = beginBuild(spark, bucketed)
+    val sh = shingled(docs).persist()
+    // the four tables in write order, ranked by the fresh corpus df:
+    // postings tables are (hx, doc_id); df is (hx, df); sets is setsOf's
+    // (doc_id, hs, sz)
+    def frames(dfTable: DataFrame): Seq[(String, DataFrame)] = {
+      val r = DedupQueries.containRanked(sh, dfTable)
+      Seq("df" -> dfTable, "tokens" -> r.select(col("hx"), col("doc_id")),
+        "prefix" -> DedupQueries.containPrefix(r)
+          .select(col("hx"), col("doc_id")),
+        "sets" -> setsOf(sh))
     }
-  }
-
-  /** The bucketed-layout BUILD write of all four tables (fresh df).
-    * Admissions no longer route here — they append `sets` at the bucket
-    * modulus and write `tokens`/`prefix` as L0 accrual ([[append]]).
-    */
-  private def writeBucketed(family: String, sh: DataFrame,
-      dfForRank: DataFrame, ver: File, meta: Map[String, String]): Unit = {
-    val r = DedupQueries.containRanked(sh, dfForRank)
-    IndexLayout.writeInto(dfForRank, family, "df", ver,
-      IndexLayout.specOf(meta, "df"), overwrite = true)
-    IndexLayout.writeInto(r.select(col("hx"), col("doc_id")), family,
-      "tokens", ver, IndexLayout.specOf(meta, "tokens"), overwrite = true)
-    IndexLayout.writeInto(
-      DedupQueries.containPrefix(r).select(col("hx"), col("doc_id")),
-      family, "prefix", ver, IndexLayout.specOf(meta, "prefix"),
-      overwrite = true)
-    IndexLayout.writeInto(setsOf(sh), family, "sets", ver,
-      IndexLayout.specOf(meta, "sets"), overwrite = true)
+    try {
+      if (!bucketed)
+        artifact(indexDir).build { next =>
+          frames(sh.groupBy(col("hx")).agg(count(lit(1)).as("df")))
+            .foreach { case (t, d) =>
+              d.write.mode("overwrite").parquet(new File(next, t).toString)
+            }
+        }
+      else {
+        val dfFrame = sh.groupBy(col("hx")).agg(count(lit(1)).as("df"))
+          .persist()
+        try {
+          // buckets = 0: per-table sizing from bytes (Bucketing
+          // .indexBuckets — 32 MB index target, parallelism floor),
+          // counted on the persisted frames the writes reuse. tokens =
+          // the full posting list at ~16 B/row; prefix ≈ 1/10 of it;
+          // df = one row per DISTINCT token; sets pack the same hashes as
+          // tokens at ~8 B plus per-doc framing. Schema DDLs derive from
+          // the actual frames (metadata-only) — a caller-supplied
+          // non-Long doc_id must register as what the files really hold
+          val shRows = if (buckets > 0) 0L else sh.count()
+          val dfRows = if (buckets > 0) 0L else dfFrame.count()
+          val bytes = Map("df" -> dfRows * 16L, "tokens" -> shRows * 16L,
+            "prefix" -> shRows * 16L / 10, "sets" -> shRows * 9L)
+          buildBucketed(indexDir, carrier, clusterKey,
+            frames(dfFrame).map { case (t, d) =>
+              (t, d, if (buckets > 0) buckets
+                else Bucketing.indexBuckets(spark, bytes(t)))
+            })
+        } finally { dfFrame.unpersist(); () }
+      }
+    } finally { sh.unpersist(); () }
   }
 
   /** ADMIT a delta (probe-then-admit lifecycle): true if admitted, false
@@ -267,282 +206,59 @@ object ContainIndex {
         broadcast(corpusDf.join(broadcast(toks), "hx"))
       else corpusDf.join(toks, "hx")
     }
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).admit(deltaId, Tables, { next =>
-        val sh = shingled(docs).persist()
-        try
-          writePostings(DedupQueries.containRanked(sh, shrunk(sh)), sh,
-            next, "append")
-        finally { sh.unpersist(); () }
-      })
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      artifact(indexDir).admit(deltaId, Tables, { next =>
-        val sh = shingled(docs).persist()
+    art.admit(deltaId, tables, { next =>
+      val sh = shingled(docs).persist()
+      try {
+        // frozen corpus df, read as plain parquet from the snapshot path
+        // (bucket metadata is a read-side catalog concern; the files are
+        // ordinary parquet) — df itself is NOT rewritten. r is
+        // DELTA-sized — persist it so tokens and prefix don't each re-pay
+        // the df-rank scan (two corpus-df passes per admission,
+        // 2 × 16.7 s at the 100× rehearsal's 60 M-row df)
+        val r = DedupQueries.containRanked(sh, shrunk(sh))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // frozen corpus df, read as plain parquet from the snapshot
-          // path (bucket metadata is a read-side catalog concern; the
-          // files are ordinary parquet) — df itself is NOT rewritten,
-          // same frozen-df contract as the directory admit. r is
-          // DELTA-sized — persist it so tokens and prefix don't each
-          // re-pay the df-rank scan (two corpus-df passes per
-          // admission, 2 × 16.7 s at the 100× rehearsal's 60 M-row df)
-          val r = DedupQueries.containRanked(sh, shrunk(sh))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            IndexLayout.fanoutAppend(r.select(col("hx"), col("doc_id")),
-              family, "tokens", next, IndexLayout.specOf(meta, "tokens"))
-            IndexLayout.fanoutAppend(DedupQueries.containPrefix(r)
-              .select(col("hx"), col("doc_id")), family, "prefix", next,
-              IndexLayout.specOf(meta, "prefix"))
-            IndexLayout.writeInto(setsOf(sh), family, "sets", next,
-              IndexLayout.specOf(meta, "sets"), overwrite = false)
-          } finally { r.unpersist(); () }
-        } finally { sh.unpersist(); () }
-      })
-    }
+          appendTable(indexDir, meta, next, "tokens",
+            r.select(col("hx"), col("doc_id")))
+          appendTable(indexDir, meta, next, "prefix",
+            DedupQueries.containPrefix(r).select(col("hx"), col("doc_id")))
+          appendTable(indexDir, meta, next, "sets", setsOf(sh))
+        } finally { r.unpersist(); () }
+      } finally { sh.unpersist(); () }
+    })
   }
 
-  /** Drop index versions older than the newest `keep` (default 2 — see
-    * [[DedupIndex.prune]]'s reader-grace + catalog-drop notes).
+  /** The artifact's four tables resolved against ONE pointer read
+    * ([[DurableIndex.load]]) — what the streaming containment-ingest
+    * face loads once and persists, so every micro-batch probes memory
+    * instead of re-reading corpus-sized postings from the lake.
     */
-  def prune(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
-    val bucketed = IndexLayout.isBucketed(artifact(indexDir).meta)
-    val dropped = artifact(indexDir).prune(keep)
-    if (bucketed) {
-      val family = IndexLayout.familyOf(indexDir)
-      dropped.foreach(v =>
-        Tables.foreach(IndexLayout.deregister(spark, family, _, v)))
-      // manifest mounts are per-version metadata; drop them with the
-      // version (symlinks never keep bytes alive, so order is free)
-      dropped.foreach(IndexLayout.unmount(indexDir, _))
-    }
+  final class Loaded private[ContainIndex] (r: DurableIndex.Resolved)
+      extends DurableIndex.Frames(r) {
+    def tokens: DataFrame = table("tokens")
+    def prefix: DataFrame = table("prefix")
+    def sets: DataFrame = table("sets")
+    def df: DataFrame = table("df")
+    private[graft] def l0Tokens: Option[DataFrame] = l0("tokens")
+    private[graft] def l0Prefix: Option[DataFrame] = l0("prefix")
   }
 
-  /** Compact tables past `maxFiles` part files — see
-    * [[DedupIndex.compact]] (same versioned-swap transaction, same
-    * multiset invariance, spec-pinned in `ContainIndexSpec`). Postings
-    * re-cluster on the token hash (the probes' equi-join key), sets on
-    * doc_id.
-    */
-  def compact(spark: SparkSession, indexDir: String,
-      maxFiles: Int = 64): Int = {
-    val meta = artifact(indexDir).meta
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).compact(Tables, maxFiles) { (src, tgt) =>
-        val df = spark.read.parquet(src)
-        val out =
-          if (tgt.getName == "sets") df.repartition(col("doc_id"))
-          else df.repartition(col("hx"))
-        out.write.mode("overwrite").parquet(tgt.toString)
-      }
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      // bucketed threshold = bucket floor + maxFiles ACCRUAL slack; the
-      // rewrite is bucket-granular (fold the accrual, hard-link the base
-      // files) — see DedupIndex.compact and VersionedArtifact
-      // .compactBucketed
-      artifact(indexDir).compactBucketed(Tables,
-        (t: String) => IndexLayout.specOf(meta, t).buckets + maxFiles) {
-        (table, files, tgt) =>
-          IndexLayout.writeInto(
-            spark.read.parquet(files.map(_.getAbsolutePath): _*), family,
-            table, tgt.getParentFile,
-            IndexLayout.specOf(meta, table), overwrite = true)
-      }
-    }
-  }
+  protected def loadedOf(r: DurableIndex.Resolved): Loaded = new Loaded(r)
 
-  /** LOGICAL document deletion (takedown) — see [[DedupIndex.delete]] /
-    * [[IndexTombstones]]: `ids` is one LongType doc-id column; probes
-    * drop pairs touching the set; false = deltaId already applied.
-    */
-  def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
-      deltaId: String): Boolean =
-    IndexTombstones.delete(artifact(indexDir), Tables, ids, deltaId)
-
-  /** [[delete]] for a batch of requests in ONE version bump — the
-    * takedown-drain seat (see [[IndexTombstones.deleteAll]]).
-    */
-  def deleteAll(spark: SparkSession, indexDir: String,
-      reqs: Seq[(DataFrame, String)]): Boolean =
-    IndexTombstones.deleteAll(artifact(indexDir), Tables, reqs)
-
-  /** |tombstones| / |indexed docs| — the auto-purge trigger metric;
-    * see [[IndexTombstones.ratio]]. `sets` is the one-row-per-doc
-    * table.
-    */
-  def tombstoneRatio(spark: SparkSession, indexDir: String): Double =
-    IndexTombstones.ratio(spark, artifact(indexDir), "sets")
-
-  /** PHYSICAL tombstone removal — see [[DedupIndex.purge]]. The `df`
-    * table carries as a LINK, not a rewrite: it has no doc-id column
-    * (token → document frequency), and a deleted doc's contribution is
-    * an efficiency-only drift by the prefix filter's order-independence
-    * — the same frozen-df argument [[append]] rests on. Re-freshen with
-    * a periodic [[build]].
-    *
-    * `budget` > 0 slices the purge at ≤ budget buckets per call (see
-    * [[graft.streaming.VersionedArtifact.purgeVersionBudgeted]]) —
-    * THIS face is why the budget exists: `tokens`/`prefix` are
-    * token-keyed and rewrite whole, the O(corpus-table) pause that
-    * stalled the admitting stream at the 100× rehearsal. Bucketed
-    * layout only; the plain directory layout (parity fallback, never
-    * the corpus-scale path) always purges in one call.
-    */
-  def purge(spark: SparkSession, indexDir: String,
-      budget: Int = 0): Boolean = {
-    val art = artifact(indexDir)
-    IndexTombstones.loadTombstones(spark, art) match {
-      case None => false
-      case Some(t) =>
-        val meta = art.meta
-        val rewriteTables = Tables.filterNot(_ == "df")
-        val tomb = broadcast(t.select(col("id")))
-        def kept(src: String): DataFrame = spark.read.parquet(src)
-          .join(tomb, col("doc_id") === col("id"), "left_anti")
-        if (!IndexLayout.isBucketed(meta))
-          art.purgeVersion(rewriteTables, Seq("df"),
-              Set(IndexTombstones.Table)) { (table, src, tgt) =>
-            val out = if (table == "sets") kept(src).repartition(col("doc_id"))
-              else kept(src).repartition(col("hx"))
-            out.write.mode("overwrite").parquet(tgt.toString)
-          }
-        else {
-          val family = IndexLayout.familyOf(indexDir)
-          // sets is bucketed BY doc_id: affected-bucket rewrite only
-          // (see DedupIndex.purge); tokens/prefix (bucketed by the
-          // token hash) rewrite whole
-          def affectedOf(table: String): Option[Set[String]] = {
-            val spec = IndexLayout.specOf(meta, table)
-            if (spec.by != Seq("doc_id")) None
-            else Some(IndexTombstones.affectedBuckets(t, spec.buckets))
-          }
-          art.purgeVersionBudgeted(rewriteTables, Seq("df"),
-              Set(IndexTombstones.Table), affectedOf, budget) {
-            (table, files, tgt) =>
-              IndexLayout.writeInto(
-                spark.read.parquet(files.map(_.getAbsolutePath): _*)
-                  .join(tomb, col("doc_id") === col("id"), "left_anti"),
-                family, table, tgt.getParentFile,
-                IndexLayout.specOf(meta, table), overwrite = true)
-          }
-          ()
-        }
-        true
-    }
-  }
-
-  /** Whether a budget-sliced [[purge]] is mid-flight — what the
-    * maintenance seat polls per batch so a started purge runs to
-    * completion (see `IngestDedup.maintain`).
-    */
-  def purgePending(indexDir: String): Boolean =
-    artifact(indexDir).purgePending
-
-  /** Probe with a `(doc_id, text)` delta frame: ordered containment
-    * pairs (id_a contained-in id_b, ≥ 0.9) with exactly one side in the
-    * delta — both directions found by delta-sized probes of the standing
-    * tables (delta prefixes × `tokens`, delta tokens × `prefix`). All
-    * four artifact tables resolve against ONE pointer read.
-    *
-    * `id_a =!= id_b` keeps a RE-probe (the at-least-once retry path)
-    * free of containment-1.0 self-pairs, same as every incremental
-    * face. Verify shape is mode-dependent — see [[probeLoaded]].
-    */
-  def probe(spark: SparkSession, indexDir: String,
-      deltaDocs: DataFrame): DataFrame =
-    probeLoaded(load(spark, indexDir), deltaDocs)
-
-  /** The artifact's four tables resolved against ONE pointer read — what
-    * a LONG-LIVED prober (the streaming containment-ingest face) loads
-    * once and persists, so every micro-batch probes memory instead of
-    * re-reading corpus-sized postings from the lake.
-    */
-  final case class Loaded(tokens: DataFrame, prefix: DataFrame,
-      sets: DataFrame, df: DataFrame, bucketed: Boolean = false,
-      private[graft] val buckets: Map[String, Int] = Map.empty,
-      private[graft] val tombstones: Option[DataFrame] = None,
-      private[graft] val l0Tokens: Option[DataFrame] = None,
-      private[graft] val l0Prefix: Option[DataFrame] = None) {
-
-    /** Every L0 frame present — what the streaming cache persists next
-      * to the base frames (delta-sized; pinning them is cheaper than
-      * one lake read per batch).
-      */
-    private[graft] def l0Frames: Seq[DataFrame] =
-      l0Tokens.toSeq ++ l0Prefix.toSeq
-  }
-
-  /** Artifact-load counter — see [[SrpIndex.loadRuns]]. */
-  val loadRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def load(spark: SparkSession, indexDir: String): Loaded = {
-    loadRuns.incrementAndGet()
-    val art = artifact(indexDir)
-    if (art.isManifestCurrent) {
-      // MANIFEST carrier: logical file lists MOUNTED and registered as
-      // the same external bucketed tables the link carrier gets — see
-      // DedupIndex.load's manifest branch and
-      // IndexLayout.mountManifest for the full rationale. Probe plans
-      // are carrier-identical (in-place corpus scans, L0 legs).
-      val snap = art.snapshotLogical(Tables, IndexTombstones.Table)
-      val meta = snap.meta
-      val family = IndexLayout.familyOf(indexDir)
-      def mounted(t: String): File = IndexLayout.mountManifest(
-        indexDir, t, snap.version, snap.tableFiles(t))
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, mounted(t), IndexLayout.specOf(meta, t)))
-      return Loaded(tbl("tokens"), tbl("prefix"), tbl("sets"),
-        tbl("df"), bucketed = IndexLayout.isBucketed(meta),
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = IndexTombstones.fromFiles(spark, snap.extraFiles),
-        l0Tokens = IndexLayout.l0Frame(spark, mounted("tokens").toString),
-        l0Prefix = IndexLayout.l0Frame(spark, mounted("prefix").toString))
-    }
-    // one pointer read for meta + table paths + sidecar: independent
-    // reads could straddle a purge and serve pre-purge tables unfiltered
-    val snap = artifact(indexDir).snapshot(Tables, IndexTombstones.Table)
-    val meta = snap.meta
-    val paths = snap.paths
-    val tomb = IndexTombstones.fromSnapshot(spark, snap)
-    if (!IndexLayout.isBucketed(meta))
-      Loaded(spark.read.parquet(paths("tokens")),
-        spark.read.parquet(paths("prefix")),
-        spark.read.parquet(paths("sets")),
-        spark.read.parquet(paths("df")), tombstones = tomb)
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, new File(paths(t)), IndexLayout.specOf(meta, t)))
-      // L0 accrual: admission appends live as plain parquet under the
-      // table's `_l0` subdir (see [[IndexLayout.l0Append]]); probes
-      // read them as a separate delta-sized leg ([[probeLoaded]]) until
-      // compaction folds them into buckets
-      Loaded(tbl("tokens"), tbl("prefix"), tbl("sets"), tbl("df"),
-        bucketed = true,
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = tomb,
-        l0Tokens = IndexLayout.l0Frame(spark, paths("tokens")),
-        l0Prefix = IndexLayout.l0Frame(spark, paths("prefix")))
-    }
-  }
-
-  /** Total data bytes behind the artifact's current version — what the
-    * streaming face's cache-if-fits decision reads once per version.
-    */
-  def artifactBytes(indexDir: String): Long = artifact(indexDir).currentBytes
-
-  /** [[probe]] against pre-loaded (possibly persisted) artifact frames.
+  /** [[probe]] against pre-loaded (possibly persisted) artifact frames:
+    * ordered containment pairs (id_a contained-in id_b, ≥ 0.9) with
+    * exactly one side in the delta — both directions found by
+    * delta-sized probes of the standing tables (delta prefixes ×
+    * `tokens`, delta tokens × `prefix`). `id_a =!= id_b` keeps a
+    * RE-probe (the at-least-once retry path) free of containment-1.0
+    * self-pairs, same as every incremental face.
     *
     * `micro = true` declares `deltaDocs` a MICRO-BATCH (the streaming
     * ingest face, where admission control bounds the delta per trigger):
     * delta-derived sides broadcast into every corpus join, so the cached
     * corpus tables STREAM — no per-batch exchange or sort of
     * corpus-sized postings (the dominant per-batch term at 10× corpus,
-    * measured in `IngestProbe`). Batch probes keep the default: a daily
+    * measured in SCALE.md). Batch probes keep the default: a daily
     * delta is not broadcast-bounded.
     *
     * On the BUCKETED layout, an UNCACHED micro probe goes further
@@ -558,7 +274,7 @@ object ContainIndex {
     * lazy.
     */
   def probeLoaded(loaded: Loaded, deltaDocs: DataFrame,
-      micro: Boolean = false): DataFrame =
+      micro: Boolean): DataFrame =
     IndexTombstones.filterPairs(
       probeRaw(loaded, deltaDocs, micro), loaded.tombstones, "id_a", "id_b")
 
@@ -566,7 +282,7 @@ object ContainIndex {
       micro: Boolean): DataFrame = {
     val spark = deltaDocs.sparkSession
     graft.functions.VectorFunctions.register(spark)
-    // no persist — see DedupIndex.probe: a lazy return plus an
+    // no persist — see DedupIndex.probeLoaded: a lazy return plus an
     // un-released cache entry per daily probe is a session-length leak
     val sh = shingled(deltaDocs)
     val deltaSets = setsOf(sh)

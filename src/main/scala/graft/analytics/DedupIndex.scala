@@ -5,8 +5,6 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.VersionedArtifact
-
 /** PERSISTED MinHash-LSH index — the artifact every in-session dedup
   * scaladoc points at ("at 100 TB the corpus band table is the persisted
   * LSH index"): build once at corpus ingest, then every daily delta
@@ -25,10 +23,10 @@ import graft.streaming.VersionedArtifact
   * the loaded signature sets — identical semantics to the in-session
   * index, spec-pinned (`DedupIndexSpec`).
   *
-  * Versioning + idempotent probe-then-admit come from
-  * [[graft.streaming.VersionedArtifact]] (atomic `_CURRENT` swap,
-  * deltaId-recorded admissions, single-writer tripwire, hard-linked
-  * carry): a RETRIED at-least-once admission is a no-op — duplicated
+  * Versioning + idempotent probe-then-admit come from the shared
+  * [[DurableIndex]] lifecycle over [[graft.streaming.VersionedArtifact]]
+  * (atomic `_CURRENT` swap, deltaId-recorded admissions, single-writer
+  * tripwire, hard-linked carry): a RETRIED at-least-once admission is a no-op — duplicated
   * SIGNATURE rows would make the verify join emit every matching pair
   * once per copy (band-key duplicates are absorbed by the candidate
   * distinct, signature duplicates are not) — and a crash mid-admission
@@ -64,7 +62,7 @@ import graft.streaming.VersionedArtifact
   * Staleness is the caller's contract, same as [[AnnIndex]]: [[build]]
   * rebuilds from scratch into a fresh version.
   */
-object DedupIndex {
+object DedupIndex extends DurableIndex {
 
   /** A banded MinHash-LSH layout: `bands × rowsPerBand` over a
     * `slots`-wide signature (the registered kernels are 128- and
@@ -103,7 +101,11 @@ object DedupIndex {
     val Corpus: Shape = Shape(bands = 32, rowsPerBand = 8, slots = 256)
   }
 
-  private val Tables = Seq("signatures", "bands")
+  protected val tables = Seq("signatures", "bands")
+  val idColumn = "doc_id"
+  protected val clusterKey = Map("signatures" -> "doc_id", "bands" -> "band")
+  protected val ratioTable = "signatures"
+  protected val l0Tables = Seq("bands")
 
   /** The shape the artifact was BUILT with — what every probe/admit must
     * replay. Pre-metadata artifacts (r12) read back as [[Shape.Oracle]],
@@ -116,69 +118,6 @@ object DedupIndex {
       case (Some(b), Some(r), Some(s)) => Shape(b.toInt, r.toInt, s.toInt)
       case _ => Shape.Oracle
     }
-
-  /** Corpus-build counter — the [[AnnPersistSpec]]-style observability
-    * hook: proves the oracled incremental face builds the artifact at
-    * most once per corpus fingerprint and PROBES thereafter.
-    */
-  val buildRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Carrier conf (`spark.graft.index.carrier`): `manifest` makes
-    * [[build]] record [[VersionedArtifact.ManifestMeta]] in the
-    * artifact, so every later lifecycle transaction carries untouched
-    * files as `_carry.txt` REFERENCES (zero links, zero copies — the
-    * object-store carry) and prune becomes reference-counted vacuum.
-    * Read at BUILD only; the choice then rides the artifact's meta like
-    * the band shape (a probe/admit never re-reads the conf). Reads of a
-    * manifest artifact resolve through [[graft.streaming
-    * .VersionedStore.logicalFiles]] ([[load]]'s manifest branch) and
-    * MOUNT as per-version symlink trees registered with the same
-    * bucketed catalog entries as the link carrier
-    * ([[IndexLayout.mountManifest]] — the local stand-in for a table
-    * format's metadata layer), so probe plans are carrier-identical:
-    * in-place corpus scans, bucket pruning, L0 legs. Default:
-    * absent = hard-link carry.
-    */
-  val CarrierConf = "spark.graft.index.carrier"
-
-  /** The conf's meta contribution — shared by all three index families'
-    * builds so the carrier choice cannot drift between them.
-    */
-  private[analytics] def carrierMetaOf(
-      spark: SparkSession): Map[String, String] =
-    if (spark.conf.getOption(CarrierConf)
-        .contains(VersionedArtifact.ManifestValue))
-      VersionedArtifact.ManifestMeta
-    else Map.empty
-
-  private def carrierMeta(spark: SparkSession): Map[String, String] =
-    carrierMetaOf(spark)
-
-  /** Whether the artifact has a committed current version (a crashed
-    * build leaves no pointer → reads as absent).
-    */
-  def hasCurrent(indexDir: String): Boolean =
-    artifact(indexDir).currentVersion.isDefined
-
-  private def artifact(indexDir: String) = new VersionedArtifact(indexDir)
-
-  /** The committed version id behind the _CURRENT pointer — one file
-    * read; what a long-lived prober polls per micro-batch to bound its
-    * cache's staleness to one batch (see `IngestDedup`).
-    */
-  def currentVersion(indexDir: String): Option[Long] =
-    artifact(indexDir).currentVersion
-
-  /** The current version's path for `table` — observability/spec hook;
-    * multi-table READS should go through one [[VersionedArtifact
-    * .snapshotPaths]] resolution, as [[probe]] does.
-    */
-  def tablePath(indexDir: String, table: String): String =
-    artifact(indexDir).tablePath(table)
-
-  /** Delta ids already admitted into the current version. */
-  def appliedDeltas(indexDir: String): Set[String] =
-    artifact(indexDir).appliedDeltas
 
   /** The directory-layout band projection: (band, sig, doc_id). */
   private def bandFrame(per: DataFrame, shape: Shape): DataFrame = {
@@ -196,36 +135,6 @@ object DedupIndex {
   private def bucketedBandFrame(per: DataFrame, shape: Shape): DataFrame =
     bandFrame(per, shape)
       .select(xxhash64(col("band"), col("sig")).as("bk"), col("doc_id"))
-
-  private def writeTables(docs: DataFrame, ver: File, mode: String,
-      shape: Shape): Unit = {
-    // signaturesOf already carries (doc_id, mhsig, hs, sz)
-    val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
-    try {
-      per.write.mode(mode).parquet(new File(ver, "signatures").toString)
-      bandFrame(per, shape)
-        .write.mode(mode).parquet(new File(ver, "bands").toString)
-    } finally { per.unpersist(); () }
-  }
-
-  /** The bucketed-layout ADMISSION write: `signatures` appends at the
-    * bucket modulus (doc_id-keyed — a delta's rows touch ≤ |delta|
-    * buckets, already delta-bounded), `bands` lands as L0 accrual
-    * ([[IndexLayout.l0Append]]) — a delta's |delta| × bands band rows
-    * hash across ~EVERY bucket, so the modulus append wrote one file
-    * per bucket per admission, the fan-out that scales with the
-    * corpus's bucket count instead of the batch.
-    */
-  private def writeTablesBucketed(family: String, docs: DataFrame,
-      ver: File, meta: Map[String, String], shape: Shape): Unit = {
-    val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
-    try {
-      IndexLayout.writeInto(per, family, "signatures", ver,
-        IndexLayout.specOf(meta, "signatures"), overwrite = false)
-      IndexLayout.fanoutAppend(bucketedBandFrame(per, shape), family,
-        "bands", ver, IndexLayout.specOf(meta, "bands"))
-    } finally { per.unpersist(); () }
-  }
 
   /** Build (or fully REBUILD) the index from a `(doc_id, text)` corpus
     * frame — a fresh version with an empty admitted-delta set. `shape`
@@ -246,22 +155,21 @@ object DedupIndex {
   def build(spark: SparkSession, docs: DataFrame, indexDir: String,
       shape: Shape = Shape.Corpus, bucketed: Boolean = true,
       buckets: Int = 0): Unit = {
-    buildRuns.incrementAndGet()
-    val carrier = carrierMeta(spark)
-    require(bucketed || carrier.isEmpty,
-      "manifest carrier needs the bucketed layout: the directory " +
-        "layout's compact/purge re-read whole table DIRS, which a " +
-        "manifest-carried table does not have")
+    val carrier = beginBuild(spark, bucketed)
     val shapeMeta = Map("bands" -> shape.bands.toString,
       "rowsPerBand" -> shape.rowsPerBand.toString,
       "slots" -> shape.slots.toString)
-    if (!bucketed)
-      artifact(indexDir).build(writeTables(docs, _, "overwrite", shape),
-        buildMeta = shapeMeta)
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
-      try {
+    // signaturesOf already carries (doc_id, mhsig, hs, sz)
+    val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
+    try {
+      if (!bucketed)
+        artifact(indexDir).build({ ver =>
+          per.write.mode("overwrite")
+            .parquet(new File(ver, "signatures").toString)
+          bandFrame(per, shape)
+            .write.mode("overwrite").parquet(new File(ver, "bands").toString)
+        }, buildMeta = shapeMeta)
+      else {
         // buckets = 0: size from bytes (Bucketing.indexBuckets — the
         // 32 MB index target with the parallelism floor) — the count
         // rides the persisted signature frame the writes reuse (never a
@@ -269,301 +177,55 @@ object DedupIndex {
         // ~16 B (bk, doc_id); signature rows carry the slots-wide
         // signature plus the distinct shingle hash set (~2 kB nominal).
         val rows = if (buckets > 0) 0L else per.count()
-        val bandN = if (buckets > 0) buckets
-          else Bucketing.indexBuckets(spark, rows * shape.bands * 16L)
-        val sigN = if (buckets > 0) buckets
-          else Bucketing.indexBuckets(spark,
-            rows * (shape.slots * 8L + 2048L))
-        val bands = bucketedBandFrame(per, shape)
-        val meta = shapeMeta ++ carrier +
-          (IndexLayout.LayoutKey -> IndexLayout.BucketedValue) ++
-          IndexLayout.metaFor("signatures", IndexLayout.TableSpec(sigN,
-            Seq("doc_id"), Seq("doc_id"), per.schema.toDDL)) ++
-          IndexLayout.metaFor("bands", IndexLayout.TableSpec(bandN,
-            Seq("bk"), Seq("bk"), bands.schema.toDDL))
-        artifact(indexDir).build({ ver =>
-          IndexLayout.writeInto(per, family, "signatures", ver,
-            IndexLayout.specOf(meta, "signatures"), overwrite = true)
-          IndexLayout.writeInto(bands, family, "bands", ver,
-            IndexLayout.specOf(meta, "bands"), overwrite = true)
-        }, buildMeta = meta)
-      } finally { per.unpersist(); () }
-    }
+        def n(bytes: Long): Int =
+          if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
+        buildBucketed(indexDir, shapeMeta ++ carrier,
+          Map("signatures" -> "doc_id", "bands" -> "bk"),
+          Seq(("signatures", per, n(rows * (shape.slots * 8L + 2048L))),
+            ("bands", bucketedBandFrame(per, shape),
+              n(rows * shape.bands * 16L))))
+      }
+    } finally { per.unpersist(); () }
   }
 
-  /** ADMIT a delta (probe-then-admit lifecycle): true if admitted, false
-    * if `deltaId` was already applied. O(|delta|) write — previous files
-    * carry as hard links, only the delta's part files are new. On the
-    * bucketed layout: `signatures` appends at the modulus (≤ |delta|
-    * touched buckets), `bands` as L0 accrual (≤ appendTasks files,
-    * independent of the bucket count — [[writeTablesBucketed]]).
-    * Signatures and bands at the shape the artifact records — never a
-    * caller choice.
+  /** ADMIT a delta — see [[DurableIndex.append]]. Signatures and bands
+    * at the shape the artifact records — never a caller choice. On the
+    * bucketed layout `signatures` appends at the bucket modulus
+    * (doc_id-keyed — a delta's rows touch ≤ |delta| buckets) and `bands`
+    * lands as L0 accrual ([[IndexLayout.fanoutAppend]]) — a delta's
+    * |delta| × bands band rows hash across ~EVERY bucket, so the modulus
+    * append wrote one file per bucket per admission, the fan-out that
+    * scales with the corpus's bucket count instead of the batch.
     */
   def append(spark: SparkSession, docs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {
     val meta = artifact(indexDir).meta
     val shape = shapeOfMeta(meta)
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).admit(deltaId, Tables,
-        writeTables(docs, _, "append", shape))
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      artifact(indexDir).admit(deltaId, Tables,
-        writeTablesBucketed(family, docs, _, meta, shape))
-    }
+    val bucketed = IndexLayout.isBucketed(meta)
+    artifact(indexDir).admit(deltaId, tables, { ver =>
+      val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
+      try {
+        appendTable(indexDir, meta, ver, "signatures", per)
+        appendTable(indexDir, meta, ver, "bands",
+          if (bucketed) bucketedBandFrame(per, shape)
+          else bandFrame(per, shape))
+      } finally { per.unpersist(); () }
+    })
   }
 
-  /** The delta's (bk, doc_id) band frame at the ARTIFACT's recorded
-    * shape — measurement/observability hook (`FanoutProbe` counts the
-    * buckets a delta's band rows touch).
+  /** The artifact's tables + shape resolved against ONE pointer read
+    * ([[DurableIndex.load]]) — what the streaming text-ingest face loads
+    * once and persists.
     */
-  private[graft] def deltaBandFrame(spark: SparkSession,
-      indexDir: String, docs: DataFrame): DataFrame = {
-    val shape = shapeOfMeta(artifact(indexDir).meta)
-    bucketedBandFrame(DedupQueries.signaturesOf(docs, shape.slots), shape)
+  final class Loaded private[DedupIndex] (r: DurableIndex.Resolved,
+      val shape: Shape) extends DurableIndex.Frames(r) {
+    def signatures: DataFrame = table("signatures")
+    def bands: DataFrame = table("bands")
+    private[graft] def l0Bands: Option[DataFrame] = l0("bands")
   }
 
-  /** Drop index versions older than the newest `keep` (default 2: a
-    * reader holding the previous version's paths — a lazy probe frame,
-    * the ingest stream's cached corpus — survives one admission; consume
-    * lazy frames before pruning deeper). On the bucketed layout the
-    * pruned versions' external-table catalog entries drop with them
-    * (metadata-only — the files are already gone).
-    */
-  def prune(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
-    val bucketed = IndexLayout.isBucketed(artifact(indexDir).meta)
-    val dropped = artifact(indexDir).prune(keep)
-    if (bucketed) {
-      val family = IndexLayout.familyOf(indexDir)
-      dropped.foreach(v =>
-        Tables.foreach(IndexLayout.deregister(spark, family, _, v)))
-      // manifest mounts are per-version metadata; drop them with the
-      // version (symlinks never keep bytes alive, so order is free)
-      dropped.foreach(IndexLayout.unmount(indexDir, _))
-    }
-  }
-
-  /** Compact tables that accreted more than `maxFiles` part files across
-    * admissions (measured in `IndexProbe`: 64 files PER admitted delta
-    * on the directory layout; one per touched bucket per delta on the
-    * bucketed layout) — out-of-band, behind the same atomic version swap
-    * as admission, delta-idempotence carried. Directory bands re-cluster
-    * on `band` so the probe's equi-join reads co-located buckets;
-    * bucketed tables fold BUCKET-GRANULARLY (base file hard-links, only
-    * the accrual rewrites — [[graft.streaming.VersionedArtifact
-    * .compactBucketed]]) to a ≤ 2-files-per-bucket floor at the recorded
-    * spec. Probe output is multiset-invariant across a compact
-    * (`DedupIndexSpec`/`DedupIndexBucketedSpec`). Run from the admission
-    * loop (single-writer contract).
-    */
-  def compact(spark: SparkSession, indexDir: String,
-      maxFiles: Int = 64): Int = {
-    val meta = artifact(indexDir).meta
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).compact(Tables, maxFiles) { (src, tgt) =>
-        val df = spark.read.parquet(src)
-        val out =
-          if (tgt.getName == "bands") df.repartition(col("band"))
-          else df.repartition(col("doc_id"))
-        out.write.mode("overwrite").parquet(tgt.toString)
-      }
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      // bucketed threshold = bucket floor + maxFiles ACCRUAL slack: the
-      // compacted steady state is one or two files per bucket, so a flat
-      // count would flag any table with > maxFiles buckets as permanently
-      // fat. Bucket-granular rewrite: only the admission accrual is
-      // folded (base files hard-link) — O(admitted bytes), not O(corpus)
-      artifact(indexDir).compactBucketed(Tables,
-        (t: String) => IndexLayout.specOf(meta, t).buckets + maxFiles) {
-        (table, files, tgt) =>
-          IndexLayout.writeInto(
-            spark.read.parquet(files.map(_.getAbsolutePath): _*), family,
-            table, tgt.getParentFile,
-            IndexLayout.specOf(meta, table), overwrite = true)
-      }
-    }
-  }
-
-  /** LOGICAL document deletion (takedown) — admit `ids` (one LongType
-    * doc-id column) into the artifact's tombstone sidecar under
-    * `deltaId`; every subsequent probe drops pairs touching them. See
-    * [[IndexTombstones]] for the two-phase design; false = the deltaId
-    * was already applied (idempotent retry).
-    */
-  def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
-      deltaId: String): Boolean =
-    IndexTombstones.delete(artifact(indexDir), Tables, ids, deltaId)
-
-  /** [[delete]] for a batch of requests in ONE version bump — the
-    * takedown-drain seat (see [[IndexTombstones.deleteAll]]).
-    */
-  def deleteAll(spark: SparkSession, indexDir: String,
-      reqs: Seq[(DataFrame, String)]): Boolean =
-    IndexTombstones.deleteAll(artifact(indexDir), Tables, reqs)
-
-  /** |tombstones| / |indexed docs| for the current version — both
-    * parquet row counts answered from footer metadata, no data read;
-    * what the auto-purge policy compares to its threshold once per
-    * takedown drain (never per batch). 0 with no sidecar.
-    */
-  def tombstoneRatio(spark: SparkSession, indexDir: String): Double =
-    IndexTombstones.ratio(spark, artifact(indexDir), "signatures")
-
-  /** PHYSICAL tombstone removal: rewrite both tables without the
-    * tombstoned docs' rows and drop the sidecar, one pointer swap.
-    * O(table) by design — the compliance backstop behind the logical
-    * filter, not the hot path ([[IndexTombstones]]). False if there is
-    * nothing to purge. `budget` > 0 slices the bucketed-layout purge at
-    * ≤ budget buckets per call (the in-stream auto-purge's stall bound
-    * — see [[graft.streaming.VersionedArtifact.purgeVersionBudgeted]]);
-    * the directory layout always purges whole.
-    */
-  def purge(spark: SparkSession, indexDir: String,
-      budget: Int = 0): Boolean = {
-    val art = artifact(indexDir)
-    IndexTombstones.loadTombstones(spark, art) match {
-      case None => false
-      case Some(t) =>
-        val meta = art.meta
-        val tomb = broadcast(t.select(col("id")))
-        def kept(src: String): DataFrame = spark.read.parquet(src)
-          .join(tomb, col("doc_id") === col("id"), "left_anti")
-        if (!IndexLayout.isBucketed(meta))
-          art.purgeVersion(Tables, Nil, Set(IndexTombstones.Table)) {
-            (table, src, tgt) =>
-              val out = if (table == "bands") kept(src).repartition(col("band"))
-                else kept(src).repartition(col("doc_id"))
-              out.write.mode("overwrite").parquet(tgt.toString)
-          }
-        else {
-          val family = IndexLayout.familyOf(indexDir)
-          // signatures is bucketed BY doc_id: only the buckets holding
-          // tombstoned rows rewrite, the rest hard-link — O(affected
-          // buckets), not O(table). bands (bucketed by the band key)
-          // rewrites whole: a deleted doc's band rows spread across all
-          // buckets by construction.
-          def affectedOf(table: String): Option[Set[String]] = {
-            val spec = IndexLayout.specOf(meta, table)
-            if (spec.by != Seq("doc_id")) None
-            else Some(IndexTombstones.affectedBuckets(t, spec.buckets))
-          }
-          art.purgeVersionBudgeted(Tables, Nil,
-              Set(IndexTombstones.Table), affectedOf, budget) {
-            (table, files, tgt) =>
-              IndexLayout.writeInto(
-                spark.read.parquet(files.map(_.getAbsolutePath): _*)
-                  .join(tomb, col("doc_id") === col("id"), "left_anti"),
-                family, table, tgt.getParentFile,
-                IndexLayout.specOf(meta, table), overwrite = true)
-          }
-          ()
-        }
-        true
-    }
-  }
-
-  /** Whether a budget-sliced [[purge]] is mid-flight — polled per batch
-    * by the maintenance seat (see `IngestDedup.maintain`).
-    */
-  def purgePending(indexDir: String): Boolean =
-    artifact(indexDir).purgePending
-
-  /** Probe the index with a `(doc_id, text)` delta frame: verified
-    * near-dup pairs (corpus_id, new_id, jaccard ≥ 0.8) between the delta
-    * and the indexed corpus. Cost is O(|delta| + matches) — nothing
-    * corpus-sized is computed, only scanned through the equi-join (and
-    * on the bucketed layout the corpus side is never even shuffled).
-    * Both artifact tables resolve against ONE pointer read, so a
-    * concurrent admission cannot hand the verify a different version
-    * than the candidate join.
-    */
-  def probe(spark: SparkSession, indexDir: String,
-      deltaDocs: DataFrame): DataFrame =
-    probeLoaded(load(spark, indexDir), deltaDocs)
-
-  /** The artifact's tables + shape resolved against ONE pointer read —
-    * what a LONG-LIVED prober (the streaming text-ingest face) loads
-    * once and persists, so every micro-batch probes memory instead of
-    * re-reading (or worse, re-deriving) corpus-sized state. `bucketed`
-    * records which layout (and therefore which probe plan) the frames
-    * carry.
-    */
-  final case class Loaded(signatures: DataFrame, bands: DataFrame,
-      shape: Shape, bucketed: Boolean = false,
-      private[graft] val buckets: Map[String, Int] = Map.empty,
-      private[graft] val tombstones: Option[DataFrame] = None,
-      private[graft] val l0Bands: Option[DataFrame] = None) {
-
-    /** Every L0 frame present — what the streaming cache persists next
-      * to the base frames (delta-sized; pinning them is cheaper than
-      * one lake read per batch).
-      */
-    private[graft] def l0Frames: Seq[DataFrame] = l0Bands.toSeq
-  }
-
-  /** Artifact-load counter — see [[SrpIndex.loadRuns]]. */
-  val loadRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def load(spark: SparkSession, indexDir: String): Loaded = {
-    loadRuns.incrementAndGet()
-    val art = artifact(indexDir)
-    if (art.isManifestCurrent) {
-      // MANIFEST carrier: tables resolve as logical FILE lists (physical
-      // + carried references — a dir read would silently miss every
-      // carried file), then MOUNT as per-version symlink trees and
-      // register as the SAME external bucketed tables the link carrier
-      // gets ([[IndexLayout.mountManifest]] — the local stand-in for the
-      // table format's metadata layer at an object-store deployment).
-      // Probe plans are therefore carrier-IDENTICAL: bucket
-      // HashPartitioning reported (corpus side never re-shuffles — the
-      // r20 verdict's #1 scale gap), SelectedBucketsCount pruning
-      // available, L0 accrual read as its own delta-sized leg. Same
-      // one-pointer-read contract as the link branch.
-      val snap = art.snapshotLogical(Tables, IndexTombstones.Table)
-      val meta = snap.meta
-      val family = IndexLayout.familyOf(indexDir)
-      def mounted(t: String): File = IndexLayout.mountManifest(
-        indexDir, t, snap.version, snap.tableFiles(t))
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, mounted(t), IndexLayout.specOf(meta, t)))
-      val bandsDir = mounted("bands")
-      return Loaded(tbl("signatures"), tbl("bands"), shapeOfMeta(meta),
-        bucketed = IndexLayout.isBucketed(meta),
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = IndexTombstones.fromFiles(spark, snap.extraFiles),
-        l0Bands = IndexLayout.l0Frame(spark, bandsDir.toString))
-    }
-    // shape, layout, table paths, AND the tombstone sidecar all resolve
-    // against ONE pointer read: independent reads could straddle a
-    // purge and pair pre-purge tables with a dropped sidecar —
-    // transiently resurfacing deleted pairs
-    val snap = artifact(indexDir).snapshot(Tables, IndexTombstones.Table)
-    val meta = snap.meta
-    val shape = shapeOfMeta(meta)
-    val paths = snap.paths
-    val tomb = IndexTombstones.fromSnapshot(spark, snap)
-    if (!IndexLayout.isBucketed(meta))
-      Loaded(spark.read.parquet(paths("signatures")),
-        spark.read.parquet(paths("bands")), shape, tombstones = tomb)
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, new File(paths(t)), IndexLayout.specOf(meta, t)))
-      Loaded(tbl("signatures"), tbl("bands"), shape, bucketed = true,
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = tomb,
-        l0Bands = IndexLayout.l0Frame(spark, paths("bands")))
-    }
-  }
-
-  /** Total data bytes behind the artifact's current version — what the
-    * streaming face's cache-if-fits decision reads once per version.
-    */
-  def artifactBytes(indexDir: String): Long = artifact(indexDir).currentBytes
+  protected def loadedOf(r: DurableIndex.Resolved): Loaded =
+    new Loaded(r, shapeOfMeta(r.meta))
 
   /** [[probe]] against pre-loaded (possibly persisted) artifact frames.
     *
@@ -572,7 +234,7 @@ object DedupIndex {
     * joins, so the corpus band/signature tables STREAM with zero
     * per-batch exchange — see [[ContainIndex.probeLoaded]]. On the
     * BUCKETED layout the corpus-side READ picks one of three regimes
-    * (the r15 design — each measured in `IngestProbe`/SCALE.md):
+    * (the r15 design — each measured in SCALE.md):
     *
     *   1. CACHED — the frames are persisted ([[IndexLayout.isCached]];
     *      the streaming face persists them whenever the artifact fits
@@ -596,7 +258,7 @@ object DedupIndex {
     * Batch probes (`micro = false`) stay fully lazy.
     */
   def probeLoaded(loaded: Loaded, deltaDocs: DataFrame,
-      micro: Boolean = false): DataFrame = {
+      micro: Boolean): DataFrame = {
     val spark = deltaDocs.sparkSession
     graft.functions.VectorFunctions.register(spark)
     val shape = loaded.shape

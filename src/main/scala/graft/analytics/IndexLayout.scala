@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** BUCKETED table layout for the versioned index artifacts — the piece
   * that unifies the two halves of the 100 TB index story (r13 verdict's
@@ -214,7 +215,10 @@ private[graft] object IndexLayout {
     // have, and every later load would drive bucketed joins with wrong
     // bucket metadata. DESCRIBE FORMATTED carries Num Buckets / Bucket
     // Columns / Sort Columns; the schema is compared through the
-    // catalog's own parsed view of the table.
+    // catalog's own parsed view of the table, nullability aside: a file
+    // source reports its columns nullable whatever the DDL says, so a
+    // strict compare would drop and recreate a matching entry on the
+    // first load of every session.
     val ok = exists && {
       val rows = spark.sql(s"DESCRIBE FORMATTED $name").collect()
       def field(k: String): Option[String] =
@@ -226,8 +230,8 @@ private[graft] object IndexLayout {
         field("Num Buckets").map(_.trim).contains(spec.buckets.toString) &&
         cols("Bucket Columns").contains(spec.by) &&
         cols("Sort Columns").contains(spec.sort) &&
-        spark.table(name).schema ==
-          org.apache.spark.sql.types.StructType.fromDDL(spec.schemaDDL)
+        asNullable(spark.table(name).schema) == asNullable(
+          org.apache.spark.sql.types.StructType.fromDDL(spec.schemaDDL))
     }
     if (!ok) {
       if (exists) spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -239,6 +243,18 @@ private[graft] object IndexLayout {
     }
     memo.put(name, sig)
     name
+  }
+
+  /** `t` with every field, element and value nullable — Spark's own
+    * `DataType.asNullable`, which is internal to Spark.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+    case other => other
   }
 
   /** Drop the catalog entry of one pruned version's table — external
@@ -341,7 +357,7 @@ private[graft] object IndexLayout {
     * and cheap, while the L0 probe leg costs real per-batch jobs
     * (r18 measured +0.4–0.6 s/admit at 64/16 buckets, where L0 saved
     * nothing; the 8-vs-~1000-file win appears at ~1024 buckets —
-    * `FanoutProbe`). Default 16 (with the default 8 append tasks: L0
+    * SCALE.md). Default 16 (with the default 8 append tasks: L0
     * past 128 buckets ≈ 4 GB tables at the 32 MB/bucket sizing).
     * `spark.graft.index.l0.cutover` overrides; ≤ 0 = ALWAYS L0 (the
     * r18 behavior — what the L0-shape specs pin).
@@ -375,6 +391,11 @@ private[graft] object IndexLayout {
     * and outside them so no lifecycle carry or byte count ever sees it.
     */
   val MountRoot = "_mount"
+
+  /** Builds [[mountManifest]] tries before it gives up on a mount dir
+    * that keeps losing its `_mounted` marker.
+    */
+  private val MountAttempts = 3
 
   /** Materialize a MANIFEST-carried version's table as a SYMLINK TREE
     * under [[MountRoot]] and return that dir — the read-side metadata
@@ -413,7 +434,16 @@ private[graft] object IndexLayout {
     val tableDir = new File(
       new File(new File(indexDir, MountRoot), s"v$version"), table)
     val marker = new File(tableDir, "_mounted")
-    if (!marker.isFile) {
+    // the marker is checked again after every publication attempt: a
+    // lost move can leave an UNMARKED dir in place (a torn tree another
+    // process renamed in between our clear and our move), which must
+    // never be handed to a reader
+    var attempts = 0
+    while (!marker.isFile) {
+      if (attempts == MountAttempts)
+        throw new IllegalStateException(s"manifest mount $tableDir is " +
+          s"still unmarked after $MountAttempts builds")
+      attempts += 1
       // ATOMIC publication (r21 ADVICE): two concurrent loads of the same
       // manifest artifact — the multiple-reader model the reader-grace
       // prune assumes — must not interleave inside the tree build (the

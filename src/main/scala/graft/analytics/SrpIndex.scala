@@ -5,8 +5,6 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.VersionedArtifact
-
 /** PERSISTED banded-SRP (sign-LSH) index — the embedding counterpart of
   * [[DedupIndex]], completing the durable-artifact family for all three
   * incremental dedup faces (shingle jaccard, containment, embedding
@@ -49,38 +47,18 @@ import graft.streaming.VersionedArtifact
   * filters.
   *
   * Versioning + deltaId-idempotent probe-then-admit + compaction ride the
-  * same [[graft.streaming.VersionedArtifact]] lifecycle as the other two
+  * same [[DurableIndex]] lifecycle as the other two
   * indexes — one admission protocol, no drift. Probes filter
   * `id_a =!= id_b` so the at-least-once RE-probe of an admitted delta
   * cannot report cos-1.0 self-matches (`SrpIndexSpec`).
   */
-object SrpIndex {
+object SrpIndex extends DurableIndex {
 
-  private val Tables = Seq("vectors", "bands")
-
-  /** Corpus-build counter — see [[DedupIndex.buildRuns]]. */
-  val buildRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Whether the artifact has a committed current version. */
-  def hasCurrent(indexDir: String): Boolean =
-    artifact(indexDir).currentVersion.isDefined
-
-  private def artifact(indexDir: String) = new VersionedArtifact(indexDir)
-
-  /** The committed version id behind the _CURRENT pointer — one file
-    * read; what a long-lived prober polls per micro-batch to bound its
-    * cache's staleness to one batch (see `IngestDedup`).
-    */
-  def currentVersion(indexDir: String): Option[Long] =
-    artifact(indexDir).currentVersion
-
-  /** The current version's path for `table` — observability/spec hook. */
-  def tablePath(indexDir: String, table: String): String =
-    artifact(indexDir).tablePath(table)
-
-  /** Delta ids already admitted into the current version. */
-  def appliedDeltas(indexDir: String): Set[String] =
-    artifact(indexDir).appliedDeltas
+  protected val tables = Seq("vectors", "bands")
+  val idColumn = "vec_id"
+  protected val clusterKey = Map("vectors" -> "vec_id", "bands" -> "band")
+  protected val ratioTable = "vectors"
+  protected val l0Tables = Seq("bands")
 
   /** The band shape the artifact was BUILT with — what every probe/admit
     * must replay. Pre-metadata artifacts (r12) read back as `Narrow`,
@@ -104,36 +82,6 @@ object SrpIndex {
     DedupQueries.srpBandsOf(spark, v, shape)
       .select(xxhash64(col("band"), col("bits")).as("bk"), col("vec_id"))
 
-  private def writeTables(spark: SparkSession, vecs: DataFrame, ver: File,
-      mode: String, shape: DedupQueries.SrpShape): Unit = {
-    val v = DedupQueries.srpVectorsOf(spark, vecs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      v.write.mode(mode).parquet(new File(ver, "vectors").toString)
-      DedupQueries.srpBandsOf(spark, v, shape)
-        .write.mode(mode).parquet(new File(ver, "bands").toString)
-    } finally { v.unpersist(); () }
-  }
-
-  /** The bucketed-layout ADMISSION write: `vectors` appends at the
-    * bucket modulus (vec_id-keyed — ≤ |delta| touched buckets),
-    * `bands` as L0 accrual ([[IndexLayout.l0Append]]) — a delta's
-    * |delta| × bands band rows hash across ~every bucket, so the
-    * modulus append wrote one file per bucket per admission.
-    */
-  private def writeTablesBucketed(spark: SparkSession, family: String,
-      vecs: DataFrame, ver: File, meta: Map[String, String],
-      shape: DedupQueries.SrpShape): Unit = {
-    val v = DedupQueries.srpVectorsOf(spark, vecs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      IndexLayout.writeInto(v, family, "vectors", ver,
-        IndexLayout.specOf(meta, "vectors"), overwrite = false)
-      IndexLayout.fanoutAppend(bucketedBandsOf(spark, v, shape), family,
-        "bands", ver, IndexLayout.specOf(meta, "bands"))
-    } finally { v.unpersist(); () }
-  }
-
   /** Build (or fully REBUILD) from a `(vec_id, embedding)` corpus frame.
     * `shape` is recorded in the artifact and rules every later
     * probe/admit; the default is the corpus-scale `Wide` banding (see
@@ -146,22 +94,19 @@ object SrpIndex {
   def build(spark: SparkSession, vecs: DataFrame, indexDir: String,
       shape: DedupQueries.SrpShape = DedupQueries.Srp.Wide,
       bucketed: Boolean = true, buckets: Int = 0): Unit = {
-    buildRuns.incrementAndGet()
-    // carrier conf, same contract as DedupIndex.build: `manifest`
-    // records the reference carry in the artifact meta (bucketed-only)
-    val carrier = DedupIndex.carrierMetaOf(spark)
-    require(bucketed || carrier.isEmpty,
-      "manifest carrier needs the bucketed layout (see DedupIndex.build)")
+    val carrier = beginBuild(spark, bucketed)
     val shapeMeta = Map("bands" -> shape.bands.toString,
       "rowsPerBand" -> shape.rowsPerBand.toString)
-    if (!bucketed)
-      artifact(indexDir).build(writeTables(spark, vecs, _, "overwrite",
-        shape), buildMeta = shapeMeta)
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      val v = DedupQueries.srpVectorsOf(spark, vecs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    val v = DedupQueries.srpVectorsOf(spark, vecs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (!bucketed)
+        artifact(indexDir).build({ ver =>
+          v.write.mode("overwrite").parquet(new File(ver, "vectors").toString)
+          DedupQueries.srpBandsOf(spark, v, shape)
+            .write.mode("overwrite").parquet(new File(ver, "bands").toString)
+        }, buildMeta = shapeMeta)
+      else {
         // buckets = 0: per-table sizing from bytes (Bucketing
         // .indexBuckets — 32 MB index target, parallelism floor) — the
         // count rides the persisted frame the writes reuse. Vector
@@ -172,262 +117,62 @@ object SrpIndex {
         val rows = if (buckets > 0) 0L else v.count()
         val dims = if (buckets > 0 || rows == 0) 0
           else v.select(size(col("v"))).first().getInt(0)
-        val vN = if (buckets > 0) buckets
-          else Bucketing.indexBuckets(spark, rows * (dims * 8L + 16L))
-        val bN = if (buckets > 0) buckets
-          else Bucketing.indexBuckets(spark, rows * shape.bands * 16L)
-        val bands = bucketedBandsOf(spark, v, shape)
-        val meta = shapeMeta ++ carrier +
-          (IndexLayout.LayoutKey -> IndexLayout.BucketedValue) ++
-          IndexLayout.metaFor("vectors", IndexLayout.TableSpec(vN,
-            Seq("vec_id"), Seq("vec_id"), v.schema.toDDL)) ++
-          IndexLayout.metaFor("bands", IndexLayout.TableSpec(bN,
-            Seq("bk"), Seq("bk"), bands.schema.toDDL))
-        artifact(indexDir).build({ ver =>
-          IndexLayout.writeInto(v, family, "vectors", ver,
-            IndexLayout.specOf(meta, "vectors"), overwrite = true)
-          IndexLayout.writeInto(bands, family, "bands", ver,
-            IndexLayout.specOf(meta, "bands"), overwrite = true)
-        }, buildMeta = meta)
-      } finally { v.unpersist(); () }
-    }
+        def n(bytes: Long): Int =
+          if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
+        buildBucketed(indexDir, shapeMeta ++ carrier,
+          Map("vectors" -> "vec_id", "bands" -> "bk"),
+          Seq(("vectors", v, n(rows * (dims * 8L + 16L))),
+            ("bands", bucketedBandsOf(spark, v, shape),
+              n(rows * shape.bands * 16L))))
+      }
+    } finally { v.unpersist(); () }
   }
 
-  /** ADMIT a delta (probe-then-admit): true if admitted, false if
-    * `deltaId` was already applied. O(|delta|) write, hard-link carry.
-    * Bands with the shape (and layout) the artifact records — never a
-    * caller choice.
+  /** ADMIT a delta — see [[DurableIndex.append]]. Bands with the shape
+    * (and layout) the artifact records — never a caller choice. On the
+    * bucketed layout `vectors` appends at the bucket modulus (vec_id-keyed
+    * — ≤ |delta| touched buckets) and `bands` as L0 accrual
+    * ([[IndexLayout.fanoutAppend]]) — a delta's |delta| × bands band
+    * rows hash across ~every bucket.
     */
   def append(spark: SparkSession, vecs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {
     val meta = artifact(indexDir).meta
     val shape = shapeOfMeta(meta)
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).admit(deltaId, Tables,
-        writeTables(spark, vecs, _, "append", shape))
-    else
-      artifact(indexDir).admit(deltaId, Tables,
-        writeTablesBucketed(spark, IndexLayout.familyOf(indexDir), vecs,
-          _, meta, shape))
+    val bucketed = IndexLayout.isBucketed(meta)
+    artifact(indexDir).admit(deltaId, tables, { ver =>
+      val v = DedupQueries.srpVectorsOf(spark, vecs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        appendTable(indexDir, meta, ver, "vectors", v)
+        appendTable(indexDir, meta, ver, "bands",
+          if (bucketed) bucketedBandsOf(spark, v, shape)
+          else DedupQueries.srpBandsOf(spark, v, shape))
+      } finally { v.unpersist(); () }
+    })
   }
 
-  /** The delta's (bk, vec_id) band frame at the ARTIFACT's recorded
-    * shape — measurement hook (see [[DedupIndex.deltaBandFrame]]).
+  /** The artifact's tables + shape resolved against ONE pointer read
+    * ([[DurableIndex.load]]) — what the streaming embedding-ingest face
+    * loads once and persists; every delta MUST band with the corpus's
+    * build shape.
     */
-  private[graft] def deltaBandFrame(spark: SparkSession,
-      indexDir: String, vecs: DataFrame): DataFrame =
-    bucketedBandsOf(spark, DedupQueries.srpVectorsOf(spark, vecs),
-      shapeOf(indexDir))
-
-  /** Drop versions older than the newest `keep` — see
-    * [[DedupIndex.prune]]'s reader-grace + catalog-drop notes. */
-  def prune(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
-    val bucketed = IndexLayout.isBucketed(artifact(indexDir).meta)
-    val dropped = artifact(indexDir).prune(keep)
-    if (bucketed) {
-      val family = IndexLayout.familyOf(indexDir)
-      dropped.foreach(v =>
-        Tables.foreach(IndexLayout.deregister(spark, family, _, v)))
-      // manifest mounts are per-version metadata; drop them with the
-      // version (symlinks never keep bytes alive, so order is free)
-      dropped.foreach(IndexLayout.unmount(indexDir, _))
-    }
+  final class Loaded private[SrpIndex] (r: DurableIndex.Resolved,
+      private[graft] val shape: DedupQueries.SrpShape)
+      extends DurableIndex.Frames(r) {
+    def vectors: DataFrame = table("vectors")
+    def bands: DataFrame = table("bands")
+    private[graft] def l0Bands: Option[DataFrame] = l0("bands")
   }
 
-  /** Compact tables past `maxFiles` part files — the shared
-    * versioned-swap transaction; directory postings re-cluster on the
-    * probe's band key, vectors on vec_id; bucketed tables fold
-    * bucket-granularly (base hard-links, accrual merges — see
-    * [[DedupIndex.compact]]).
-    */
-  def compact(spark: SparkSession, indexDir: String,
-      maxFiles: Int = 64): Int = {
-    val meta = artifact(indexDir).meta
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).compact(Tables, maxFiles) { (src, tgt) =>
-        val df = spark.read.parquet(src)
-        val out =
-          if (tgt.getName == "bands") df.repartition(col("band"))
-          else df.repartition(col("vec_id"))
-        out.write.mode("overwrite").parquet(tgt.toString)
-      }
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      // bucketed threshold = bucket floor + maxFiles ACCRUAL slack; the
-      // rewrite is bucket-granular (fold the accrual, hard-link the base
-      // files) — see DedupIndex.compact and VersionedArtifact
-      // .compactBucketed
-      artifact(indexDir).compactBucketed(Tables,
-        (t: String) => IndexLayout.specOf(meta, t).buckets + maxFiles) {
-        (table, files, tgt) =>
-          IndexLayout.writeInto(
-            spark.read.parquet(files.map(_.getAbsolutePath): _*), family,
-            table, tgt.getParentFile,
-            IndexLayout.specOf(meta, table), overwrite = true)
-      }
-    }
-  }
+  protected def loadedOf(r: DurableIndex.Resolved): Loaded =
+    new Loaded(r, shapeOfMeta(r.meta))
 
-  /** LOGICAL vector deletion (takedown) — see [[DedupIndex.delete]] /
-    * [[IndexTombstones]]: `ids` is one LongType vec-id column; probes
-    * drop pairs touching the set; false = deltaId already applied.
-    */
-  def delete(spark: SparkSession, indexDir: String, ids: DataFrame,
-      deltaId: String): Boolean =
-    IndexTombstones.delete(artifact(indexDir), Tables, ids, deltaId)
-
-  /** [[delete]] for a batch of requests in ONE version bump — the
-    * takedown-drain seat (see [[IndexTombstones.deleteAll]]).
-    */
-  def deleteAll(spark: SparkSession, indexDir: String,
-      reqs: Seq[(DataFrame, String)]): Boolean =
-    IndexTombstones.deleteAll(artifact(indexDir), Tables, reqs)
-
-  /** |tombstones| / |indexed vectors| — the auto-purge trigger metric;
-    * see [[IndexTombstones.ratio]].
-    */
-  def tombstoneRatio(spark: SparkSession, indexDir: String): Double =
-    IndexTombstones.ratio(spark, artifact(indexDir), "vectors")
-
-  /** PHYSICAL tombstone removal — see [[DedupIndex.purge]]; `budget`
-    * slices the bucketed purge (≤ budget buckets per call).
-    */
-  def purge(spark: SparkSession, indexDir: String,
-      budget: Int = 0): Boolean = {
-    val art = artifact(indexDir)
-    IndexTombstones.loadTombstones(spark, art) match {
-      case None => false
-      case Some(t) =>
-        val meta = art.meta
-        val tomb = broadcast(t.select(col("id")))
-        def kept(src: String): DataFrame = spark.read.parquet(src)
-          .join(tomb, col("vec_id") === col("id"), "left_anti")
-        if (!IndexLayout.isBucketed(meta))
-          art.purgeVersion(Tables, Nil, Set(IndexTombstones.Table)) {
-            (table, src, tgt) =>
-              val out = if (table == "bands") kept(src).repartition(col("band"))
-                else kept(src).repartition(col("vec_id"))
-              out.write.mode("overwrite").parquet(tgt.toString)
-          }
-        else {
-          val family = IndexLayout.familyOf(indexDir)
-          // vectors is bucketed BY vec_id: affected-bucket rewrite only
-          // (see DedupIndex.purge); bands rewrites whole
-          def affectedOf(table: String): Option[Set[String]] = {
-            val spec = IndexLayout.specOf(meta, table)
-            if (spec.by != Seq("vec_id")) None
-            else Some(IndexTombstones.affectedBuckets(t, spec.buckets))
-          }
-          art.purgeVersionBudgeted(Tables, Nil,
-              Set(IndexTombstones.Table), affectedOf, budget) {
-            (table, files, tgt) =>
-              IndexLayout.writeInto(
-                spark.read.parquet(files.map(_.getAbsolutePath): _*)
-                  .join(tomb, col("vec_id") === col("id"), "left_anti"),
-                family, table, tgt.getParentFile,
-                IndexLayout.specOf(meta, table), overwrite = true)
-          }
-          ()
-        }
-        true
-    }
-  }
-
-  /** Whether a budget-sliced [[purge]] is mid-flight — polled per batch
-    * by the maintenance seat (see `IngestDedup.maintain`).
-    */
-  def purgePending(indexDir: String): Boolean =
-    artifact(indexDir).purgePending
-
-  /** Probe with a `(vec_id, embedding)` delta frame: verified near-dup
-    * pairs (corpus_id, new_id, cos ≥ 0.46) between the delta and the
-    * indexed corpus — delta bands equi-join the standing band table,
-    * candidates verify by exact cosine against the standing vector
-    * table. All tables resolve against ONE pointer read.
-    */
-  def probe(spark: SparkSession, indexDir: String,
-      deltaVecs: DataFrame): DataFrame =
-    probeLoaded(load(spark, indexDir), deltaVecs)
-
-  /** The artifact's tables + shape resolved against ONE pointer read —
-    * what a LONG-LIVED prober (the streaming embedding-ingest face)
-    * loads once and persists, so every micro-batch probes memory instead
-    * of re-reading the artifact from the lake. `bucketed` records which
-    * layout (and probe plan) the frames carry.
-    */
-  final case class Loaded(vectors: DataFrame, bands: DataFrame,
-      private[graft] val shape: DedupQueries.SrpShape,
-      bucketed: Boolean = false,
-      private[graft] val buckets: Map[String, Int] = Map.empty,
-      private[graft] val tombstones: Option[DataFrame] = None,
-      private[graft] val l0Bands: Option[DataFrame] = None) {
-
-    /** Every L0 frame present — what the streaming cache persists next
-      * to the base frames (delta-sized; pinning them is cheaper than
-      * one lake read per batch).
-      */
-    private[graft] def l0Frames: Seq[DataFrame] = l0Bands.toSeq
-  }
-
-  /** Artifact-load counter — the [[buildRuns]]-style observability hook:
-    * lets `IngestDedupSpec` prove a multi-batch ingest stream resolved
-    * the artifact ONCE, not per batch.
-    */
-  val loadRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  def load(spark: SparkSession, indexDir: String): Loaded = {
-    loadRuns.incrementAndGet()
-    val art = artifact(indexDir)
-    if (art.isManifestCurrent) {
-      // MANIFEST carrier: logical file lists MOUNTED and registered as
-      // the same external bucketed tables the link carrier gets — see
-      // DedupIndex.load's manifest branch and
-      // IndexLayout.mountManifest for the full rationale. Probe plans
-      // are carrier-identical (in-place corpus scans, L0 leg).
-      val snap = art.snapshotLogical(Tables, IndexTombstones.Table)
-      val meta = snap.meta
-      val family = IndexLayout.familyOf(indexDir)
-      def mounted(t: String): File = IndexLayout.mountManifest(
-        indexDir, t, snap.version, snap.tableFiles(t))
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, mounted(t), IndexLayout.specOf(meta, t)))
-      return Loaded(tbl("vectors"), tbl("bands"), shapeOfMeta(meta),
-        bucketed = IndexLayout.isBucketed(meta),
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = IndexTombstones.fromFiles(spark, snap.extraFiles),
-        l0Bands = IndexLayout.l0Frame(spark, mounted("bands").toString))
-    }
-    // shape, layout, table paths, AND the tombstone sidecar all resolve
-    // against ONE pointer read (a purge racing independent reads would
-    // pair pre-purge tables with a dropped sidecar), and every delta
-    // MUST band with the corpus's build shape
-    val snap = artifact(indexDir).snapshot(Tables, IndexTombstones.Table)
-    val meta = snap.meta
-    val shape = shapeOfMeta(meta)
-    val paths = snap.paths
-    val tomb = IndexTombstones.fromSnapshot(spark, snap)
-    if (!IndexLayout.isBucketed(meta))
-      Loaded(spark.read.parquet(paths("vectors")),
-        spark.read.parquet(paths("bands")), shape, tombstones = tomb)
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      def tbl(t: String): DataFrame = spark.table(IndexLayout.register(
-        spark, family, t, new File(paths(t)), IndexLayout.specOf(meta, t)))
-      Loaded(tbl("vectors"), tbl("bands"), shape, bucketed = true,
-        buckets = Tables.map(t =>
-          t -> IndexLayout.specOf(meta, t).buckets).toMap,
-        tombstones = tomb,
-        l0Bands = IndexLayout.l0Frame(spark, paths("bands")))
-    }
-  }
-
-  /** Total data bytes behind the artifact's current version — what the
-    * streaming face's cache-if-fits decision reads once per version.
-    */
-  def artifactBytes(indexDir: String): Long = artifact(indexDir).currentBytes
-
-  /** [[probe]] against pre-loaded (possibly persisted) artifact frames.
+  /** [[probe]] against pre-loaded (possibly persisted) artifact frames:
+    * verified near-dup pairs (corpus_id, new_id, cos ≥ 0.46) between the
+    * delta and the indexed corpus — delta bands equi-join the standing
+    * band table, candidates verify by exact cosine against the standing
+    * vector table.
     *
     * `micro = true` declares `deltaVecs` a MICRO-BATCH (the streaming
     * ingest face): delta bands and candidates broadcast into the corpus
@@ -442,9 +187,9 @@ object SrpIndex {
     * fully lazy.
     */
   def probeLoaded(loaded: Loaded, deltaVecs: DataFrame,
-      micro: Boolean = false): DataFrame = {
+      micro: Boolean): DataFrame = {
     val spark = deltaVecs.sparkSession
-    // no persist — lazy return; see DedupIndex.probe's leak note
+    // no persist — lazy return; see DedupIndex.probeLoaded's leak note
     val deltaV = DedupQueries.srpVectorsOf(spark, deltaVecs)
     // id_a =!= id_b: re-probe of an admitted delta must not self-match
     val (cand, corpusVectors) =

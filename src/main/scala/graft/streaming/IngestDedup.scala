@@ -330,63 +330,10 @@ object IngestDedup {
       checkpointDir: String, admitId: Option[String] = None,
       compactEvery: Int = 0, compactMaxFiles: Int = 64,
       takedowns: Option[TakedownQueue] = None)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = vecs.sparkSession
-    takedowns.foreach(_.attachDefaultJournal(indexDir))
-    val cache = new VersionedCache(
-      () => graft.analytics.SrpIndex.currentVersion(indexDir),
-      () => graft.analytics.SrpIndex.load(spark, indexDir),
-      (l: graft.analytics.SrpIndex.Loaded) =>
-        cacheIfFits(spark, l.bucketed, admitting = admitId.isDefined,
-          () => graft.analytics.SrpIndex.artifactBytes(indexDir),
-          Seq(l.vectors, l.bands) ++ l.l0Frames),
-      purgePending = () => graft.analytics.SrpIndex.purgePending(indexDir),
-      appliedDeltas = () =>
-        graft.analytics.SrpIndex.appliedDeltas(indexDir))
-    val purgeGrace = new java.util.concurrent.atomic.AtomicInteger(
-      purgeGraceSeed(indexDir,
-        graft.analytics.SrpIndex.purgePending(indexDir)))
-    // eager first load: a missing/corrupt index must throw HERE,
-    // synchronously, not as an async batch-0 failure the caller's error
-    // handling never sees (and a failed start() then has real cache
-    // entries to release)
-    cache.get()
-    val start = () => vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[IngestVec], batchId: Long) =>
-        val df = batch.toDF()
-        val pairs = graft.analytics.SrpIndex.probeLoaded(cache.get(),
-          df, micro = true)
-        val ids = if (admitId.isEmpty) None else Some(df.select("vec_id"))
-        sink(admissionShape(pairs, "corpus_id", "new_id", ids), batchId)
-        maintain(admitId, compactEvery, batchId,
-          nonEmpty = admitId.isDefined && !df.isEmpty,
-          append = d =>
-            graft.analytics.SrpIndex.append(spark, df, indexDir, d),
-          compact = () =>
-            graft.analytics.SrpIndex.compact(spark, indexDir,
-              compactMaxFiles) > 0,
-          prune = keep =>
-            graft.analytics.SrpIndex.prune(spark, indexDir, keep),
-          takedowns = takedowns,
-          deleteAll = reqs => {
-            import spark.implicits._
-            graft.analytics.SrpIndex.deleteAll(spark, indexDir,
-              reqs.map { case (ids, d) => ids.toDF("vec_id") -> d })
-          },
-          tombstoneRatio = () =>
-            graft.analytics.SrpIndex.tombstoneRatio(spark, indexDir),
-          purge = () => graft.analytics.SrpIndex.purge(spark, indexDir,
-            purgeBudgetOf(spark)),
-          purgeRatioConf = purgeRatioOf(spark),
-          purgePending = () =>
-            graft.analytics.SrpIndex.purgePending(indexDir),
-          purgeGrace = purgeGrace)
-      }
-      .start()
-    withCacheLifecycle(spark, start, cache)
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    ingestFromIndex(vecs, graft.analytics.SrpIndex, ("corpus_id", "new_id"),
+      indexDir, checkpointDir, admitId, compactEvery, compactMaxFiles,
+      takedowns)(sink)
 
   /** [[dedupIngest]]'s production wiring: the stream probes the durable
     * [[graft.analytics.DedupIndex]] artifact built at corpus ingest —
@@ -406,60 +353,10 @@ object IngestDedup {
       checkpointDir: String, admitId: Option[String] = None,
       compactEvery: Int = 0, compactMaxFiles: Int = 64,
       takedowns: Option[TakedownQueue] = None)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = docs.sparkSession
-    takedowns.foreach(_.attachDefaultJournal(indexDir))
-    val cache = new VersionedCache(
-      () => graft.analytics.DedupIndex.currentVersion(indexDir),
-      () => graft.analytics.DedupIndex.load(spark, indexDir),
-      (l: graft.analytics.DedupIndex.Loaded) =>
-        cacheIfFits(spark, l.bucketed, admitting = admitId.isDefined,
-          () => graft.analytics.DedupIndex.artifactBytes(indexDir),
-          Seq(l.signatures, l.bands) ++ l.l0Frames),
-      purgePending = () =>
-        graft.analytics.DedupIndex.purgePending(indexDir),
-      appliedDeltas = () =>
-        graft.analytics.DedupIndex.appliedDeltas(indexDir))
-    val purgeGrace = new java.util.concurrent.atomic.AtomicInteger(
-      purgeGraceSeed(indexDir,
-        graft.analytics.DedupIndex.purgePending(indexDir)))
-    cache.get()  // eager first load: fail fast, see the embedding face
-    val start = () => docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[IngestDoc], batchId: Long) =>
-        val df = batch.toDF()
-        val pairs = graft.analytics.DedupIndex.probeLoaded(cache.get(),
-          df, micro = true)
-        val ids = if (admitId.isEmpty) None else Some(df.select("doc_id"))
-        sink(admissionShape(pairs, "corpus_id", "new_id", ids), batchId)
-        maintain(admitId, compactEvery, batchId,
-          nonEmpty = admitId.isDefined && !df.isEmpty,
-          append = d =>
-            graft.analytics.DedupIndex.append(spark, df, indexDir, d),
-          compact = () =>
-            graft.analytics.DedupIndex.compact(spark, indexDir,
-              compactMaxFiles) > 0,
-          prune = keep =>
-            graft.analytics.DedupIndex.prune(spark, indexDir, keep),
-          takedowns = takedowns,
-          deleteAll = reqs => {
-            import spark.implicits._
-            graft.analytics.DedupIndex.deleteAll(spark, indexDir,
-              reqs.map { case (ids, d) => ids.toDF("doc_id") -> d })
-          },
-          tombstoneRatio = () =>
-            graft.analytics.DedupIndex.tombstoneRatio(spark, indexDir),
-          purge = () => graft.analytics.DedupIndex.purge(spark, indexDir,
-            purgeBudgetOf(spark)),
-          purgeRatioConf = purgeRatioOf(spark),
-          purgePending = () =>
-            graft.analytics.DedupIndex.purgePending(indexDir),
-          purgeGrace = purgeGrace)
-      }
-      .start()
-    withCacheLifecycle(spark, start, cache)
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    ingestFromIndex(docs, graft.analytics.DedupIndex, ("corpus_id", "new_id"),
+      indexDir, checkpointDir, admitId, compactEvery, compactMaxFiles,
+      takedowns)(sink)
 
   /** The CONTAINMENT face, completing the streaming trio (near-dup text,
     * near-dup embeddings, containment): each micro-batch of arriving
@@ -479,56 +376,49 @@ object IngestDedup {
       checkpointDir: String, admitId: Option[String] = None,
       compactEvery: Int = 0, compactMaxFiles: Int = 64,
       takedowns: Option[TakedownQueue] = None)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    ingestFromIndex(docs, graft.analytics.ContainIndex, ("id_a", "id_b"),
+      indexDir, checkpointDir, admitId, compactEvery, compactMaxFiles,
+      takedowns)(sink)
+
+  /** The one stream wiring behind the three index faces: each
+    * micro-batch probes `index`'s [[VersionedCache]]d frames
+    * (`micro = true`), the sink sees the pairs (named `pairCols`) in the
+    * [[admissionShape]], and [[maintain]] runs the batch's admission,
+    * compaction, takedowns, purge and prune from this writer thread.
+    */
+  private def ingestFromIndex[T](data: Dataset[T],
+      index: graft.analytics.DurableIndex, pairCols: (String, String),
+      indexDir: String, checkpointDir: String, admitId: Option[String],
+      compactEvery: Int, compactMaxFiles: Int,
+      takedowns: Option[TakedownQueue])(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = docs.sparkSession
+    val spark = data.sparkSession
     takedowns.foreach(_.attachDefaultJournal(indexDir))
-    val cache = new VersionedCache(
-      () => graft.analytics.ContainIndex.currentVersion(indexDir),
-      () => graft.analytics.ContainIndex.load(spark, indexDir),
-      (l: graft.analytics.ContainIndex.Loaded) =>
-        cacheIfFits(spark, l.bucketed, admitting = admitId.isDefined,
-          () => graft.analytics.ContainIndex.artifactBytes(indexDir),
-          Seq(l.tokens, l.prefix, l.sets, l.df) ++ l.l0Frames),
-      purgePending = () =>
-        graft.analytics.ContainIndex.purgePending(indexDir),
-      appliedDeltas = () =>
-        graft.analytics.ContainIndex.appliedDeltas(indexDir))
+    val cache = new VersionedCache[index.Loaded](
+      () => index.currentVersion(indexDir),
+      () => index.load(spark, indexDir),
+      l => cacheIfFits(spark, l.bucketed, admitting = admitId.isDefined,
+        () => index.artifactBytes(indexDir), l.cacheFrames),
+      purgePending = () => index.purgePending(indexDir),
+      appliedDeltas = () => index.appliedDeltas(indexDir))
     val purgeGrace = new java.util.concurrent.atomic.AtomicInteger(
-      purgeGraceSeed(indexDir,
-        graft.analytics.ContainIndex.purgePending(indexDir)))
-    cache.get()  // eager first load: fail fast, see the embedding face
-    val start = () => docs.writeStream
+      purgeGraceSeed(indexDir, index.purgePending(indexDir)))
+    // eager first load: a missing/corrupt index must throw HERE,
+    // synchronously, not as an async batch-0 failure the caller's error
+    // handling never sees (and a failed start() then has real cache
+    // entries to release)
+    cache.get()
+    val start = () => data.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("update")
-      .foreachBatch { (batch: Dataset[IngestDoc], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[T], batchId: Long) =>
         val df = batch.toDF()
-        val pairs = graft.analytics.ContainIndex.probeLoaded(cache.get(),
-          df, micro = true)
-        val ids = if (admitId.isEmpty) None else Some(df.select("doc_id"))
-        sink(admissionShape(pairs, "id_a", "id_b", ids), batchId)
-        maintain(admitId, compactEvery, batchId,
-          nonEmpty = admitId.isDefined && !df.isEmpty,
-          append = d =>
-            graft.analytics.ContainIndex.append(spark, df, indexDir, d),
-          compact = () =>
-            graft.analytics.ContainIndex.compact(spark, indexDir,
-              compactMaxFiles) > 0,
-          prune = keep =>
-            graft.analytics.ContainIndex.prune(spark, indexDir, keep),
-          takedowns = takedowns,
-          deleteAll = reqs => {
-            import spark.implicits._
-            graft.analytics.ContainIndex.deleteAll(spark, indexDir,
-              reqs.map { case (ids, d) => ids.toDF("doc_id") -> d })
-          },
-          tombstoneRatio = () =>
-            graft.analytics.ContainIndex.tombstoneRatio(spark, indexDir),
-          purge = () => graft.analytics.ContainIndex.purge(spark, indexDir,
-            purgeBudgetOf(spark)),
-          purgeRatioConf = purgeRatioOf(spark),
-          purgePending = () =>
-            graft.analytics.ContainIndex.purgePending(indexDir),
-          purgeGrace = purgeGrace)
+        val pairs = index.probeLoaded(cache.get(), df, micro = true)
+        val ids = admitId.map(_ => df.select(index.idColumn))
+        sink(admissionShape(pairs, pairCols._1, pairCols._2, ids), batchId)
+        maintain(index, df, indexDir, admitId, compactEvery,
+          compactMaxFiles, batchId, takedowns, purgeGrace)
       }
       .start()
     withCacheLifecycle(spark, start, cache)
@@ -640,21 +530,18 @@ object IngestDedup {
     * (a half-done purge must not wait for the next delete), and
     * regardless of the ratio still clearing the threshold.
     */
-  private def maintain(admitId: Option[String], compactEvery: Int,
-      batchId: Long, nonEmpty: Boolean, append: String => Boolean,
-      compact: () => Boolean, prune: Int => Unit,
-      takedowns: Option[TakedownQueue] = None,
-      deleteAll: Seq[(Seq[Long], String)] => Boolean = _ => false,
-      tombstoneRatio: () => Double = () => 0.0,
-      purge: () => Boolean = () => false,
-      purgeRatioConf: Option[Double] = None,
-      purgePending: () => Boolean = () => false,
-      purgeGrace: java.util.concurrent.atomic.AtomicInteger =
-        new java.util.concurrent.atomic.AtomicInteger(0)): Unit = {
+  private def maintain(index: graft.analytics.DurableIndex,
+      batch: DataFrame, indexDir: String, admitId: Option[String],
+      compactEvery: Int, compactMaxFiles: Int, batchId: Long,
+      takedowns: Option[TakedownQueue],
+      purgeGrace: java.util.concurrent.atomic.AtomicInteger): Unit = {
+    val spark = batch.sparkSession
+    val purgeRatio = purgeRatioOf(spark)
+    def purgePending = index.purgePending(indexDir)
     var bumps = 0
     admitId.foreach { id =>
-      if (nonEmpty) {
-        if (append(s"$id-$batchId")) bumps += 1
+      if (!batch.isEmpty) {
+        if (index.append(spark, batch, indexDir, s"$id-$batchId")) bumps += 1
         // no compaction while a sliced purge is mid-flight: compaction
         // folds L0 accrual into bucket-named files while the purge's
         // done-slice progress is keyed by those very file names —
@@ -668,21 +555,26 @@ object IngestDedup {
         // constraint (VersionedStore.compactBucketed resets the purge
         // progress itself if they break it — correct, not free).
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-          !purgePending() && compact()) bumps += 1
+          !purgePending &&
+          index.compact(spark, indexDir, compactMaxFiles) > 0) bumps += 1
       }
     }
     takedowns.foreach { tq =>
       val reqs = tq.drain()
-      if (reqs.nonEmpty && deleteAll(reqs)) bumps += 1
-      // the delete transaction is committed (or was already in the
-      // ledger): truncate the drained entries' journal records — a
-      // crash BEFORE this line replays them, and the deltaId ledger
-      // no-ops the replay
-      if (reqs.nonEmpty) tq.markApplied(reqs)
-      if ((reqs.nonEmpty &&
-            purgeRatioConf.exists(r => tombstoneRatio() >= r)) ||
-          purgePending()) {
-        if (purge()) bumps += 1
+      if (reqs.nonEmpty) {
+        import spark.implicits._
+        if (index.deleteAll(spark, indexDir, reqs.map { case (ids, d) =>
+              ids.toDF(index.idColumn) -> d })) bumps += 1
+        // the delete transaction is committed (or was already in the
+        // ledger): truncate the drained entries' journal records — a
+        // crash BEFORE this line replays them, and the deltaId ledger
+        // no-ops the replay
+        tq.markApplied(reqs)
+      }
+      if ((reqs.nonEmpty && purgeRatio.exists(r =>
+            index.tombstoneRatio(spark, indexDir) >= r)) ||
+          purgePending) {
+        if (index.purge(spark, indexDir, purgeBudgetOf(spark))) bumps += 1
       }
     }
     // PURGE-GRACE PRUNE: while a budget-sliced purge is mid-flight,
@@ -698,7 +590,7 @@ object IngestDedup {
     // after this batch's prune), and the batch AFTER completion drops
     // it — the same one-batch reader grace every bump already has.
     val wasActive = purgeGrace.get > 0
-    val active = purgePending()
+    val active = purgePending
     if (active || wasActive) {
       purgeGrace.addAndGet(bumps)
       // guard on THIS batch's bumps, like the plain branch: only a
@@ -712,9 +604,9 @@ object IngestDedup {
       // seed+1 slices its own pinned version (r18 ADVICE). With the
       // bumps guard the reader never prunes; the single writer's grace
       // grows in lockstep with exactly the versions it creates.
-      if (bumps > 0) prune(purgeGrace.get + 1)
+      if (bumps > 0) index.prune(spark, indexDir, purgeGrace.get + 1)
       if (!active) purgeGrace.set(0)
-    } else if (bumps > 0) prune(bumps + 1)
+    } else if (bumps > 0) index.prune(spark, indexDir, bumps + 1)
   }
 
   /** Purge-grace seed for a stream STARTING while a sliced purge is
@@ -776,7 +668,7 @@ object IngestDedup {
     * probes key on ([[graft.analytics.DedupIndex.probeLoaded]]'s
     * three-regime design): persisted frames flip every probe to the
     * lazy broadcast-delta plan over memory (the steady state measured
-    * at 1.2–2.4 s/batch in `IngestProbe`); past the budget the probes
+    * at 1.2–2.4 s/batch, SCALE.md); past the budget the probes
     * fall to pruned/parallel bucketed disk reads — the only option at
     * 100 TB, where no cluster pins the corpus index in memory.
     * Directory-layout frames (the parity fallback) always persist —

@@ -78,5 +78,29 @@ class IndexLayoutSpec extends SparkSpec {
     assert(again === name)
     assert(numBuckets === 8,
       "register reused a same-location entry whose bucket spec drifted")
+    // schema drift is judged nullability aside: an entry differing ONLY
+    // in nullability is the same table and is reused (a marker property
+    // survives); a column TYPE change is still recreated
+    def marked: Boolean = spark.sql(s"SHOW TBLPROPERTIES $name").collect()
+      .exists(_.getString(0) == "graft.spec.marker")
+    def recreateWith(ddl: String): Unit = {
+      IndexLayout.deregister(spark, fam, "t", 0L)
+      spark.sql(s"CREATE TABLE $name ($ddl) USING parquet " +
+        s"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO 8 BUCKETS " +
+        s"LOCATION '${tableDir.getAbsolutePath}'")
+      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
+        "('graft.spec.marker' = '1')")
+      assert(marked)
+    }
+    assert(spec8.schemaDDL.contains("NOT NULL"))
+    recreateWith("doc_id BIGINT, x BIGINT")
+    IndexLayout.register(spark, fam, "t", tableDir, spec8)
+    assert(marked,
+      "register recreated an entry differing only in nullability")
+    recreateWith("doc_id BIGINT, x INT")
+    IndexLayout.register(spark, fam, "t", tableDir, spec8)
+    assert(!marked, "register reused an entry whose column type drifted")
+    assert(spark.table(name).schema("x").dataType ===
+      org.apache.spark.sql.types.LongType)
   }
 }

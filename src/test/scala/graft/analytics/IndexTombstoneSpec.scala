@@ -160,15 +160,20 @@ class IndexTombstoneSpec extends SparkSpec {
       .createTempDirectory("graft-tomb-srp").toString
     SrpIndex.build(spark, vecs.filter($"vec_id" % 5 =!= 4), idx,
       DedupQueries.Srp.Narrow)
+    assert(SrpIndex.tombstoneRatio(spark, idx) === 0.0)
+    val indexed = SrpIndex.load(spark, idx).vectors.count()
     val delta = vecs.filter($"vec_id" % 5 === 4)
     val before = pairSet(SrpIndex.probe(spark, idx, delta))
     assert(before.nonEmpty)
     val dropIds = before.map(_._1).toSeq.sorted.take(1)
     assert(SrpIndex.delete(spark, idx, dropIds.toDF("vec_id"), "takedown-a"))
+    assert(SrpIndex.tombstoneRatio(spark, idx) ===
+      dropIds.size.toDouble / indexed)
     val after = pairSet(SrpIndex.probe(spark, idx, delta))
     assert(after === before.filterNot(p => dropIds.contains(p._1)))
     assert(after !== before)
     assert(SrpIndex.purge(spark, idx))
+    assert(SrpIndex.tombstoneRatio(spark, idx) === 0.0)
     val ver = currentVerDir(idx)
     for (t <- Seq("vectors", "bands"))
       assert(dropIds.forall(!rawIds(ver, t, "vec_id").contains(_)),
@@ -183,6 +188,8 @@ class IndexTombstoneSpec extends SparkSpec {
       .createTempDirectory("graft-tomb-contain").toString
     val corpus = docs.filter($"doc_id" % 5 =!= 4)
     ContainIndex.build(spark, corpus, idx)
+    assert(ContainIndex.tombstoneRatio(spark, idx) === 0.0)
+    val indexed = ContainIndex.load(spark, idx).sets.count()
     val delta = docs.filter($"doc_id" % 5 === 4)
     val before = pairSet(ContainIndex.probe(spark, idx, delta))
     assert(before.nonEmpty)
@@ -193,6 +200,8 @@ class IndexTombstoneSpec extends SparkSpec {
     val dropIds = corpusSides.toSeq.sorted.take(2)
     assert(ContainIndex.delete(spark, idx,
       dropIds.toDF("doc_id"), "takedown-a"))
+    assert(ContainIndex.tombstoneRatio(spark, idx) ===
+      dropIds.size.toDouble / indexed)
     val after = pairSet(ContainIndex.probe(spark, idx, delta))
     assert(after === before.filterNot(p =>
       dropIds.contains(p._1) || dropIds.contains(p._2)))
@@ -201,6 +210,7 @@ class IndexTombstoneSpec extends SparkSpec {
     val dfBefore = new File(currentVerDir(idx), "df").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     assert(ContainIndex.purge(spark, idx))
+    assert(ContainIndex.tombstoneRatio(spark, idx) === 0.0)
     val ver = currentVerDir(idx)
     for (t <- Seq("tokens", "prefix", "sets"))
       assert(dropIds.forall(!rawIds(ver, t, "doc_id").contains(_)),

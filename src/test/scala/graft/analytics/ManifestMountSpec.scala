@@ -49,6 +49,32 @@ class ManifestMountSpec extends SparkSpec {
     if (d.exists()) w(d) else Nil
   }
 
+  test("a published mount whose _mounted marker was removed is rebuilt, " +
+      "and the returned dir always holds the marker") {
+    val idx = java.nio.file.Files.createTempDirectory("graft-mount-mark")
+      .toFile
+    val src = new File(idx, "v0/t")
+    src.mkdirs()
+    val files = (0 until 3).map { i =>
+      val f = new File(src, f"part-0000$i-x_0000$i.c000.snappy.parquet")
+      java.nio.file.Files.write(f.toPath, Array[Byte](1))
+      f
+    }
+    val entries = files.map(f => s"t/${f.getName}" -> f)
+    val first = IndexLayout.mountManifest(idx.toString, "t", 0L, entries)
+    assert(new File(first, "_mounted").isFile)
+    // the published tree loses its marker and one of its links
+    assert(new File(first, "_mounted").delete())
+    assert(new File(first, files.head.getName).delete())
+    val again = IndexLayout.mountManifest(idx.toString, "t", 0L, entries)
+    assert(again === first)
+    assert(new File(again, "_mounted").isFile,
+      "mount returned without its _mounted marker")
+    assert(files.forall(f => java.nio.file.Files.isSymbolicLink(
+      new File(again, f.getName).toPath)),
+      "the unmarked mount was reused instead of rebuilt")
+  }
+
   test("manifest probe plan parity: mounted tables register bucketed, " +
       "the corpus side never exchanges, pairs match the link twin, and " +
       "the mount is all symlinks (zero copies, zero hard links)") {
