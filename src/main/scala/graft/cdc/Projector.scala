@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.{Column, Dataset, functions}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -32,6 +32,14 @@ import graft.model._
   * source partition).
   */
 object Projector {
+
+  /** The column lists of a table whose DDL changed it inside the projected
+    * range: `initial` is in force before the first change, and each
+    * `(position, columns)` change from its `(file, logPos)` on. Changes are
+    * in log order.
+    */
+  final case class ColumnHistory(initial: Seq[String],
+      changes: Seq[((String, Long), Seq[String])])
 
   /** Zip one positional row image with its ordered column names. */
   def zipRow(columns: Seq[String], row: Seq[String]): Map[String, String] =
@@ -102,14 +110,18 @@ object Projector {
     *     units — rows 1:1 for insert/delete, consecutive (i, i+1) pairs for
     *     update — then ONE `explode` emits the envelopes;
     *   - named images are `map_from_arrays(cols, image)` — the codegen'd
-    *     equivalent of [[zipRow]].
+    *     equivalent of [[zipRow]];
+    *   - a table in `evolved` (DDL changed it inside the range) instead
+    *     takes the column list in force at each event's `(file, logPos)`
+    *     — log-order DDL.
     * Semantic equivalence with [[projectEvent]] (the executable spec of the
     * reference's `process.go:114-214`) is pinned by `ProjectorSpec`.
     */
   def project(
       events: Dataset[RawBinlogEvent],
       schemaSnapshot: Map[String, Seq[String]],
-      filter: TaskFilter = TaskFilter.allowAll
+      filter: TaskFilter = TaskFilter.allowAll,
+      evolved: Map[String, ColumnHistory] = Map.empty
   ): Dataset[MQEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -118,14 +130,33 @@ object Projector {
     // stability). An EMPTY snapshot must still go through the Column
     // pipeline — returning a fresh empty Dataset would silently change a
     // STREAMING input into a batch one; a null lookup drops every row via
-    // the cols.isNotNull filter instead.
-    val schemaLookup: Column =
+    // the cols.isNotNull guard instead.
+    val tableKey = concat_ws(".", $"database", $"table")
+    val literalLookup: Column =
       if (schemaSnapshot.isEmpty) lit(null).cast("array<string>")
       else element_at(
         map(schemaSnapshot.toSeq.sortBy(_._1).flatMap { case (k, cols) =>
           Seq(lit(k), array(cols.map(lit): _*))
         }: _*),
-        concat_ws(".", $"database", $"table"))
+        tableKey)
+    // tables DDL changed inside the range, as ONE literal map — table →
+    // each change's position with the column list in force before it, in
+    // log order — so the plan's shape (and its generated code) does not
+    // depend on how many tables or changes a batch holds. An event takes
+    // the list of the first change ahead of it; past every change, the
+    // snapshot's (final) list.
+    val schemaLookup: Column =
+      if (evolved.isEmpty) literalLookup
+      else {
+        val ahead = typedLit(evolved.map { case (k, h) =>
+          k -> h.changes.map(_._1).zip(h.initial +: h.changes.map(_._2))
+            .map { case ((file, pos), cols) => (file, pos, cols) }
+        })
+        val segment = coalesce($"file", lit(""))
+        val pending = functions.filter(element_at(ahead, tableKey), c =>
+          segment < c("_1") || (segment === c("_1") && $"logPos" < c("_2")))
+        coalesce(try_element_at(pending, lit(1)).getField("_3"), literalLookup)
+      }
 
     val action = when($"eventType" === "write_rows", Actions.Insert)
       .when($"eventType" === "update_rows", Actions.Update)
@@ -156,17 +187,19 @@ object Projector {
       .withColumn("action", action)
       .filter($"action".isNotNull)
       .withColumn("cols", schemaLookup)
-      .filter($"cols".isNotNull)
-      // arity guard (process.go:192-196): ANY mismatched row image drops
-      // the whole event — schema drift mid-stream must not emit misaligned
-      // maps
-      .filter(forall($"rows", r => size(r) === size($"cols")))
       .select($"database", $"table", $"action", $"cols",
         $"timestamp", $"logPos", $"file",
-        explode(
+        // an unknown table and the arity guard (process.go:192-196: ANY
+        // mismatched row image drops the whole event — schema drift
+        // mid-stream must not emit misaligned maps) explode to nothing.
+        // Guarding here, not in a filter, keeps the lookup to one
+        // evaluation per event: a filter would be pushed below the
+        // lookup's projection with `cols` inlined into it.
+        explode(when($"cols".isNotNull &&
+            forall($"rows", r => size(r) === size($"cols")),
           when($"action" === Actions.Insert, insertUnits)
             .when($"action" === Actions.Delete, deleteUnits)
-            .otherwise(updateUnits)).as("u"))
+            .otherwise(updateUnits))).as("u"))
       .select(
         $"database", $"table", $"action",
         named($"u.b").as("before"),

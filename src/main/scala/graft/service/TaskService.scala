@@ -50,7 +50,7 @@ final case class TaskConfig(
     // temporal complement: when non-empty the task ALSO appends every
     // batch's keyed changes to a CdcHistoryTable changelog under
     // <sink_dir>/_history (SCD2 + time-travel reads), auto-compacted
-    // every `compactEvery` batches from the SAME foreachBatch loop — the
+    // every `compactEvery` batches by the thread that appends — the
     // single-writer seat the compaction transaction requires
     historyPk: Map[String, String] = Map.empty,
     compactEvery: Int = 8) {
@@ -248,25 +248,27 @@ final class TaskService(spark: SparkSession, store: TaskStore) {
         // up to three consumers of one batch: cache so the projection
         // runs once
         val cached = envs.persist()
-        try {
+        val envelopeWrite = () =>
           graft.cdc.Envelope.toKafkaFrame(cached, c.taskId)
             .write.mode("append").parquet(c.sinkDir)
-          serving.foreach(_.merge(cached))
-          history.foreach { h =>
-            h.append(cached)
-            // compaction from the sink loop itself — the single-writer
-            // seat CdcHistoryTable.compact's contract requires. Cadence
-            // keys on the CHECKPOINTED batchId, not an in-memory counter:
-            // a counter restarts at 0 with the process, and a deployment
-            // that bounces more often than compactEvery batches would
-            // starve compaction forever. prune keeps two versions so an
-            // in-flight reader never loses its snapshot.
-            if ((batchId + 1) % c.compactEvery == 0) {
-              h.compact(cached.sparkSession)
-              h.prune()
-            }
+        val merge = serving.map(s => () => s.merge(cached))
+        val append = history.map(h => () => {
+          h.append(cached)
+          // compaction on the appending thread — the single-writer seat
+          // CdcHistoryTable.compact's contract requires. Cadence keys on
+          // the CHECKPOINTED batchId, not an in-memory counter: a counter
+          // restarts at 0 with the process, and a deployment that bounces
+          // more often than compactEvery batches would starve compaction
+          // forever. prune keeps two versions so an in-flight reader
+          // never loses its snapshot.
+          if ((batchId + 1) % c.compactEvery == 0) {
+            h.compact(cached.sparkSession)
+            h.prune()
           }
-        } finally { cached.unpersist(); () }
+        })
+        try TaskService.runConcurrently(s"cdc-sink-${c.taskId}-$batchId",
+          Seq(envelopeWrite) ++ merge ++ append)
+        finally { cached.unpersist(); () }
       },
       trigger)
     tasks.put(c.taskId, Running(c, registry, pipeline, query))
@@ -356,4 +358,51 @@ final class TaskService(spark: SparkSession, store: TaskStore) {
 
   private def withTask[A](id: String)(f: Running => A): Either[String, A] =
     Option(tasks.get(id)).map(r => Right(f(r))).getOrElse(Left(s"no task $id"))
+}
+
+object TaskService {
+
+  /** Runs a batch's sink consumers and returns once every one has
+    * finished. One consumer runs inline; several run on threads started
+    * here, so each inherits the caller's Spark local properties — the
+    * stream's job group, which `query.stop()` cancels, and its SQL
+    * execution id. A failure surfaces only after all have finished: the
+    * first consumer's in `bodies` order, with the others' suppressed. An
+    * interrupt of the caller interrupts every consumer, waits for them,
+    * then rethrows.
+    */
+  private[graft] def runConcurrently(name: String,
+      bodies: Seq[() => Unit]): Unit = bodies match {
+    case Seq(only) => only()
+    case _ =>
+      val failures = new Array[Throwable](bodies.size)
+      val threads = bodies.zipWithIndex.map { case (body, i) =>
+        val t = new Thread(() =>
+          try body() catch { case e: Throwable => failures(i) = e },
+          s"$name-$i")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      try threads.foreach(_.join())
+      catch {
+        case e: InterruptedException =>
+          threads.foreach(_.interrupt())
+          threads.foreach(joinUninterruptibly)
+          throw e
+      }
+      failures.filter(_ != null) match {
+        case Array() => ()
+        case Array(first, rest @ _*) =>
+          rest.foreach(first.addSuppressed)
+          throw first
+      }
+  }
+
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+  }
 }

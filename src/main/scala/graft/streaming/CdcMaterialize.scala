@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SessionRebind, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.MQEvent
@@ -304,7 +304,9 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     * commit cost dominates its tiny data).
     */
   def merge(envelopes: Dataset[MQEvent], pruneKeep: Int): Unit = {
-    val spark = envelopes.sparkSession
+    val caller = envelopes.sparkSession
+    val spark = mergeSession(caller)
+    val sc = spark.sparkContext
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     // phase timing for targeted profiling only (SPARK_GRAFT_MERGE_DEBUG):
     // wall clock plus Spark job/stage/task counts per phase, so a slow
@@ -313,20 +315,21 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
+    def ours(p: java.util.Properties): Boolean =
+      p != null && p.getProperty(CdcServingTable.MergeTag) == dir
     val listener = if (!dbg) null else {
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (ours(j.properties)) { jobs.incrementAndGet(); () }
         override def onStageSubmitted(
             s: org.apache.spark.scheduler.SparkListenerStageSubmitted)
-            : Unit = {
+            : Unit = if (ours(s.properties)) {
           stages.incrementAndGet()
           tasks.addAndGet(s.stageInfo.numTasks); ()
         }
       }
-      spark.sparkContext.addSparkListener(l)
+      sc.addSparkListener(l)
       l
     }
     var t0 = System.nanoTime()
@@ -337,7 +340,8 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         f"tasks=${tasks.getAndSet(0)}")
       t0 = t
     }
-    val keyed = CdcKeyed.changes(envelopes, pkOf)
+    // planned and run under the merge session's conf, not the caller's
+    val keyed = SessionRebind.rebind(CdcKeyed.changes(envelopes, pkOf), spark)
       // two driver consumers (the fused stats/touched collect, the merge
       // union) — one compute
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -351,22 +355,20 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     // by the batch: the stats aggregation's reduce side is bounded by
     // |tables| × buckets AT ANY SCALE (count/sum/bucket-set per table),
     // so it runs AQE-off unconditionally; the write keeps AQE exactly
-    // when the batch is big enough for runtime coalescing to matter
-    // (estimated bytes ≥ spark.graft.cdc.merge.aqe.minBytes, default
-    // 256 MB — a batch that size has real shuffles to re-plan).
-    def withAqe[T](on: Boolean)(body: => T): T = {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(key, "true")
-      if (on == (prev == "true")) body
-      else {
-        spark.conf.set(key, on.toString)
-        try body finally spark.conf.set(key, prev)
-      }
+    // when the rewrite is big enough for runtime coalescing to matter
+    // (estimated bytes ≥ AqeMinBytes, 256 MB — a rewrite that size has
+    // real shuffles to re-plan). Each phase sets both values on the merge
+    // session, whose conf nothing else reads or writes.
+    val callerParts = caller.conf.get("spark.sql.shuffle.partitions").toInt
+    def phase(aqe: Boolean, parts: Int): Unit = {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toLong)
     }
-    val aqeMinBytes: Long =
-      spark.conf.getOption("spark.graft.cdc.merge.aqe.minBytes")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .getOrElse(256L << 20)
+    // every job this call submits carries the store dir as a local
+    // property: the merge runs beside other consumers of the same batch,
+    // and a listener tells its jobs from theirs by this tag
+    val prevTag = sc.getLocalProperty(CdcServingTable.MergeTag)
+    sc.setLocalProperty(CdcServingTable.MergeTag, dir)
     try {
       val prev = currentVersion
       val prevDir = prev.map(pv => new java.io.File(dir, s"v$pv"))
@@ -394,27 +396,21 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
       // rewrite of the table it just wrote (estimate and measurement
       // must live on the same scale for the 2x hysteresis to absorb
       // their disagreement)
-      val statRows = withAqe(on = false) {
+      val statRows = {
         // reduce-side sizing for the AQE-off aggregation: the partials
         // are bounded by map-partitions × |tables| (× bucket-set size),
         // so reducers scale with the INPUT's parallelism (÷8, floor 1,
         // cap session parallelism) — a micro-batch's 1-partition keyed
         // frame reduces in one task instead of the session constant's
         // 32 empties, a 100 k-partition bootstrap still fans out.
-        val statsParts = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism,
-          keyed.rdd.getNumPartitions / 8))
-        val partsKey = "spark.sql.shuffle.partitions"
-        val prevParts = spark.conf.get(partsKey)
-        spark.conf.set(partsKey, statsParts.toString)
-        try {
-          val q = keyed.groupBy(col("tbl"))
-            .agg(count(lit(1)).as("n"),
-              sum(length(col("after_json"))).as("jb"),
-              collect_set(bucketColFor(prevCounts)).as("bks"))
-          if (dbg) { q.queryExecution.executedPlan; lap("stats-plan") }
-          q.collect()
-        } finally spark.conf.set(partsKey, prevParts)
+        phase(aqe = false, parts = math.max(1, math.min(
+          sc.defaultParallelism, keyed.rdd.getNumPartitions / 8)))
+        val q = keyed.groupBy(col("tbl"))
+          .agg(count(lit(1)).as("n"),
+            sum(length(col("after_json"))).as("jb"),
+            collect_set(bucketColFor(prevCounts)).as("bks"))
+        if (dbg) { q.queryExecution.executedPlan; lap("stats-plan") }
+        q.collect()
       }
       lap("stats-collect")
       val tblStats: Map[String, Long] = statRows.map { r =>
@@ -458,25 +454,23 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // snapshot asks for, and on the one-time no-sidecar/legacy
         // migration rewrite every existing table gets the count its
         // observed bytes ask for, not the constructor constant
+        val migratedTbls: Seq[String] =
+          if (rebucketAll && prevDir.isDefined)
+            Option(prevDir.get.listFiles())
+              .getOrElse(Array.empty[java.io.File])
+              .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
+              .map(d => ExternalCatalogUtils
+                .unescapePathName(d.getName.stripPrefix("tbl=")))
+              .toSeq
+          else Seq.empty
         val seeded: Map[String, Int] =
           if (autoSizeTargetBytes <= 0) Map.empty
-          else {
-            val prevTbls =
-              if (rebucketAll && prevDir.isDefined)
-                Option(prevDir.get.listFiles())
-                  .getOrElse(Array.empty[java.io.File])
-                  .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
-                  .map(d => ExternalCatalogUtils
-                    .unescapePathName(d.getName.stripPrefix("tbl=")))
-                  .toSeq
-              else Seq.empty
-            (prevTbls ++ touchedTbls).distinct
-              .filterNot(prevCounts.contains)
-              .map { t =>
-                t -> sizedBuckets(math.max(prevTableBytes(t),
-                  tblStats.getOrElse(t, 0L)))
-              }.toMap
-          }
+          else (migratedTbls ++ touchedTbls).distinct
+            .filterNot(prevCounts.contains)
+            .map { t =>
+              t -> sizedBuckets(math.max(prevTableBytes(t),
+                tblStats.getOrElse(t, 0L)))
+            }.toMap
         val counts = prevCounts ++ seeded ++ resized
         val pkbCol = bucketColFor(counts)
         // touched (tbl, bucket) list under the SETTLED counts — bounded
@@ -501,13 +495,13 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
               r.getString(0) -> r.getSeq[Long](3)
           }.toMap
           val recomputed: Map[String, Seq[Long]] =
+            // bounded like the stats reduce (whose AQE-off conf is still
+            // in force): ≤ |tables| × buckets rows
             if (changed.isEmpty) Map.empty
-            else withAqe(on = false) {
-              // bounded like the stats reduce: ≤ |tables| × buckets rows
-              keyed.filter(col("tbl").isin(changed.toSeq: _*))
-                .select(col("tbl"), pkbCol.as("pkb")).distinct()
-                .collect()
-            }.map(r => (r.getString(0), r.getLong(1)))
+            else keyed.filter(col("tbl").isin(changed.toSeq: _*))
+              .select(col("tbl"), pkbCol.as("pkb")).distinct()
+              .collect()
+              .map(r => (r.getString(0), r.getLong(1)))
               .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
           stable ++ recomputed
         }
@@ -566,38 +560,46 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // pmod(hash, groups) — ~1/3 of a 5-table bootstrap's groups
         // shared a task and the big write ran ×2 slower — while the
         // empty tasks the cap avoided commit in ~a millisecond each.
-        // batch-derived shuffle sizing for the AQE-off write (the
+        // rewrite-derived shuffle sizing for the AQE-off write (the
         // coalescing AQE would have done, priced from the stats already
-        // in hand): estimated batch bytes at a 64 MB/partition target,
-        // floor 1, cap session parallelism — a micro-batch's write
-        // exchanges run 1-2 tasks instead of 2 × the session constant,
-        // a bootstrap-sized batch still fans out to every core. The r20
+        // in hand): estimated bytes at a 64 MB/partition target, floor 1,
+        // cap session parallelism — a micro-batch's write exchanges run
+        // 1-2 tasks instead of 2 × the session constant, a bootstrap-sized
+        // batch still fans out to every core. The bytes are the batch's
+        // plus the base it rewrites: each plain table's recorded total ×
+        // touched buckets ÷ its bucket count, a resized table whole, the
+        // whole store on a migration — a few rows touching k large
+        // buckets must not funnel k buckets through one reducer. The r20
         // caution about capping at the OUTPUT-GROUP count (pmod
         // collisions ran the big write ×2 slower) does not apply: this
-        // cap scales with bytes, so only tiny batches collapse, and
+        // cap scales with bytes, so only tiny rewrites collapse, and
         // their groups are tiny too.
-        val estBytes = tblStats.values.sum
-        val aqeOn = estBytes >= aqeMinBytes
+        val baseBytes =
+          if (rebucketAll) migratedTbls.map(prevTableBytes).sum
+          else statRows.map { r =>
+            val t = r.getString(0)
+            if (resized.contains(t)) prevTableBytes(t)
+            else prevCounts.get(t).fold(0L)(n =>
+              prevTableBytes(t) * r.getSeq[Long](3).size / n)
+          }.sum
+        val estBytes = tblStats.values.sum + baseBytes
+        val aqeOn = estBytes >= CdcServingTable.AqeMinBytes
         val writeParts = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong,
+          sc.defaultParallelism.toLong,
           estBytes / (64L << 20) + 1L)).toInt
-        val partsKey = "spark.sql.shuffle.partitions"
-        val prevParts = spark.conf.get(partsKey)
-        if (!aqeOn) spark.conf.set(partsKey, writeParts.toString)
-        try withAqe(on = aqeOn) {
-          // at writeParts == 1 the agg's single output partition is
-          // already trivially clustered on (tbl, pkb) — the pre-write
-          // exchange would be a 1→1 pass-through stage, so skip it
-          // (still exactly one file per touched bucket dir; one fewer
-          // scheduling wave per micro merge)
-          val clustered =
-            if (!aqeOn && writeParts == 1) next
-            else next.repartition(col("tbl"), col("pkb"))
-          if (dbg) { clustered.queryExecution.executedPlan; lap("write-plan") }
-          clustered
-            .write.mode("overwrite").partitionBy("tbl", "pkb")
-            .parquet(nextDir.toString)
-        } finally if (!aqeOn) spark.conf.set(partsKey, prevParts)
+        phase(aqe = aqeOn, parts = if (aqeOn) callerParts else writeParts)
+        // at writeParts == 1 the agg's single output partition is already
+        // trivially clustered on (tbl, pkb) — the pre-write exchange would
+        // be a 1→1 pass-through stage, so skip it (still exactly one file
+        // per touched bucket dir; one fewer scheduling wave per micro
+        // merge)
+        val clustered =
+          if (!aqeOn && writeParts == 1) next
+          else next.repartition(col("tbl"), col("pkb"))
+        if (dbg) { clustered.queryExecution.executedPlan; lap("write-plan") }
+        clustered
+          .write.mode("overwrite").partitionBy("tbl", "pkb")
+          .parquet(nextDir.toString)
         lap("write")
         // PRE-link snapshot of the new version: it holds exactly the
         // bucket dirs this merge rewrote (incl. conjunctive-pruning
@@ -659,9 +661,23 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
       if (pruneKeep > 0) { VersionedStore.prune(dir, pruneKeep); lap("prune") }
     } finally {
       keyed.unpersist()
-      if (listener != null) spark.sparkContext.removeSparkListener(listener)
-      ()
+      if (listener != null) sc.removeSparkListener(listener)
+      sc.setLocalProperty(CdcServingTable.MergeTag, prevTag)
     }
+  }
+
+  /** The merge's own session: a `newSession()` of the caller's, made once
+    * per context. It shares the context and the cache (`SharedState`) but
+    * not the SQL conf, so the AQE flag and shuffle partition counts each
+    * merge phase sets never reach the caller's session, on which other
+    * consumers of the same batch plan at the same time.
+    */
+  private var own: SparkSession = _
+
+  private def mergeSession(caller: SparkSession): SparkSession = synchronized {
+    if (own == null || (own.sparkContext ne caller.sparkContext))
+      own = caller.newSession()
+    own
   }
 
   /** Seed an EMPTY store from a consistent initial-load snapshot — the
@@ -701,6 +717,12 @@ object CdcServingTable {
     */
   val DefaultTargetBucketBytes: Long =
     graft.analytics.Bucketing.DefaultTargetBucketBytes
+
+  /** Estimated rewrite bytes from which a merge's write keeps AQE on. */
+  val AqeMinBytes: Long = 256L << 20
+
+  /** Local property naming the store on every job a merge submits. */
+  val MergeTag = "graft.cdc.merge"
 }
 
 /** CDC → queryable FULL-HISTORY table — the temporal complement of

@@ -19,10 +19,10 @@ import graft.registry.SchemaRegistry
   *     `foreachBatch` — an in-flight update applies on the next batch
   *     without restarting the query, matching the reference's RW-locked
   *     read at `process.go:27-38`;
-  *   - schema registry (P7): the projection broadcast is re-snapshotted per
-  *     micro-batch, so binlog DDL applied between batches is visible to the
-  *     batch after it — same ordering the reference gets from its
-  *     single-threaded loop.
+  *   - schema registry (P7): DDL applies in log order, as in the
+  *     reference's single-threaded loop — each rows event is projected with
+  *     its table's column list as of the event's `(file, logPos)`, whether
+  *     the DDL sits in an earlier micro-batch or earlier in the same one.
   *
   * Delivery: at-least-once end-to-end (checkpointed source offsets + sink
   * replay on recovery) — parity with the reference (`pkg/shared.go:21-22`).
@@ -49,9 +49,10 @@ final class CdcPipeline(
   /** Start the streaming query: micro-batches through the same projection,
     * sink chosen by the caller via `writer` (Kafka in production —
     * `format("kafka").option("kafka.acks","all")` — parquet/memory in
-    * tests). DDL events in each batch are applied to the registry BEFORE
-    * the rows of the NEXT batch are projected; within a batch the snapshot
-    * is stable.
+    * tests). A batch's DDL events are applied to the registry in
+    * `(file, logPos)` order before its rows are projected, and each rows
+    * event binds to the column list in force at its own position: rows
+    * ahead of an `ALTER` of their table keep the pre-`ALTER` columns.
     */
   def start(
       events: Dataset[RawBinlogEvent],
@@ -87,13 +88,19 @@ final class CdcPipeline(
           .collect() // DDL is rare + tiny; rows never pass this filter
         // order across segment rotation: logPos resets per binlog segment,
         // so sort by (file, logPos) — segment names are monotonic
-        ddl.sortBy(e => (Option(e.file).getOrElse(""), e.logPos)).foreach { e =>
-          val stmt = Option(e.query).getOrElse("")
-          if (!stmt.trim.equalsIgnoreCase("begin") &&
-              f.acceptsDatabase(e.database))
-            registry.applyDdl(e.database, stmt)
+        val before = registry.snapshot()
+        val changes = ddl.sortBy(e => (Option(e.file).getOrElse(""), e.logPos))
+          .flatMap { e =>
+            val stmt = Option(e.query).getOrElse("")
+            if (stmt.trim.equalsIgnoreCase("begin") ||
+                !f.acceptsDatabase(e.database)) None
+            else registry.applyDdl(e.database, stmt).map(s =>
+              s.key -> ((Option(e.file).getOrElse(""), e.logPos), s.columnNames))
+          }
+        val evolved = changes.groupBy(_._1).map { case (k, cs) =>
+          k -> Projector.ColumnHistory(before(k), cs.map(_._2).toSeq)
         }
-        sink(Projector.project(batch, registry.snapshot(), f), batchId)
+        sink(Projector.project(batch, registry.snapshot(), f, evolved), batchId)
       }
       .queryName(s"cdc-$taskId")
       .start()

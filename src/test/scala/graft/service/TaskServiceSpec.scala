@@ -327,4 +327,86 @@ class TaskServiceSpec extends SparkSpec {
       assert(await(sinkCount(sink) == 3L), "recovered task resumes from checkpoint")
     } finally s2.stopAll()
   }
+
+  test("a trigger's sink consumers run concurrently: one failing fails the " +
+      "batch only after the others finished, and a restart converges") {
+    val src = Files.createTempDirectory("svc9-src")
+    val sink = Files.createTempDirectory("svc9-sink")
+    val ckpt = Files.createTempDirectory("svc9-ckpt")
+    val upd = s"""{"file":"b.1","logPos":3,"timestamp":1003,"eventType":"update_rows","database":"shop","table":"orders","rows":[["1","n1"],["1","N1"]],"errorCode":0,"position":0}"""
+    val del = s"""{"file":"b.1","logPos":4,"timestamp":1004,"eventType":"delete_rows","database":"shop","table":"orders","rows":[["2","n2"]],"errorCode":0,"position":0}"""
+    seg(src, "b.000001.jsonl",
+      Seq(line(1, "orders", 1), line(2, "orders", 2), upd, del))
+    // the envelope write fails: a file holds its job-attempt dir's name
+    val blocker = sink.resolve("_temporary")
+    Files.write(blocker, Array.emptyByteArray)
+    val store = new TaskStore(Files.createTempDirectory("svc9-store"))
+    val service = new TaskService(spark, store)
+    val pk = Map("shop.orders" -> "id")
+    val cfg = TaskConfig("t9", src.toString, sink.toString, ckpt.toString,
+      databases = Seq("shop"), schemas = Seq(graft.model.TableSchema("shop",
+        "orders", Seq(graft.model.ColumnDef("id", "bigint"),
+          graft.model.ColumnDef("name", "varchar(50)")))),
+      materializePk = pk, historyPk = pk)
+    val serving = new graft.streaming.CdcServingTable(s"$sink/_serving", pk)
+    val hist = new graft.streaming.CdcHistoryTable(s"$sink/_history", pk)
+    def live = serving.snapshot(spark).collect()
+      .map(r => r.getAs[String]("pk") -> r.getAs[String]("after_json")).toMap
+    try {
+      assert(service.postTask(cfg).isRight)
+      assert(await(service.get("t9").exists(!_.query.isActive)))
+      assert(service.get("t9").exists(_.query.exception.isDefined),
+        "the envelope write must fail the batch")
+      // the batch failed only after the merge and the append had finished
+      assert(sinkCount(sink) === 0L)
+      assert(live.keySet === Set("1"))
+      assert(hist.changelog(spark).count() === 4L)
+
+      // restart from the checkpoint: the failed batch runs again
+      Files.delete(blocker)
+      assert(service.restorationTask("t9").isRight)
+      assert(await(service.get("t9").exists(!_.query.isActive)))
+      service.get("t9").flatMap(r => Option(r.query.exception.orNull))
+        .foreach(e => fail(s"query failed: ${e.cause}", e))
+      assert(sinkCount(sink) === 4L)
+      // serving is last-writer-wins; history holds every keyed change once
+      // (the rerun appended the batch again, which its reads collapse)
+      assert(live.keySet === Set("1") && live("1").contains("N1"), s"$live")
+      assert(hist.history(spark).count() === 4L)
+    } finally service.stopAll()
+  }
+
+  test("query.stop() during a fanned-out batch cancels its consumers and " +
+      "leaves none of their threads alive") {
+    import scala.jdk.CollectionConverters._
+    val src = Files.createTempDirectory("svc10-src")
+    val ckpt = Files.createTempDirectory("svc10-ckpt")
+    seg(src, "b.000001.jsonl", Seq(line(1, "orders", 1)))
+    val started = new java.util.concurrent.CountDownLatch(2)
+    // each consumer runs a job that only a cancel ends early
+    val slow = () => {
+      started.countDown()
+      spark.sparkContext.parallelize(1 to 2, 2)
+        .foreach(_ => Thread.sleep(120000))
+    }
+    val pipeline = new graft.streaming.CdcPipeline("t10",
+      new graft.registry.SchemaRegistry())
+    val q = pipeline.startProjected(
+      graft.sources.BinlogReplay.streamLog(spark, src.toString),
+      ckpt.toString,
+      (_, batchId) => TaskService.runConcurrently(s"t10-sink-$batchId",
+        Seq(slow, slow)),
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val stopper = new Thread(() => q.stop())
+    stopper.start()
+    stopper.join(30000)
+    assert(!stopper.isAlive, "stop() did not return within 30 s")
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith("t10-sink-")))
+    // the consumers' jobs were cancelled with the stream's job group, not
+    // left running
+    assert(await(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      10000))
+  }
 }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.cdc.TaskFilter
 import graft.model.{ColumnDef, EventHeader, MQEvent, TableSchema}
@@ -501,5 +503,82 @@ class CdcMaterializeSpec extends SparkSpec {
     assert(rows("1").contains("u1"))
     (1L to 64L).foreach(i => assert(rawRowsFor(t, i.toString) === 1L,
       s"key $i duplicated across the seed/resize path"))
+  }
+
+  /** Result-stage task count of every job a merge into `dir` submits, in
+    * submission order.
+    */
+  private def mergeJobTasks(dir: String)(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty(CdcServingTable.MergeTag) == dir)
+          tasks.add(j.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try body finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    tasks.asScala.toSeq
+  }
+
+  test("write sizing prices the base a merge rewrites: one row into a " +
+      "large bucket fans the write out by the bucket's recorded bytes") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cdc-size").toString
+    val t = new CdcServingTable(dir, Map("shop.orders" -> "id"),
+      buckets = 16, autoSizeTargetBytes = 0)
+    t.merge(Seq(env("insert", 1, "a", 10, 1), env("insert", 2, "b", 10, 2))
+      .toDS())
+    // the store records 16 buckets of 150 MB; the next merge rewrites one
+    Files.write(new java.io.File(dir, "v0/_BYTES").toPath,
+      s"shop.orders\t${16L * 150 * (1L << 20)}".getBytes)
+    val tasks = mergeJobTasks(dir) {
+      t.merge(Seq(env("update", 1, "A", 11, 3)).toDS())
+    }
+    // 150 MB at 64 MB a partition, under the 256 MB AQE floor: the write
+    // (the merge's last job) runs 3 reducers — a batch-only estimate
+    // gave 1
+    assert(tasks.last === 3, s"merge jobs' result-stage tasks: $tasks")
+    assert(liveRows(t).keySet === Set("1", "2"))
+    assert(liveRows(t)("1").contains("\"A\""))
+  }
+
+  test("a merge never writes the caller's session conf: a shuffle query " +
+      "beside it on the same session keeps its own partition count") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    val t = new CdcServingTable(
+      Files.createTempDirectory("cdc-conc").toString, Map("shop.orders" -> "id"))
+    def confNow = (spark.conf.get("spark.sql.shuffle.partitions"),
+      spark.conf.get("spark.sql.adaptive.enabled"))
+    val conf0 = confNow
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val other = new Thread(() =>
+      while (!done.get()) {
+        seen.add(s"conf $confNow")
+        val q = spark.range(0, 1000).groupBy(col("id") % 7).count()
+        val physical = q.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        physical.collect { case e: ShuffleExchangeExec => e.numPartitions }
+          .foreach(n => seen.add(s"partitions $n"))
+        seen.add(s"rows ${q.collect().length}")
+      })
+    other.start()
+    try (1 to 3).foreach { i =>
+      t.merge(Seq(env("insert", i, s"n$i", 10 + i, i)).toDS())
+    } finally { done.set(true); other.join() }
+    assert(seen.asScala.toSet === Set(s"conf $conf0",
+      s"partitions ${conf0._1}", "rows 7"))
+    assert(confNow === conf0)
+    assert(liveRows(t).keySet === Set("1", "2", "3"))
   }
 }

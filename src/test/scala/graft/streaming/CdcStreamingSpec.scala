@@ -12,8 +12,8 @@ import graft.sources.BinlogReplay
 
 /** End-to-end Structured Streaming CDC: file replay source → filter →
   * project → envelope → sink, plus the reference's control-plane semantics —
-  * checkpoint resume (S3), live filter swap (C4), DDL schema evolution
-  * applied between micro-batches (P7).
+  * checkpoint resume (S3), live filter swap (C4), DDL schema evolution in
+  * log order, across and within micro-batches (P7).
   */
 class CdcStreamingSpec extends SparkSpec {
 
@@ -110,5 +110,39 @@ class CdcStreamingSpec extends SparkSpec {
       .reduce(_ ++ _)
     assert(vals.size == 1)
     assert(vals.head.contains(""""note":"hello""""))
+  }
+
+  test("P7: DDL inside a batch applies in log order — rows ahead of the " +
+      "ALTER keep the old columns, rows after it take the new ones") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("cdc-src4")
+    val ckpt = Files.createTempDirectory("cdc-ckpt4")
+    val reg = registry()
+    val p = new CdcPipeline("t4", reg, TaskFilter(databases = Seq("shop")))
+    val got = collection.mutable.Buffer.empty[DataFrame]
+    def insert(pos: Long, row: String): String =
+      s"""{"file":"b.1","logPos":$pos,"timestamp":${1000 + pos},"eventType":"write_rows","database":"shop","table":"orders","rows":[$row],"errorCode":0,"position":0}"""
+    // one file, one trigger: insert, ALTER, insert, ALTER, insert on the
+    // same table
+    jsonl(src, "000.jsonl", Seq(
+      insertLine(1, "orders", 1),
+      ddlLine(2, "ALTER TABLE orders ADD COLUMN note varchar(20)"),
+      insert(3, """["2","n2","hi"]"""),
+      insertLine(4, "audit", 3),
+      ddlLine(5, "ALTER TABLE orders DROP COLUMN name"),
+      insert(6, """["4","bye"]""")))
+    runAvailable(p, src, ckpt, got)
+    val vals = got.map(_.select("key", "value").as[(String, String)]
+      .collect().toSeq).reduce(_ ++ _)
+    val orders = vals.filter(_._1 == "shop.orders").map(_._2)
+    assert(orders.size == 3, s"every insert must survive the ALTERs: $vals")
+    assert(orders.exists(v => v.contains(""""id":"1","name":"n1"""") &&
+      !v.contains("note")))
+    assert(orders.exists(v => v.contains(""""id":"2","name":"n2","note":"hi"""")))
+    assert(orders.exists(v => v.contains(""""id":"4","note":"bye"""") &&
+      !v.contains("name")))
+    // a table with no DDL in the trigger projects as before
+    assert(vals.count(_._1 == "shop.audit") == 1)
+    assert(reg.get("shop", "orders").get.columnNames == Seq("id", "note"))
   }
 }
