@@ -39,7 +39,7 @@ object ScaleStress {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-scalestress")
     generate(spark, srcDir, outDir, copiesS.toInt)
     println(s"[scalestress] wrote ${copiesS}x documents+embeddings+events" +
-      s"+graph tables to $outDir")
+      s"+TPC-H tables to $outDir")
     spark.stop()
   }
 
@@ -109,34 +109,32 @@ object ScaleStress {
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
 
-    // TPC-H graph slice (r22, for the pagerank 10× evidence): orderkey/
-    // custkey/suppkey offset per copy — k disjoint copies of the
+    // TPC-H tables (r22, for the pagerank 10× evidence; full width so
+    // every TPC-H query runs against the stress dir): orderkey/custkey/
+    // suppkey offset per copy — k disjoint copies of the
     // supplier→customer edge multigraph concentrating on the SAME 25
     // nations (exactly how TPC-H scale factors grow: rows scale, nation
     // cardinality is fixed), so edge volume grows linearly and the
-    // output stays 25 rows at any scale.
-    val li = GraftSession.table(spark, srcDir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val ord = GraftSession.table(spark, srcDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val cust = GraftSession.table(spark, srcDir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"))
-    val supp = GraftSession.table(spark, srcDir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"))
-    def copied(df: org.apache.spark.sql.DataFrame,
-        keys: Seq[String]): org.apache.spark.sql.DataFrame =
+    // pagerank output stays 25 rows at any scale. Read as raw parquet so
+    // each copy keeps its source schema column for column; only the key
+    // columns change. nation, region and part copy unchanged (every
+    // copy's nation and part keys point into the one set).
+    def copied(table: String, keys: Seq[String]): Unit = {
+      val df = spark.read.parquet(s"$srcDir/$table.parquet")
       (0 until copies).map { k =>
         keys.foldLeft(df)((d, c) =>
           d.withColumn(c, col(c) + lit(k * idOffset)))
       }.reduce(_ unionByName _)
-    copied(li, Seq("l_orderkey", "l_suppkey"))
-      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    copied(ord, Seq("o_orderkey", "o_custkey"))
-      .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    copied(cust, Seq("c_custkey"))
-      .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-    copied(supp, Seq("s_suppkey"))
-      .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
+        .write.mode("overwrite").parquet(s"$outDir/$table.parquet")
+    }
+    copied("lineitem", Seq("l_orderkey", "l_suppkey"))
+    copied("orders", Seq("o_orderkey", "o_custkey"))
+    copied("customer", Seq("c_custkey"))
+    copied("supplier", Seq("s_suppkey"))
+    Seq("nation", "region", "part").foreach { t =>
+      spark.read.parquet(s"$srcDir/$t.parquet")
+        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+    }
 
     val emb = GraftSession.table(spark, srcDir, "embeddings")
     val dims = emb.selectExpr("size(embedding)").first().getInt(0)

@@ -1,7 +1,5 @@
 package graft.analytics
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,14 +33,12 @@ import org.apache.spark.sql.functions._
   * leaves the previous version intact, and probes resolve every table
   * against one pointer read.
   *
-  * TWO LAYOUTS, ONE FAMILY (see [[DedupIndex]]'s class doc for the full
-  * design): the plain directory layout, or the BUCKETED layout
-  * (`build(…, bucketed = true)`, the corpus-scale default) — the same
-  * four tables written as [[IndexLayout]] external bucketed tables
-  * inside the version dirs: `tokens`/`prefix`/`df` bucketBy the token
-  * hash `hx` (this family's keys are single-column already, so no
-  * derived key is needed), `sets` bucketBy `doc_id`. Probes read every
-  * corpus table in place (only delta frames and candidates exchange —
+  * LAYOUT (see [[DedupIndex]]'s class doc for the full design): the
+  * four tables are [[IndexLayout]] external bucketed tables inside the
+  * version dirs — `tokens`/`prefix`/`df` bucketBy the token hash `hx`
+  * (this family's keys are single-column already, so no derived key is
+  * needed), `sets` bucketBy `doc_id`. Probes read every corpus table in
+  * place (only delta frames and candidates exchange —
   * `ContainIndexBucketedSpec`), micro probes BUCKET-PRUNE the postings
   * and df scans to the delta's token set, and admission/compaction
   * preserve the layout.
@@ -51,7 +47,7 @@ object ContainIndex extends DurableIndex {
 
   protected val tables = Seq("tokens", "prefix", "sets", "df")
   val idColumn = "doc_id"
-  protected val clusterKey = Map("tokens" -> "hx", "prefix" -> "hx",
+  protected val bucketKey = Map("tokens" -> "hx", "prefix" -> "hx",
     "sets" -> "doc_id", "df" -> "hx")
   // df (token → document frequency) has no doc-id column: a purge carries
   // it as a LINK — a deleted doc's contribution is an efficiency-only
@@ -81,8 +77,7 @@ object ContainIndex extends DurableIndex {
   /** The (doc_id, sorted hash set, sz) frame of a shingle projection,
     * fragment floor n >= 20 applied — ONE definition (the containRanked
     * precedent) so the floor and the set encoding can never drift
-    * between the artifact build, the probes, and the bucketed layout,
-    * whose pair parity is spec-pinned against each other.
+    * between the artifact build, its admissions and the probes.
     */
   private def setsOf(sh: DataFrame): DataFrame =
     sh.groupBy(col("doc_id"))
@@ -91,14 +86,12 @@ object ContainIndex extends DurableIndex {
       .filter(col("sz") >= 20)
 
   /** Build (or fully REBUILD, re-freshening df) from a `(doc_id, text)`
-    * corpus frame. The BUCKETED layout is the DEFAULT (byte-sized counts
-    * unless `buckets` pins them, full spec recorded in the artifact
-    * meta — see [[DedupIndex.build]]); `bucketed = false` writes the
-    * plain directory layout the parity specs compare against.
+    * corpus frame: byte-sized bucket counts unless `buckets` pins them,
+    * full spec recorded in the artifact meta — see [[DedupIndex.build]].
     */
   def build(spark: SparkSession, docs: DataFrame, indexDir: String,
-      bucketed: Boolean = true, buckets: Int = 0): Unit = {
-    val carrier = beginBuild(spark, bucketed)
+      buckets: Int = 0, manifestCarrier: Boolean = false): Unit = {
+    val carrier = beginBuild(manifestCarrier)
     val sh = shingled(docs).persist()
     // the four tables in write order, ranked by the fresh corpus df:
     // postings tables are (hx, doc_id); df is (hx, df); sets is setsOf's
@@ -111,36 +104,27 @@ object ContainIndex extends DurableIndex {
         "sets" -> setsOf(sh))
     }
     try {
-      if (!bucketed)
-        artifact(indexDir).build { next =>
-          frames(sh.groupBy(col("hx")).agg(count(lit(1)).as("df")))
-            .foreach { case (t, d) =>
-              d.write.mode("overwrite").parquet(new File(next, t).toString)
-            }
-        }
-      else {
-        val dfFrame = sh.groupBy(col("hx")).agg(count(lit(1)).as("df"))
-          .persist()
-        try {
-          // buckets = 0: per-table sizing from bytes (Bucketing
-          // .indexBuckets — 32 MB index target, parallelism floor),
-          // counted on the persisted frames the writes reuse. tokens =
-          // the full posting list at ~16 B/row; prefix ≈ 1/10 of it;
-          // df = one row per DISTINCT token; sets pack the same hashes as
-          // tokens at ~8 B plus per-doc framing. Schema DDLs derive from
-          // the actual frames (metadata-only) — a caller-supplied
-          // non-Long doc_id must register as what the files really hold
-          val shRows = if (buckets > 0) 0L else sh.count()
-          val dfRows = if (buckets > 0) 0L else dfFrame.count()
-          val bytes = Map("df" -> dfRows * 16L, "tokens" -> shRows * 16L,
-            "prefix" -> shRows * 16L / 10, "sets" -> shRows * 9L)
-          buildBucketed(indexDir, carrier, clusterKey,
-            frames(dfFrame).map { case (t, d) =>
-              (t, d, if (buckets > 0) buckets
-                else Bucketing.indexBuckets(spark, bytes(t)))
-            })
-        } finally { dfFrame.unpersist(); () }
-      }
+      val dfFrame = sh.groupBy(col("hx")).agg(count(lit(1)).as("df"))
+        .persist()
+      try {
+        // buckets = 0: per-table sizing from bytes (Bucketing
+        // .indexBuckets — 32 MB index target, parallelism floor), counted
+        // on the persisted frames the writes reuse. tokens = the full
+        // posting list at ~16 B/row; prefix ≈ 1/10 of it; df = one row
+        // per DISTINCT token; sets pack the same hashes as tokens at
+        // ~8 B plus per-doc framing. Schema DDLs derive from the actual
+        // frames (metadata-only) — a caller-supplied non-Long doc_id must
+        // register as what the files really hold
+        val shRows = if (buckets > 0) 0L else sh.count()
+        val dfRows = if (buckets > 0) 0L else dfFrame.count()
+        val bytes = Map("df" -> dfRows * 16L, "tokens" -> shRows * 16L,
+          "prefix" -> shRows * 16L / 10, "sets" -> shRows * 9L)
+        buildTables(indexDir, carrier,
+          frames(dfFrame).map { case (t, d) =>
+            (t, d, if (buckets > 0) buckets
+              else Bucketing.indexBuckets(spark, bytes(t)))
+          })
+      } finally { dfFrame.unpersist(); () }
     } finally { sh.unpersist(); () }
   }
 
@@ -152,12 +136,12 @@ object ContainIndex extends DurableIndex {
     * corpus-sized job on every ingest. Re-freshen df with a periodic
     * [[build]] when probe cost drifts.
     *
-    * WRITE SHAPE (bucketed layout) — L0 ACCRUAL, the standard
-    * LSM/lakehouse trade: `tokens`/`prefix` delta rows land as a fixed
-    * handful of UNBUCKETED parquet files under the table's `_l0` subdir
-    * (`spark.graft.index.append.tasks` files each, default 8 —
-    * underscore dirs are invisible to the registered bucketed table, so
-    * the base files' bucket contract holds), and `sets` appends at the
+    * WRITE SHAPE — L0 ACCRUAL, the standard LSM/lakehouse trade:
+    * `tokens`/`prefix` delta rows land as a fixed handful of UNBUCKETED
+    * parquet files under the table's `_l0` subdir
+    * ([[IndexLayout.AppendTasks]] files each — underscore dirs are
+    * invisible to the registered bucketed table, so the base files'
+    * bucket contract holds), and `sets` appends at the
     * bucket modulus (its rows touch ≤ |delta| buckets — already
     * delta-bounded). Per-admission file count is therefore independent
     * of the corpus's bucket count — the pre-r18 bucketed append wrote
@@ -172,7 +156,7 @@ object ContainIndex extends DurableIndex {
   def append(spark: SparkSession, docs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {
     val art = artifact(indexDir)
-    val meta = art.meta
+    val meta = metaOf(indexDir)
     // frozen corpus df, carrier-aware: a manifest artifact's df is
     // partly (or wholly) carried references with no physical dir
     def corpusDfFrame(): DataFrame =
@@ -261,7 +245,7 @@ object ContainIndex extends DurableIndex {
     * measured in SCALE.md). Batch probes keep the default: a daily
     * delta is not broadcast-bounded.
     *
-    * On the BUCKETED layout, an UNCACHED micro probe goes further
+    * An UNCACHED micro probe goes further
     * ([[DedupIndex.probeLoaded]]'s three-regime design — a CACHED one,
     * the steady state whenever the artifact fits the cluster's storage
     * budget, takes the broadcast-delta plan below over the
@@ -287,7 +271,7 @@ object ContainIndex extends DurableIndex {
     val sh = shingled(deltaDocs)
     val deltaSets = setsOf(sh)
     val corpusSets = loaded.sets
-    if (micro && loaded.bucketed && !IndexLayout.isCached(loaded.tokens)) {
+    if (micro && !IndexLayout.isCached(loaded.tokens)) {
       // TWO eager candidate jobs (one per direction, each reading its
       // corpus posting table once — pruned where the delta's key count
       // clears the table's bucket count), candidates localized, corpus
@@ -371,8 +355,8 @@ object ContainIndex extends DurableIndex {
         .unionByName(DedupQueries.verifyContainmentSplit(corpusSets,
           deltaSets, rawOldInNew.distinct(), micro = true))
         .distinct()
-    else if (loaded.bucketed)
-      // bucketed batch shape: ONE corpus `sets` scan feeds BOTH verify
+    else
+      // batch shape: ONE corpus `sets` scan feeds BOTH verify
       // directions (r21 verdict #2 — the per-direction split read the
       // corpus-sized table twice). Direction-tagged candidates join the
       // delta sets first (delta-bounded), then the corpus table joins
@@ -386,24 +370,9 @@ object ContainIndex extends DurableIndex {
       DedupQueries.verifyContainmentOneScan(corpusSets, deltaSets,
           rawNewInOld.distinct(), rawOldInNew.distinct())
         .distinct()
-    else {
-      // batch shape: ONE candidate distinct and ONE verify pass over a
-      // per-doc-unique union — a daily delta pays the corpus-side
-      // exchanges once, not once per direction (the per-direction shape
-      // measured ×1.8–2.2 on this face's bench line). On a RE-probe the
-      // delta's docs also sit in the admitted `sets` table, so prefer
-      // the delta-side set (identical content — same doc_id ⇒ same text
-      // ⇒ same hash set) and anti-join the corpus sets against the
-      // delta's doc_ids.
-      val cand = rawNewInOld.unionByName(rawOldInNew).distinct()
-      val per = corpusSets
-        .join(deltaSets.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .unionByName(deltaSets)
-      DedupQueries.verifyContainment(per, cand)
-    }
   }
 
-  /** The bucketed micro probe's two candidate frames (new-in-old,
+  /** The uncached micro probe's two candidate frames (new-in-old,
     * old-in-new), LAZY — the plans that touch the corpus posting tables
     * per micro batch. The delta's distinct token hashes collect once
     * (prefixes ⊆ tokens, so ONE key set prunes all three hx-keyed

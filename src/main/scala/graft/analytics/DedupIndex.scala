@@ -1,7 +1,5 @@
 package graft.analytics
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,32 +30,21 @@ import org.apache.spark.sql.functions._
   * distinct, signature duplicates are not) — and a crash mid-admission
   * leaves the pointer on the intact previous version.
   *
-  * TWO LAYOUTS, ONE ARTIFACT FAMILY (r13 verdict's unification):
-  *   - the plain DIRECTORY layout (`build(…, bucketed = false)`) —
-  *     `bands` = (band, sig, doc_id) parquet read with
-  *     `spark.read.parquet`; probes shuffle both join sides. The
-  *     catalog-free fallback the parity specs compare against.
-  *   - the BUCKETED layout — the build DEFAULT, what every production
-  *     caller (the oracled incremental faces, the streaming ingest
-  *     trio) builds and a 100 TB deployment uses for BOTH the daily
-  *     batch and the streaming face — `bands` = (bk, doc_id) with
-  *     `bk = xxhash64(band, sig)`, written as an external bucketed table
-  *     (bucketBy bk) inside the SAME version dirs via [[IndexLayout]];
-  *     `signatures` bucketBy doc_id. Probes read the corpus side IN
-  *     PLACE (bucket HashPartitioning reported, only the delta
-  *     exchanges — `DedupIndexBucketedSpec` pins the plan), micro
-  *     probes BUCKET-PRUNE the band scan to the delta's key set, and
-  *     admission/compaction keep the layout (bucket ids ride file
-  *     names, which hard links preserve; appends land at the recorded
-  *     modulus). The single-column bk key is what makes pruning
-  *     possible (Spark prunes single-column bucket specs only); a bk
-  *     collision can only ADD a candidate, which the exact verify
-  *     filters like any other non-pair — same contract as every LSH
-  *     candidate stage here.
-  * The layout rides `_meta.txt` ([[IndexLayout.isBucketed]]), so
-  * [[probe]]/[[append]]/[[load]]/[[compact]] — and therefore the
-  * streaming ingest faces, which go through [[load]] — pick the right
-  * read/write path with zero caller involvement.
+  * LAYOUT (the one every caller builds — the oracled incremental faces,
+  * the streaming ingest trio, a 100 TB deployment's daily batch and
+  * streaming face alike): `bands` = (bk, doc_id) with
+  * `bk = xxhash64(band, sig)`, written as an external bucketed table
+  * (bucketBy bk) inside the version dirs via [[IndexLayout]];
+  * `signatures` bucketBy doc_id. Probes read the corpus side IN PLACE
+  * (bucket HashPartitioning reported, only the delta exchanges —
+  * `DedupIndexBucketedSpec` pins the plan), micro probes BUCKET-PRUNE
+  * the band scan to the delta's key set, and admission/compaction keep
+  * the layout (bucket ids ride file names, which hard links preserve;
+  * appends land at the recorded modulus). The single-column bk key is
+  * what makes pruning possible (Spark prunes single-column bucket specs
+  * only); a bk collision can only ADD a candidate, which the exact
+  * verify filters like any other non-pair — same contract as every LSH
+  * candidate stage here.
   *
   * Staleness is the caller's contract, same as [[AnnIndex]]: [[build]]
   * rebuilds from scratch into a fresh version.
@@ -103,38 +90,29 @@ object DedupIndex extends DurableIndex {
 
   protected val tables = Seq("signatures", "bands")
   val idColumn = "doc_id"
-  protected val clusterKey = Map("signatures" -> "doc_id", "bands" -> "band")
+  protected val bucketKey = Map("signatures" -> "doc_id", "bands" -> "bk")
   protected val ratioTable = "signatures"
   protected val l0Tables = Seq("bands")
 
   /** The shape the artifact was BUILT with — what every probe/admit must
-    * replay. Pre-metadata artifacts (r12) read back as [[Shape.Oracle]],
-    * the only shape that revision ever wrote.
+    * replay.
     */
-  def shapeOf(indexDir: String): Shape = shapeOfMeta(artifact(indexDir).meta)
+  def shapeOf(indexDir: String): Shape = shapeOfMeta(metaOf(indexDir))
 
   private def shapeOfMeta(m: Map[String, String]): Shape =
-    (m.get("bands"), m.get("rowsPerBand"), m.get("slots")) match {
-      case (Some(b), Some(r), Some(s)) => Shape(b.toInt, r.toInt, s.toInt)
-      case _ => Shape.Oracle
-    }
+    Shape(m("bands").toInt, m("rowsPerBand").toInt, m("slots").toInt)
 
-  /** The directory-layout band projection: (band, sig, doc_id). */
+  /** The band projection: (bk, doc_id) with `bk = xxhash64(band, sig)` —
+    * the single-column join/bucket/prune key (see class doc), 16 B/row.
+    */
   private def bandFrame(per: DataFrame, shape: Shape): DataFrame = {
     val bandCols = DedupQueries.bandStructs(shape.bands,
       shape.rowsPerBand, shape.slots)
     per.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
       .select(col("bs.band").as("band"), col("bs.sig").as("sig"),
         col("doc_id"))
-  }
-
-  /** The bucketed-layout band projection: (bk, doc_id) with
-    * `bk = xxhash64(band, sig)` — the single-column join/bucket/prune
-    * key (see class doc), 16 B/row vs the directory layout's 40.
-    */
-  private def bucketedBandFrame(per: DataFrame, shape: Shape): DataFrame =
-    bandFrame(per, shape)
       .select(xxhash64(col("band"), col("sig")).as("bk"), col("doc_id"))
+  }
 
   /** Build (or fully REBUILD) the index from a `(doc_id, text)` corpus
     * frame — a fresh version with an empty admitted-delta set. `shape`
@@ -143,54 +121,41 @@ object DedupIndex extends DurableIndex {
     * face passes [[Shape.Oracle]] explicitly — recall-complete at its
     * oracle's exact j ≥ 0.8 answer).
     *
-    * The BUCKETED layout (class doc) is the DEFAULT — the layout every
-    * production caller (the oracled incremental faces, the streaming
-    * ingest trio) builds and probes: bucket counts are byte-sized
+    * Bucket counts (class doc) are byte-sized
     * ([[Bucketing.sizedBuckets]], session-cap clamped) unless `buckets`
     * pins them (layout-pinning specs), and the full spec rides the
     * artifact meta so every admission, probe, and session replays it.
-    * `bucketed = false` writes the plain directory layout — the
-    * catalog-free fallback the parity specs compare against.
+    * `manifestCarrier` picks the `_carry.txt` reference carry over hard
+    * links for the artifact's life ([[DurableIndex.beginBuild]]).
     */
   def build(spark: SparkSession, docs: DataFrame, indexDir: String,
-      shape: Shape = Shape.Corpus, bucketed: Boolean = true,
-      buckets: Int = 0): Unit = {
-    val carrier = beginBuild(spark, bucketed)
+      shape: Shape = Shape.Corpus, buckets: Int = 0,
+      manifestCarrier: Boolean = false): Unit = {
+    val carrier = beginBuild(manifestCarrier)
     val shapeMeta = Map("bands" -> shape.bands.toString,
       "rowsPerBand" -> shape.rowsPerBand.toString,
       "slots" -> shape.slots.toString)
     // signaturesOf already carries (doc_id, mhsig, hs, sz)
     val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
     try {
-      if (!bucketed)
-        artifact(indexDir).build({ ver =>
-          per.write.mode("overwrite")
-            .parquet(new File(ver, "signatures").toString)
-          bandFrame(per, shape)
-            .write.mode("overwrite").parquet(new File(ver, "bands").toString)
-        }, buildMeta = shapeMeta)
-      else {
-        // buckets = 0: size from bytes (Bucketing.indexBuckets — the
-        // 32 MB index target with the parallelism floor) — the count
-        // rides the persisted signature frame the writes reuse (never a
-        // second scan of the source). Band rows are docs × bands at
-        // ~16 B (bk, doc_id); signature rows carry the slots-wide
-        // signature plus the distinct shingle hash set (~2 kB nominal).
-        val rows = if (buckets > 0) 0L else per.count()
-        def n(bytes: Long): Int =
-          if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
-        buildBucketed(indexDir, shapeMeta ++ carrier,
-          Map("signatures" -> "doc_id", "bands" -> "bk"),
-          Seq(("signatures", per, n(rows * (shape.slots * 8L + 2048L))),
-            ("bands", bucketedBandFrame(per, shape),
-              n(rows * shape.bands * 16L))))
-      }
+      // buckets = 0: size from bytes (Bucketing.indexBuckets — the 32 MB
+      // index target with the parallelism floor) — the count rides the
+      // persisted signature frame the writes reuse (never a second scan
+      // of the source). Band rows are docs × bands at ~16 B (bk,
+      // doc_id); signature rows carry the slots-wide signature plus the
+      // distinct shingle hash set (~2 kB nominal).
+      val rows = if (buckets > 0) 0L else per.count()
+      def n(bytes: Long): Int =
+        if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
+      buildTables(indexDir, shapeMeta ++ carrier,
+        Seq(("signatures", per, n(rows * (shape.slots * 8L + 2048L))),
+          ("bands", bandFrame(per, shape), n(rows * shape.bands * 16L))))
     } finally { per.unpersist(); () }
   }
 
   /** ADMIT a delta — see [[DurableIndex.append]]. Signatures and bands
-    * at the shape the artifact records — never a caller choice. On the
-    * bucketed layout `signatures` appends at the bucket modulus
+    * at the shape the artifact records — never a caller choice.
+    * `signatures` appends at the bucket modulus
     * (doc_id-keyed — a delta's rows touch ≤ |delta| buckets) and `bands`
     * lands as L0 accrual ([[IndexLayout.fanoutAppend]]) — a delta's
     * |delta| × bands band rows hash across ~EVERY bucket, so the modulus
@@ -199,16 +164,13 @@ object DedupIndex extends DurableIndex {
     */
   def append(spark: SparkSession, docs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {
-    val meta = artifact(indexDir).meta
+    val meta = metaOf(indexDir)
     val shape = shapeOfMeta(meta)
-    val bucketed = IndexLayout.isBucketed(meta)
     artifact(indexDir).admit(deltaId, tables, { ver =>
       val per = DedupQueries.signaturesOf(docs, shape.slots).persist()
       try {
         appendTable(indexDir, meta, ver, "signatures", per)
-        appendTable(indexDir, meta, ver, "bands",
-          if (bucketed) bucketedBandFrame(per, shape)
-          else bandFrame(per, shape))
+        appendTable(indexDir, meta, ver, "bands", bandFrame(per, shape))
       } finally { per.unpersist(); () }
     })
   }
@@ -232,8 +194,8 @@ object DedupIndex extends DurableIndex {
     * `micro = true` declares `deltaDocs` a MICRO-BATCH (the streaming
     * ingest face): delta bands and candidates broadcast into the corpus
     * joins, so the corpus band/signature tables STREAM with zero
-    * per-batch exchange — see [[ContainIndex.probeLoaded]]. On the
-    * BUCKETED layout the corpus-side READ picks one of three regimes
+    * per-batch exchange — see [[ContainIndex.probeLoaded]]. The
+    * corpus-side READ picks one of three regimes
     * (the r15 design — each measured in SCALE.md):
     *
     *   1. CACHED — the frames are persisted ([[IndexLayout.isCached]];
@@ -273,15 +235,7 @@ object DedupIndex extends DurableIndex {
     // the whole retried delta as corpus duplicates — a keeper policy
     // downstream would then drop it. Batch faces filter the same way.
     val (cand, corpusSigs) =
-      if (!loaded.bucketed) {
-        val corpusBands = loaded.bands.withColumnRenamed("doc_id", "id_a")
-        val deltaBands = bandFrame(deltaPer, shape)
-          .withColumnRenamed("doc_id", "id_b")
-        val deltaSide = if (micro) broadcast(deltaBands) else deltaBands
-        (deltaSide.join(corpusBands, Seq("band", "sig"))
-          .where(col("id_a") =!= col("id_b"))
-          .select(col("id_a"), col("id_b")).distinct(), loaded.signatures)
-      } else if (!micro || IndexLayout.isCached(loaded.bands)) {
+      if (!micro || IndexLayout.isCached(loaded.bands)) {
         // batch probe, or the micro CACHED regime (1): lazy bk
         // equi-join; micro broadcasts the delta so the corpus side
         // (bucketed scan or InMemoryRelation) streams exchange-free.
@@ -292,7 +246,7 @@ object DedupIndex extends DurableIndex {
         // live wholly in one leg (admissions land whole in L0,
         // compaction folds all of L0 at once), and the distinct after
         // the union collapses duplicates either way
-        val deltaBands = bucketedBandFrame(deltaPer, shape)
+        val deltaBands = bandFrame(deltaPer, shape)
           .withColumnRenamed("doc_id", "id_b")
         val deltaSide = if (micro) broadcast(deltaBands) else deltaBands
         def leg(c: DataFrame): DataFrame =
@@ -325,7 +279,7 @@ object DedupIndex extends DurableIndex {
       loaded.tombstones, "corpus_id", "new_id")
   }
 
-  /** The bucketed micro probe's candidate frame, LAZY — the one plan
+  /** The uncached micro probe's candidate frame, LAZY — the one plan
     * that touches the corpus band table per micro batch: the delta's
     * band rows collect (|batch| × bands — admission-bounded by the
     * stream's contract) and come back as a broadcast local relation, and
@@ -338,7 +292,7 @@ object DedupIndex extends DurableIndex {
       deltaPer: DataFrame): DataFrame = {
     val spark = deltaPer.sparkSession
     import spark.implicits._
-    val deltaBandRows = bucketedBandFrame(deltaPer, loaded.shape)
+    val deltaBandRows = bandFrame(deltaPer, loaded.shape)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val deltaSide = broadcast(deltaBandRows.toDF("bk", "id_b"))
     // L0 leg (see probeLoaded): the base scan keeps its INSET bucket

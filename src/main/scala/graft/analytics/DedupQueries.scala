@@ -412,49 +412,27 @@ object DedupQueries {
     */
   def qDedupAdmitted(spark: SparkSession, dir: String): DataFrame =
     admittedFace(spark, dir, "dedup-admitted", "admitted-day1",
-      compactAfter = false)
+      compactAfter = false, manifestCarrier = false)
 
   /** The shared build(% 5 < 3) + admit(% 5 = 3) [+ fold] + probe(% 5 = 4)
     * lifecycle behind [[qDedupAdmitted]]/[[qDedupCompacted]] and their
     * manifest-carrier twins — one body so the four oracled rows cannot
-    * drift apart in anything but family name and carrier.
+    * drift apart in anything but family name and carrier. The carrier
+    * is a BUILD argument: an already-resolved artifact keeps whatever
+    * carrier its meta records.
     */
   private def admittedFace(spark: SparkSession, dir: String, kind: String,
-      deltaId: String, compactAfter: Boolean): DataFrame = {
+      deltaId: String, compactAfter: Boolean,
+      manifestCarrier: Boolean): DataFrame = {
     val idx = artifactDir(spark, dir, kind)
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("text"))
     if (!DedupIndex.hasCurrent(idx))
       DedupIndex.build(spark, docs.filter(col("doc_id") % 5 < 3), idx,
-        DedupIndex.Shape.Oracle)
+        DedupIndex.Shape.Oracle, manifestCarrier = manifestCarrier)
     DedupIndex.append(spark, docs.filter(col("doc_id") % 5 === 3), idx,
       deltaId)
     if (compactAfter) DedupIndex.compact(spark, idx, maxFiles = 0)
     DedupIndex.probe(spark, idx, docs.filter(col("doc_id") % 5 === 4))
-  }
-
-  /** Run `body` with the MANIFEST carrier conf set (restored after):
-    * builds inside record [[graft.streaming.VersionedArtifact
-    * .ManifestMeta]], so the whole lifecycle executes through
-    * `_carry.txt` reference resolution, logical file reads, and vacuum
-    * prune. The conf is read at BUILD only — an already-resolved
-    * artifact keeps whatever carrier its meta records.
-    *
-    * SINGLE-THREADED contract (r20 verdict): the conf is session-global,
-    * so two concurrent queries on one session could leak the carrier
-    * into each other's builds. Verify/Bench run queries sequentially by
-    * construction; a concurrent caller must pin the carrier per build
-    * (build inside its own `withManifestCarrier`) from ONE thread — the
-    * same single-writer rule every artifact lifecycle already carries.
-    */
-  private def withManifestCarrier[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.getOption(DedupIndex.CarrierConf)
-    spark.conf.set(DedupIndex.CarrierConf,
-      graft.streaming.VersionedArtifact.ManifestValue)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(DedupIndex.CarrierConf, v)
-      case None => spark.conf.unset(DedupIndex.CarrierConf)
-    }
   }
 
   /** [[qDedupAdmitted]] on the MANIFEST carrier (own `dedup-adm-m`
@@ -466,10 +444,8 @@ object DedupQueries {
     * resolution").
     */
   def qDedupAdmittedManifest(spark: SparkSession, dir: String): DataFrame =
-    withManifestCarrier(spark) {
-      admittedFace(spark, dir, "dedup-adm-m", "admitted-day1",
-        compactAfter = false)
-    }
+    admittedFace(spark, dir, "dedup-adm-m", "admitted-day1",
+      compactAfter = false, manifestCarrier = true)
 
   /** [[qDedupAdmitted]] driven through COMPACTION: the two-step
     * build + admit is FOLDED ([[DedupIndex.compact]] — the
@@ -487,7 +463,7 @@ object DedupQueries {
     */
   def qDedupCompacted(spark: SparkSession, dir: String): DataFrame =
     admittedFace(spark, dir, "dedup-compacted", "compacted-day1",
-      compactAfter = true)
+      compactAfter = true, manifestCarrier = false)
 
   /** [[qDedupCompacted]] on the MANIFEST carrier (own `dedup-cmp-m`
     * family): admit + bucket-granular fold where the kept base files
@@ -496,10 +472,8 @@ object DedupQueries {
     * probe must still hash-equal the one-shot build's exact answer.
     */
   def qDedupCompactedManifest(spark: SparkSession, dir: String): DataFrame =
-    withManifestCarrier(spark) {
-      admittedFace(spark, dir, "dedup-cmp-m", "compacted-day1",
-        compactAfter = true)
-    }
+    admittedFace(spark, dir, "dedup-cmp-m", "compacted-day1",
+      compactAfter = true, manifestCarrier = true)
 
   /** [[qDedupIncremental]] after a TAKEDOWN: a deterministic slice of
     * the indexed corpus (doc_id % 7 = 3) is tombstoned
@@ -563,15 +537,16 @@ object DedupQueries {
     * (`dedup-psl`).
     */
   def qDedupPurgeSliced(spark: SparkSession, dir: String): DataFrame =
-    purgeSlicedFace(spark, dir, "dedup-psl")
+    purgeSlicedFace(spark, dir, "dedup-psl", manifestCarrier = false)
 
   private def purgeSlicedFace(spark: SparkSession, dir: String,
-      kind: String): DataFrame = {
+      kind: String, manifestCarrier: Boolean): DataFrame = {
     val idx = artifactDir(spark, dir, kind)
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("text"))
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
     if (!DedupIndex.hasCurrent(idx))
-      DedupIndex.build(spark, corpus, idx, DedupIndex.Shape.Oracle)
+      DedupIndex.build(spark, corpus, idx, DedupIndex.Shape.Oracle,
+        manifestCarrier = manifestCarrier)
     DedupIndex.delete(spark, idx,
       corpus.filter(col("doc_id") % 7 === 3).select(col("doc_id")),
       "takedown-mod7-3")
@@ -595,9 +570,7 @@ object DedupQueries {
     */
   def qDedupPurgeSlicedManifest(spark: SparkSession,
       dir: String): DataFrame =
-    withManifestCarrier(spark) {
-      purgeSlicedFace(spark, dir, "dedup-psl-m")
-    }
+    purgeSlicedFace(spark, dir, "dedup-psl-m", manifestCarrier = true)
 
   /** [[qDedupIncremental]] at the DEFAULT corpus-scale artifact shape
     * (32×8/256, [[DedupIndex.Shape.Corpus]]) — the face that drives the
@@ -838,8 +811,8 @@ object DedupQueries {
     * one task per wave. Conf is set/restored around the loop only; the
     * RETURNED lazy frame executes under the caller's session conf (its
     * final projection is component-count-sized either way). Session-conf
-    * mutation rides the same single-threaded bench/verify contract as
-    * withManifestCarrier.
+    * mutation rides the single-threaded bench/verify contract: two
+    * concurrent queries on one session could see each other's count.
     */
   private def withLoopPartitions[T](spark: SparkSession, rows: Long)(
       body: => T): T = {
@@ -1138,8 +1111,9 @@ object DedupQueries {
 
   /** (hx, doc_id, rn, n): each doc's shingle hashes ranked by the global
     * (df ASC, hx ASC) order, fragment floor n ≥ 20 applied — THE shared
-    * block of the containment family (batch/incremental faces, the
-    * persisted [[ContainIndex]], and `ContainProbe`). One definition so
+    * block of the containment family (batch/incremental faces and the
+    * persisted [[ContainIndex]]; its vocabulary/df measurements are in
+    * SCALE.md's containment rows). One definition so
     * the fragment floor and the ⌊n/10⌋+1 prefix rule can never drift
     * between the oracled query and the artifact. Left join + coalesce:
     * tokens absent from `dfTable` (a delta probing a frozen index) rank
@@ -1363,14 +1337,16 @@ object DedupQueries {
     */
   def qDedupContainmentAdmitted(spark: SparkSession,
       dir: String): DataFrame =
-    containAdmittedFace(spark, dir, "contain-admitted")
+    containAdmittedFace(spark, dir, "contain-admitted",
+      manifestCarrier = false)
 
   private def containAdmittedFace(spark: SparkSession, dir: String,
-      kind: String): DataFrame = {
+      kind: String, manifestCarrier: Boolean): DataFrame = {
     val idx = artifactDir(spark, dir, kind)
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("text"))
     if (!ContainIndex.hasCurrent(idx))
-      ContainIndex.build(spark, docs.filter(col("doc_id") % 5 < 3), idx)
+      ContainIndex.build(spark, docs.filter(col("doc_id") % 5 < 3), idx,
+        manifestCarrier = manifestCarrier)
     ContainIndex.append(spark, docs.filter(col("doc_id") % 5 === 3), idx,
       "admitted-day1")
     ContainIndex.probe(spark, idx, docs.filter(col("doc_id") % 5 === 4))
@@ -1384,9 +1360,7 @@ object DedupQueries {
     */
   def qDedupContainmentAdmittedManifest(spark: SparkSession,
       dir: String): DataFrame =
-    withManifestCarrier(spark) {
-      containAdmittedFace(spark, dir, "contain-adm-m")
-    }
+    containAdmittedFace(spark, dir, "contain-adm-m", manifestCarrier = true)
 
   /** [[qDedupContainmentIncremental]] after a TAKEDOWN of the corpus's
     * doc_id % 7 = 3 slice — deletion under the ASYMMETRIC two-direction
@@ -1820,17 +1794,18 @@ object DedupQueries {
     */
   def qDedupEmbeddingAdmitted(spark: SparkSession,
       dir: String): DataFrame =
-    embeddingAdmittedFace(spark, dir, "srp-admitted")
+    embeddingAdmittedFace(spark, dir, "srp-admitted",
+      manifestCarrier = false)
 
   private def embeddingAdmittedFace(spark: SparkSession, dir: String,
-      kind: String): DataFrame = {
+      kind: String, manifestCarrier: Boolean): DataFrame = {
     import spark.implicits._
     val fp = AnnIndex.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val idx = s"${SimilarityQueries.indexRoot}/$kind-$fp"
     val vecs = table(spark, dir, "embeddings").select($"vec_id", $"embedding")
     if (!SrpIndex.hasCurrent(idx))
       SrpIndex.build(spark, vecs.filter($"vec_id" % 5 < 3), idx,
-        Srp.Narrow)
+        Srp.Narrow, manifestCarrier = manifestCarrier)
     SrpIndex.append(spark, vecs.filter($"vec_id" % 5 === 3), idx,
       "admitted-day1")
     SrpIndex.probe(spark, idx, vecs.filter($"vec_id" % 5 === 4))
@@ -1841,9 +1816,7 @@ object DedupQueries {
     */
   def qDedupEmbeddingAdmittedManifest(spark: SparkSession,
       dir: String): DataFrame =
-    withManifestCarrier(spark) {
-      embeddingAdmittedFace(spark, dir, "srp-adm-m")
-    }
+    embeddingAdmittedFace(spark, dir, "srp-adm-m", manifestCarrier = true)
 
   /** [[qDedupEmbeddingIncremental]] after a TAKEDOWN — the embedding
     * family's deletion face, completing the oracled takedown trio

@@ -19,9 +19,9 @@ import graft.streaming.VersionedArtifact
   *   - [[idColumn]] — the document/vector id every non-link table
   *     carries (`doc_id` or `vec_id`), the key tombstones and purges
   *     match on;
-  *   - [[clusterKey]] — per table, the column the directory layout
-  *     re-clusters on when compaction or a purge rewrites it (the
-  *     probes' equi-join key);
+  *   - [[bucketKey]] — per table, the column it is bucketed and sorted
+  *     on (the probes' equi-join key; a table keyed by [[idColumn]] is
+  *     what a purge can rewrite bucket-selectively);
   *   - [[linkTables]] — tables a purge carries as links, because they
   *     hold no id column (containment's token `df`);
   *   - [[ratioTable]] — the one-row-per-id table [[tombstoneRatio]]
@@ -34,15 +34,14 @@ import graft.streaming.VersionedArtifact
   * [[probeLoaded]] with its micro-candidate plans, its band shape, and a
   * small [[Loaded]] view over the frames [[load]] resolves.
   *
-  * TWO LAYOUTS, ONE FAMILY: the plain DIRECTORY layout (`spark.read
-  * .parquet` over each version's table dir — the catalog-free fallback
-  * the parity specs compare against) or the BUCKETED layout (the build
-  * default): every table an [[IndexLayout]] external bucketed table
-  * inside the same version dirs, so probes read the corpus side in
+  * ONE LAYOUT: every table is an [[IndexLayout]] external bucketed
+  * table inside the version dirs, so probes read the corpus side in
   * place, micro probes bucket-prune, and admission/compaction keep the
-  * layout. The layout rides `_meta.txt` ([[IndexLayout.isBucketed]]),
-  * so every lifecycle step below picks its read/write path with zero
-  * caller involvement.
+  * layout. The bucket specs ride `_meta.txt` next to the
+  * `layout=bucketed` marker; an artifact without that marker (a
+  * pre-bucketed build, a hand-edited or deleted meta) makes [[load]],
+  * `append`, [[compact]] and [[purge]] throw, naming the index dir
+  * ([[IndexLayout.checkedMeta]]).
   *
   * Staleness is the caller's contract, same as [[AnnIndex]]: a face's
   * `build` rebuilds from scratch into a fresh version.
@@ -58,7 +57,7 @@ trait DurableIndex {
 
   def idColumn: String
 
-  protected def clusterKey: Map[String, String]
+  protected def bucketKey: Map[String, String]
 
   protected def linkTables: Seq[String] = Nil
 
@@ -81,9 +80,9 @@ trait DurableIndex {
 
   /** [[probe]] against pre-loaded (possibly persisted) artifact frames.
     * `micro = true` declares `delta` a MICRO-BATCH (the streaming ingest
-    * faces): delta-derived sides broadcast into the corpus joins, and on
-    * the uncached bucketed layout the corpus reads bucket-prune — see
-    * each face's scaladoc. Batch probes (`micro = false`) stay lazy.
+    * faces): delta-derived sides broadcast into the corpus joins, and
+    * uncached corpus reads bucket-prune — see each face's scaladoc.
+    * Batch probes (`micro = false`) stay lazy.
     */
   def probeLoaded(loaded: Loaded, delta: DataFrame,
       micro: Boolean = false): DataFrame
@@ -101,39 +100,30 @@ trait DurableIndex {
     */
   val loadRuns = new AtomicLong(0)
 
-  /** Carrier conf (`spark.graft.index.carrier`): `manifest` makes a
-    * build record [[VersionedArtifact.ManifestMeta]] in the artifact, so
-    * every later lifecycle transaction carries untouched files as
-    * `_carry.txt` REFERENCES (zero links, zero copies — the object-store
-    * carry) and prune becomes reference-counted vacuum. Read at BUILD
-    * only; the choice then rides the artifact's meta like the band shape
-    * (a probe/admit never re-reads the conf). Reads of a manifest
-    * artifact MOUNT as per-version symlink trees registered with the
-    * same bucketed catalog entries as the link carrier ([[load]],
-    * [[IndexLayout.mountManifest]]), so probe plans are
-    * carrier-identical. Default: absent = hard-link carry.
+  /** What opens every build: count it, and return the carrier meta.
+    * `manifestCarrier` (each face's `build` argument, default false =
+    * hard-link carry) makes the build record [[VersionedArtifact
+    * .ManifestMeta]] in the artifact, so every later lifecycle
+    * transaction carries untouched files as `_carry.txt` REFERENCES
+    * (zero links, zero copies — the object-store carry) and prune
+    * becomes reference-counted vacuum. The choice then rides the
+    * artifact's meta like the band shape (a probe/admit never takes
+    * it). Reads of a manifest artifact MOUNT as per-version symlink
+    * trees registered with the same bucketed catalog entries as the
+    * link carrier ([[load]], [[IndexLayout.mountManifest]]), so probe
+    * plans are carrier-identical.
     */
-  val CarrierConf = "spark.graft.index.carrier"
-
-  /** What opens every build: count it, and return the carrier meta the
-    * conf selects. The manifest carrier needs the bucketed layout — the
-    * directory layout's compact/purge re-read whole table DIRS, which a
-    * manifest-carried table does not have.
-    */
-  protected def beginBuild(spark: SparkSession,
-      bucketed: Boolean): Map[String, String] = {
+  protected def beginBuild(manifestCarrier: Boolean): Map[String, String] = {
     buildRuns.incrementAndGet()
-    val carrier =
-      if (spark.conf.getOption(CarrierConf)
-          .contains(VersionedArtifact.ManifestValue))
-        VersionedArtifact.ManifestMeta
-      else Map.empty[String, String]
-    require(bucketed || carrier.isEmpty,
-      "manifest carrier needs the bucketed layout: the directory " +
-        "layout's compact/purge re-read whole table DIRS, which a " +
-        "manifest-carried table does not have")
-    carrier
+    if (manifestCarrier) VersionedArtifact.ManifestMeta
+    else Map.empty[String, String]
   }
+
+  /** The current version's meta, checked to record the bucketed layout
+    * ([[IndexLayout.checkedMeta]]).
+    */
+  protected def metaOf(indexDir: String): Map[String, String] =
+    IndexLayout.checkedMeta(indexDir, artifact(indexDir).meta)
 
   /** Whether the artifact has a committed current version (a crashed
     * build leaves no pointer → reads as absent).
@@ -173,26 +163,22 @@ trait DurableIndex {
   /** Drop index versions older than the newest `keep` (default 2: a
     * reader holding the previous version's paths — a lazy probe frame,
     * the ingest stream's cached corpus — survives one admission; consume
-    * lazy frames before pruning deeper). On the bucketed layout the
-    * pruned versions' external-table catalog entries and manifest
-    * mounts drop with them (metadata-only — the files are already gone,
-    * and symlinks never keep bytes alive, so order is free).
+    * lazy frames before pruning deeper). The pruned versions'
+    * external-table catalog entries and manifest mounts drop with them
+    * (metadata-only — the files are already gone, and symlinks never
+    * keep bytes alive, so order is free).
     */
   def prune(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
-    val bucketed = IndexLayout.isBucketed(artifact(indexDir).meta)
     val dropped = artifact(indexDir).prune(keep)
-    if (bucketed) {
-      val family = IndexLayout.familyOf(indexDir)
-      dropped.foreach(v =>
-        tables.foreach(IndexLayout.deregister(spark, family, _, v)))
-      dropped.foreach(IndexLayout.unmount(indexDir, _))
-    }
+    val family = IndexLayout.familyOf(indexDir)
+    dropped.foreach(v =>
+      tables.foreach(IndexLayout.deregister(spark, family, _, v)))
+    dropped.foreach(IndexLayout.unmount(indexDir, _))
   }
 
   /** Compact tables that accreted more than `maxFiles` part files across
     * admissions — out-of-band, behind the same atomic version swap as
-    * admission, delta-idempotence carried. Directory tables re-cluster
-    * on their [[clusterKey]]; bucketed tables fold BUCKET-GRANULARLY
+    * admission, delta-idempotence carried. Tables fold BUCKET-GRANULARLY
     * (base files hard-link, only the accrual rewrites — [[graft.streaming
     * .VersionedArtifact.compactBucketed]]) to a ≤ 2-files-per-bucket
     * floor at the recorded spec, with threshold = bucket floor +
@@ -203,22 +189,15 @@ trait DurableIndex {
     */
   def compact(spark: SparkSession, indexDir: String,
       maxFiles: Int = 64): Int = {
-    val meta = artifact(indexDir).meta
-    if (!IndexLayout.isBucketed(meta))
-      artifact(indexDir).compact(tables, maxFiles) { (src, tgt) =>
-        spark.read.parquet(src).repartition(col(clusterKey(tgt.getName)))
-          .write.mode("overwrite").parquet(tgt.toString)
-      }
-    else {
-      val family = IndexLayout.familyOf(indexDir)
-      artifact(indexDir).compactBucketed(tables,
-        (t: String) => IndexLayout.specOf(meta, t).buckets + maxFiles) {
-        (table, files, tgt) =>
-          IndexLayout.writeInto(
-            spark.read.parquet(files.map(_.getAbsolutePath): _*), family,
-            table, tgt.getParentFile,
-            IndexLayout.specOf(meta, table), overwrite = true)
-      }
+    val meta = metaOf(indexDir)
+    val family = IndexLayout.familyOf(indexDir)
+    artifact(indexDir).compactBucketed(tables,
+      (t: String) => IndexLayout.specOf(meta, t).buckets + maxFiles) {
+      (table, files, tgt) =>
+        IndexLayout.writeInto(
+          spark.read.parquet(files.map(_.getAbsolutePath): _*), family,
+          table, tgt.getParentFile,
+          IndexLayout.specOf(meta, table), overwrite = true)
     }
   }
 
@@ -256,14 +235,13 @@ trait DurableIndex {
     * contribution to them is an efficiency-only drift (containment's
     * frozen-df argument). False if there is nothing to purge.
     *
-    * On the bucketed layout, tables bucketed BY [[idColumn]] rewrite
-    * only the buckets holding tombstoned rows (the rest hard-link —
-    * O(affected buckets)); band/posting tables rewrite whole, since a
-    * deleted id's rows spread across all buckets by construction.
-    * `budget` > 0 slices that purge at ≤ budget buckets per call (the
-    * in-stream auto-purge's stall bound — see [[graft.streaming
-    * .VersionedArtifact.purgeVersionBudgeted]]); the directory layout
-    * always purges whole.
+    * Tables bucketed BY [[idColumn]] rewrite only the buckets holding
+    * tombstoned rows (the rest hard-link — O(affected buckets));
+    * band/posting tables rewrite whole, since a deleted id's rows spread
+    * across all buckets by construction. `budget` > 0 slices that purge
+    * at ≤ budget buckets per call (the in-stream auto-purge's stall
+    * bound — see [[graft.streaming
+    * .VersionedArtifact.purgeVersionBudgeted]]).
     */
   def purge(spark: SparkSession, indexDir: String,
       budget: Int = 0): Boolean = {
@@ -271,33 +249,23 @@ trait DurableIndex {
     IndexTombstones.loadTombstones(spark, art) match {
       case None => false
       case Some(t) =>
-        val meta = art.meta
+        val meta = metaOf(indexDir)
         val tomb = broadcast(t.select(col("id")))
         def kept(df: DataFrame): DataFrame =
           df.join(tomb, col(idColumn) === col("id"), "left_anti")
-        val rewrite = tables.filterNot(linkTables.contains)
-        if (!IndexLayout.isBucketed(meta))
-          art.purgeVersion(rewrite, linkTables, Set(IndexTombstones.Table)) {
-            (table, src, tgt) =>
-              kept(spark.read.parquet(src)).repartition(col(clusterKey(table)))
-                .write.mode("overwrite").parquet(tgt.toString)
-          }
-        else {
-          val family = IndexLayout.familyOf(indexDir)
-          def affectedOf(table: String): Option[Set[String]] = {
-            val spec = IndexLayout.specOf(meta, table)
-            if (spec.by != Seq(idColumn)) None
-            else Some(IndexTombstones.affectedBuckets(t, spec.buckets))
-          }
-          art.purgeVersionBudgeted(rewrite, linkTables,
-              Set(IndexTombstones.Table), affectedOf, budget) {
-            (table, files, tgt) =>
-              IndexLayout.writeInto(
-                kept(spark.read.parquet(files.map(_.getAbsolutePath): _*)),
-                family, table, tgt.getParentFile,
-                IndexLayout.specOf(meta, table), overwrite = true)
-          }
-          ()
+        val family = IndexLayout.familyOf(indexDir)
+        def affectedOf(table: String): Option[Set[String]] = {
+          val spec = IndexLayout.specOf(meta, table)
+          if (spec.by != Seq(idColumn)) None
+          else Some(IndexTombstones.affectedBuckets(t, spec.buckets))
+        }
+        art.purgeVersionBudgeted(tables.filterNot(linkTables.contains),
+            linkTables, Set(IndexTombstones.Table), affectedOf, budget) {
+          (table, files, tgt) =>
+            IndexLayout.writeInto(
+              kept(spark.read.parquet(files.map(_.getAbsolutePath): _*)),
+              family, table, tgt.getParentFile,
+              IndexLayout.specOf(meta, table), overwrite = true)
         }
         true
     }
@@ -338,64 +306,55 @@ trait DurableIndex {
     val (meta, dirs, tomb) =
       if (art.isManifestCurrent) {
         val snap = art.snapshotLogical(tables, IndexTombstones.Table)
-        (snap.meta, tables.map(t => t -> IndexLayout.mountManifest(
+        (IndexLayout.checkedMeta(indexDir, snap.meta),
+          tables.map(t => t -> IndexLayout.mountManifest(
             indexDir, t, snap.version, snap.tableFiles(t))).toMap,
           IndexTombstones.fromFiles(spark, snap.extraFiles))
       } else {
         val snap = art.snapshot(tables, IndexTombstones.Table)
-        (snap.meta, snap.paths.map { case (t, p) => t -> new File(p) },
+        (IndexLayout.checkedMeta(indexDir, snap.meta),
+          snap.paths.map { case (t, p) => t -> new File(p) },
           IndexTombstones.fromSnapshot(spark, snap))
       }
-    loadedOf(
-      if (!IndexLayout.isBucketed(meta))
-        DurableIndex.Resolved(meta,
-          tables.map(t => t -> spark.read.parquet(dirs(t).toString)),
-          bucketed = false, Map.empty, tomb, Nil)
-      else
-        // L0 accrual: admission appends live as plain parquet under the
-        // table's `_l0` subdir ([[IndexLayout.l0Append]]); probes read
-        // them as a separate delta-sized leg until compaction folds them
-        // into buckets
-        DurableIndex.Resolved(meta,
-          tables.map(t => t -> spark.table(IndexLayout.register(spark,
-            family, t, dirs(t), IndexLayout.specOf(meta, t)))),
-          bucketed = true,
-          tables.map(t => t -> IndexLayout.specOf(meta, t).buckets).toMap,
-          tomb,
-          l0Tables.flatMap(t =>
-            IndexLayout.l0Frame(spark, dirs(t).toString).map(t -> _))))
+    // L0 accrual: admission appends live as plain parquet under the
+    // table's `_l0` subdir ([[IndexLayout.l0Append]]); probes read them
+    // as a separate delta-sized leg until compaction folds them into
+    // buckets
+    loadedOf(DurableIndex.Resolved(meta,
+      tables.map(t => t -> spark.table(IndexLayout.register(spark,
+        family, t, dirs(t), IndexLayout.specOf(meta, t)))),
+      tables.map(t => t -> IndexLayout.specOf(meta, t).buckets).toMap,
+      tomb,
+      l0Tables.flatMap(t =>
+        IndexLayout.l0Frame(spark, dirs(t).toString).map(t -> _))))
   }
 
   /** One table's admission rows written into the next version `ver`:
-    * a plain parquet append on the directory layout; on the bucketed
-    * layout [[l0Tables]] go through [[IndexLayout.fanoutAppend]] and
-    * the id-keyed tables append at the recorded modulus (their delta
-    * rows touch ≤ |delta| buckets — already delta-bounded).
+    * [[l0Tables]] go through [[IndexLayout.fanoutAppend]] and the
+    * id-keyed tables append at the recorded modulus (their delta rows
+    * touch ≤ |delta| buckets — already delta-bounded).
     */
   protected def appendTable(indexDir: String, meta: Map[String, String],
       ver: File, table: String, df: DataFrame): Unit =
-    if (!IndexLayout.isBucketed(meta))
-      df.write.mode("append").parquet(new File(ver, table).toString)
-    else if (l0Tables.contains(table))
+    if (l0Tables.contains(table))
       IndexLayout.fanoutAppend(df, IndexLayout.familyOf(indexDir), table,
         ver, IndexLayout.specOf(meta, table))
     else
       IndexLayout.writeInto(df, IndexLayout.familyOf(indexDir), table, ver,
         IndexLayout.specOf(meta, table), overwrite = false)
 
-  /** A bucketed build: writes each `(table, frame, buckets)` as an
-    * external bucketed table bucketed and sorted on `by(table)`, and
+  /** A build: writes each `(table, frame, buckets)` as an external
+    * bucketed table bucketed and sorted on its [[bucketKey]], and
     * records every spec (plus `meta` and the layout marker) in the
     * artifact so each admission, probe and session replays it.
     */
-  protected def buildBucketed(indexDir: String, meta: Map[String, String],
-      by: Map[String, String],
+  protected def buildTables(indexDir: String, meta: Map[String, String],
       frames: Seq[(String, DataFrame, Int)]): Unit = {
     val family = IndexLayout.familyOf(indexDir)
     val full = meta + (IndexLayout.LayoutKey -> IndexLayout.BucketedValue) ++
       frames.flatMap { case (t, df, n) =>
-        IndexLayout.metaFor(t, IndexLayout.TableSpec(n, Seq(by(t)),
-          Seq(by(t)), df.schema.toDDL))
+        IndexLayout.metaFor(t, IndexLayout.TableSpec(n, Seq(bucketKey(t)),
+          Seq(bucketKey(t)), df.schema.toDDL))
       }
     artifact(indexDir).build({ ver =>
       frames.foreach { case (t, df, _) =>
@@ -409,20 +368,16 @@ trait DurableIndex {
 object DurableIndex {
 
   /** One version's frames, resolved by [[DurableIndex.load]] against one
-    * pointer read, in the face's table order. `buckets` and `l0` are
-    * empty on the directory layout.
+    * pointer read, in the face's table order.
     */
   final case class Resolved(meta: Map[String, String],
-      tables: Seq[(String, DataFrame)], bucketed: Boolean,
-      buckets: Map[String, Int], tombstones: Option[DataFrame],
-      l0: Seq[(String, DataFrame)])
+      tables: Seq[(String, DataFrame)], buckets: Map[String, Int],
+      tombstones: Option[DataFrame], l0: Seq[(String, DataFrame)])
 
-  /** The shared half of a face's `Loaded`: layout, bucket counts, the
-    * tombstone filter and the L0 legs. `bucketed` records which layout
-    * (and therefore which probe plan) the frames carry.
+  /** The shared half of a face's `Loaded`: bucket counts, the tombstone
+    * filter and the L0 legs.
     */
   abstract class Frames(r: Resolved) {
-    def bucketed: Boolean = r.bucketed
     private[graft] def buckets: Map[String, Int] = r.buckets
     private[graft] def tombstones: Option[DataFrame] = r.tombstones
 

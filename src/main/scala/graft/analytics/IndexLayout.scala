@@ -40,14 +40,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   */
 private[graft] object IndexLayout {
 
-  /** `_meta.txt` marker for a bucketed-layout artifact; absent = the
-    * plain directory layout (`spark.read.parquet`).
+  /** `_meta.txt` marker every index build records next to its bucket
+    * specs.
     */
   val LayoutKey = "layout"
   val BucketedValue = "bucketed"
 
-  def isBucketed(meta: Map[String, String]): Boolean =
-    meta.get(LayoutKey).contains(BucketedValue)
+  /** `meta` itself — LOUD unless it carries the [[LayoutKey]] marker: an
+    * artifact without it (no committed version, a build from before the
+    * bucketed layout was the only one, a deleted or hand-edited
+    * `_meta.txt`) has no bucket specs to read or write by, and guessing
+    * a layout would silently mis-read or mis-bucket it.
+    */
+  def checkedMeta(indexDir: String,
+      meta: Map[String, String]): Map[String, String] =
+    if (meta.get(LayoutKey).contains(BucketedValue)) meta
+    else throw new IllegalStateException(
+      s"index artifact at $indexDir records no '$LayoutKey=$BucketedValue' " +
+        "in its current _meta.txt (no committed version, a pre-bucketed " +
+        "build, or a deleted or hand-edited meta) — rebuild the artifact")
 
   /** One table's bucket layout, recorded in the artifact meta: count,
     * bucket columns, sort columns, and the schema DDL the per-session
@@ -270,18 +281,10 @@ private[graft] object IndexLayout {
     ()
   }
 
-  /** Default write-task count for the ADMISSION path — see
-    * [[writeInto]]; `spark.graft.index.append.tasks` overrides.
+  /** Write-task count for the ADMISSION path — see [[writeInto]];
+    * shared by the bucketed append exchange and the L0 accrual writes.
     */
   val AppendTasks = 8
-
-  /** The session's admission write-task count ([[AppendTasks]] unless
-    * conf-overridden) — shared by the bucketed append exchange and the
-    * L0 accrual writes so one knob sizes both.
-    */
-  def appendTasks(spark: SparkSession): Int =
-    math.max(1, spark.conf.getOption("spark.graft.index.append.tasks")
-      .map(_.toInt).getOrElse(AppendTasks))
 
   /** Bucketed write of one table into a version dir. `overwrite` is the
     * build/compact path (fresh external table over the dir); append is
@@ -293,7 +296,7 @@ private[graft] object IndexLayout {
     * lands ONE file per touched bucket — without it every write task
     * opens a file per bucket it holds rows for (tasks × buckets small
     * files per admission, the accrual [[graft.streaming
-    * .VersionedArtifact.compact]] exists to pay down).
+    * .VersionedArtifact.compactBucketed]] exists to pay down).
     *
     * The exchange's PARTITION COUNT differs by path. Hash-partitioning
     * on the bucket id sends every bucket's rows to exactly ONE task at
@@ -305,9 +308,9 @@ private[graft] object IndexLayout {
     * scheduling overhead that scales with the corpus's bucket count,
     * not the batch (the 100× rehearsal's 3-table containment admission
     * scheduled 192 tasks to write a 125-doc delta): they write with
-    * [[AppendTasks]] tasks (conf `spark.graft.index.append.tasks`),
-    * each emitting the files of ~buckets/tasks buckets. File COUNT per
-    * admission is still O(touched buckets) — fine for the id-keyed
+    * [[AppendTasks]] tasks, each emitting the files of ~buckets/tasks
+    * buckets. File COUNT per admission is still O(touched buckets) —
+    * fine for the id-keyed
     * tables whose deltas touch ≤ |delta| buckets (`sets`, `signatures`,
     * `vectors`); the band/posting tables whose delta rows spread over
     * ~every bucket admit through [[l0Append]] instead.
@@ -322,7 +325,7 @@ private[graft] object IndexLayout {
     val bucketId = pmod(hash(spec.by.map(col): _*), lit(spec.buckets))
     val parts =
       if (overwrite) spec.buckets
-      else math.min(spec.buckets, appendTasks(spark))
+      else math.min(spec.buckets, AppendTasks)
     val w = df.repartition(parts, bucketId)
       .write.mode(if (overwrite) "overwrite" else "append")
       .format("parquet")
@@ -334,7 +337,7 @@ private[graft] object IndexLayout {
 
   /** L0 ACCRUAL admission write — the standard LSM/lakehouse trade the
     * containment face pioneered (r18), shared by every index family's
-    * high-fan-out table: the delta's rows land as ≤ [[appendTasks]]
+    * high-fan-out table: the delta's rows land as ≤ [[AppendTasks]]
     * UNBUCKETED parquet files under the table's `_l0` subdir
     * (underscore dirs are invisible to the registered bucketed table's
     * listing, so the base files' bucket contract holds), instead of one
@@ -348,16 +351,16 @@ private[graft] object IndexLayout {
     * `raw` slice rewrites it.
     */
   def l0Append(df: DataFrame, verDir: File, table: String): Unit =
-    df.repartition(appendTasks(df.sparkSession)).write.mode("append")
+    df.repartition(AppendTasks).write.mode("append")
       .parquet(new File(new File(verDir, table), "_l0").toString)
 
   /** L0 cutover factor: a high-fan-out table admits through [[l0Append]]
-    * only when its bucket count exceeds `factor × appendTasks` —
+    * only when its bucket count exceeds `factor × AppendTasks` —
     * below that the modulus append's file fan-out is already bounded
     * and cheap, while the L0 probe leg costs real per-batch jobs
     * (r18 measured +0.4–0.6 s/admit at 64/16 buckets, where L0 saved
     * nothing; the 8-vs-~1000-file win appears at ~1024 buckets —
-    * SCALE.md). Default 16 (with the default 8 append tasks: L0
+    * SCALE.md). Default 16 (with the 8 append tasks: L0
     * past 128 buckets ≈ 4 GB tables at the 32 MB/bucket sizing).
     * `spark.graft.index.l0.cutover` overrides; ≤ 0 = ALWAYS L0 (the
     * r18 behavior — what the L0-shape specs pin).
@@ -380,7 +383,7 @@ private[graft] object IndexLayout {
       verDir: File, spec: TableSpec): Unit = {
     val spark = df.sparkSession
     val cutover = l0CutoverFactor(spark)
-    if (cutover <= 0 || spec.buckets > cutover.toLong * appendTasks(spark))
+    if (cutover <= 0 || spec.buckets > cutover.toLong * AppendTasks)
       l0Append(df, verDir, table)
     else writeInto(df, family, table, verDir, spec, overwrite = false)
   }

@@ -1,7 +1,5 @@
 package graft.analytics
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,21 +28,16 @@ import org.apache.spark.sql.functions._
   * 2⁴ values/band degenerate to 16 giant buckets and quadratic candidate
   * volume (measured ×20.9 vs ×1.7 wall at 10× data — SCALE.md). The
   * oracled face builds with `Narrow` explicitly because its DuckDB
-  * oracle replays that seeded pipeline; artifacts written before the
-  * shape was recorded read back as `Narrow` (the only shape that
-  * revision ever built).
+  * oracle replays that seeded pipeline.
   *
-  * TWO LAYOUTS, ONE FAMILY (see [[DedupIndex]]'s class doc for the full
-  * design): the plain directory layout — `bands` = (band, bits, vec_id)
-  * parquet — or the BUCKETED layout (`build(…, bucketed = true)`, the
-  * corpus-scale default): `bands` = (bk, vec_id) with
-  * `bk = xxhash64(band, bits)` bucketBy bk, `vectors` bucketBy vec_id,
-  * both as [[IndexLayout]] external tables inside the same version dirs.
-  * Probes read the corpus side in place (only the delta exchanges —
-  * `SrpIndexBucketedSpec`), micro probes bucket-prune the band scan to
-  * the delta's key set, and admission/compaction preserve the layout. A
-  * bk collision can only add a candidate the exact-cosine verify
-  * filters.
+  * LAYOUT (see [[DedupIndex]]'s class doc for the full design):
+  * `bands` = (bk, vec_id) with `bk = xxhash64(band, bits)` bucketBy bk,
+  * `vectors` bucketBy vec_id, both as [[IndexLayout]] external tables
+  * inside the version dirs. Probes read the corpus side in place (only
+  * the delta exchanges — `SrpIndexBucketedSpec`), micro probes
+  * bucket-prune the band scan to the delta's key set, and
+  * admission/compaction preserve the layout. A bk collision can only
+  * add a candidate the exact-cosine verify filters.
   *
   * Versioning + deltaId-idempotent probe-then-admit + compaction ride the
   * same [[DurableIndex]] lifecycle as the other two
@@ -56,28 +49,25 @@ object SrpIndex extends DurableIndex {
 
   protected val tables = Seq("vectors", "bands")
   val idColumn = "vec_id"
-  protected val clusterKey = Map("vectors" -> "vec_id", "bands" -> "band")
+  protected val bucketKey = Map("vectors" -> "vec_id", "bands" -> "bk")
   protected val ratioTable = "vectors"
   protected val l0Tables = Seq("bands")
 
   /** The band shape the artifact was BUILT with — what every probe/admit
-    * must replay. Pre-metadata artifacts (r12) read back as `Narrow`,
-    * the only shape that revision ever wrote.
+    * must replay.
     */
   private[analytics] def shapeOf(indexDir: String): DedupQueries.SrpShape =
-    shapeOfMeta(artifact(indexDir).meta)
+    shapeOfMeta(metaOf(indexDir))
 
-  private def shapeOfMeta(m: Map[String, String]): DedupQueries.SrpShape =
-    (m.get("bands"), m.get("rowsPerBand")) match {
-      case (Some(b), Some(r)) =>
-        DedupQueries.SrpShape(b.toInt * r.toInt, b.toInt, r.toInt)
-      case _ => DedupQueries.Srp.Narrow
-    }
+  private def shapeOfMeta(m: Map[String, String]): DedupQueries.SrpShape = {
+    val (b, r) = (m("bands").toInt, m("rowsPerBand").toInt)
+    DedupQueries.SrpShape(b * r, b, r)
+  }
 
-  /** The bucketed-layout band projection: (bk, vec_id) with
-    * `bk = xxhash64(band, bits)` — single-column join/bucket/prune key.
+  /** The band projection: (bk, vec_id) with `bk = xxhash64(band, bits)`
+    * — single-column join/bucket/prune key.
     */
-  private def bucketedBandsOf(spark: SparkSession, v: DataFrame,
+  private def bandsOf(spark: SparkSession, v: DataFrame,
       shape: DedupQueries.SrpShape): DataFrame =
     DedupQueries.srpBandsOf(spark, v, shape)
       .select(xxhash64(col("band"), col("bits")).as("bk"), col("vec_id"))
@@ -85,69 +75,53 @@ object SrpIndex extends DurableIndex {
   /** Build (or fully REBUILD) from a `(vec_id, embedding)` corpus frame.
     * `shape` is recorded in the artifact and rules every later
     * probe/admit; the default is the corpus-scale `Wide` banding (see
-    * class doc for why `Narrow` cannot reach 100 TB). The BUCKETED
-    * layout is the DEFAULT (byte-sized counts unless `buckets` pins
-    * them, full spec recorded in the artifact meta — see
-    * [[DedupIndex.build]]); `bucketed = false` writes the plain
-    * directory layout the parity specs compare against.
+    * class doc for why `Narrow` cannot reach 100 TB). Bucket counts are
+    * byte-sized unless `buckets` pins them, full spec recorded in the
+    * artifact meta — see [[DedupIndex.build]].
     */
   def build(spark: SparkSession, vecs: DataFrame, indexDir: String,
       shape: DedupQueries.SrpShape = DedupQueries.Srp.Wide,
-      bucketed: Boolean = true, buckets: Int = 0): Unit = {
-    val carrier = beginBuild(spark, bucketed)
+      buckets: Int = 0, manifestCarrier: Boolean = false): Unit = {
+    val carrier = beginBuild(manifestCarrier)
     val shapeMeta = Map("bands" -> shape.bands.toString,
       "rowsPerBand" -> shape.rowsPerBand.toString)
     val v = DedupQueries.srpVectorsOf(spark, vecs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (!bucketed)
-        artifact(indexDir).build({ ver =>
-          v.write.mode("overwrite").parquet(new File(ver, "vectors").toString)
-          DedupQueries.srpBandsOf(spark, v, shape)
-            .write.mode("overwrite").parquet(new File(ver, "bands").toString)
-        }, buildMeta = shapeMeta)
-      else {
-        // buckets = 0: per-table sizing from bytes (Bucketing
-        // .indexBuckets — 32 MB index target, parallelism floor) — the
-        // count rides the persisted frame the writes reuse. Vector
-        // rows carry the double array (dims × 8 B + norm); band rows are
-        // bands/vector at ~16 B (bk, vec_id). rows == 0 guard: first()
-        // on an empty frame throws — an empty corpus builds floor-count
-        // empty tables instead
-        val rows = if (buckets > 0) 0L else v.count()
-        val dims = if (buckets > 0 || rows == 0) 0
-          else v.select(size(col("v"))).first().getInt(0)
-        def n(bytes: Long): Int =
-          if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
-        buildBucketed(indexDir, shapeMeta ++ carrier,
-          Map("vectors" -> "vec_id", "bands" -> "bk"),
-          Seq(("vectors", v, n(rows * (dims * 8L + 16L))),
-            ("bands", bucketedBandsOf(spark, v, shape),
-              n(rows * shape.bands * 16L))))
-      }
+      // buckets = 0: per-table sizing from bytes (Bucketing.indexBuckets
+      // — 32 MB index target, parallelism floor) — the count rides the
+      // persisted frame the writes reuse. Vector rows carry the double
+      // array (dims × 8 B + norm); band rows are bands/vector at ~16 B
+      // (bk, vec_id). rows == 0 guard: first() on an empty frame throws —
+      // an empty corpus builds floor-count empty tables instead
+      val rows = if (buckets > 0) 0L else v.count()
+      val dims = if (buckets > 0 || rows == 0) 0
+        else v.select(size(col("v"))).first().getInt(0)
+      def n(bytes: Long): Int =
+        if (buckets > 0) buckets else Bucketing.indexBuckets(spark, bytes)
+      buildTables(indexDir, shapeMeta ++ carrier,
+        Seq(("vectors", v, n(rows * (dims * 8L + 16L))),
+          ("bands", bandsOf(spark, v, shape), n(rows * shape.bands * 16L))))
     } finally { v.unpersist(); () }
   }
 
   /** ADMIT a delta — see [[DurableIndex.append]]. Bands with the shape
-    * (and layout) the artifact records — never a caller choice. On the
-    * bucketed layout `vectors` appends at the bucket modulus (vec_id-keyed
+    * the artifact records — never a caller choice. `vectors` appends at
+    * the bucket modulus (vec_id-keyed
     * — ≤ |delta| touched buckets) and `bands` as L0 accrual
     * ([[IndexLayout.fanoutAppend]]) — a delta's |delta| × bands band
     * rows hash across ~every bucket.
     */
   def append(spark: SparkSession, vecs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {
-    val meta = artifact(indexDir).meta
+    val meta = metaOf(indexDir)
     val shape = shapeOfMeta(meta)
-    val bucketed = IndexLayout.isBucketed(meta)
     artifact(indexDir).admit(deltaId, tables, { ver =>
       val v = DedupQueries.srpVectorsOf(spark, vecs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         appendTable(indexDir, meta, ver, "vectors", v)
-        appendTable(indexDir, meta, ver, "bands",
-          if (bucketed) bucketedBandsOf(spark, v, shape)
-          else DedupQueries.srpBandsOf(spark, v, shape))
+        appendTable(indexDir, meta, ver, "bands", bandsOf(spark, v, shape))
       } finally { v.unpersist(); () }
     })
   }
@@ -177,8 +151,8 @@ object SrpIndex extends DurableIndex {
     * `micro = true` declares `deltaVecs` a MICRO-BATCH (the streaming
     * ingest face): delta bands and candidates broadcast into the corpus
     * joins, so the cached band/vector tables STREAM with zero per-batch
-    * exchange — see [[ContainIndex.probeLoaded]]. On the bucketed
-    * layout, micro goes further ([[DedupIndex.probeLoaded]]'s design):
+    * exchange — see [[ContainIndex.probeLoaded]]. Uncached, micro goes
+    * further ([[DedupIndex.probeLoaded]]'s design):
     * the delta's band rows collect, the corpus band scan BUCKET-PRUNES
     * to their key set, the candidate pairs localize, and the verify's
     * corpus VECTOR scan bucket-prunes to the matched ids — every corpus
@@ -193,23 +167,14 @@ object SrpIndex extends DurableIndex {
     val deltaV = DedupQueries.srpVectorsOf(spark, deltaVecs)
     // id_a =!= id_b: re-probe of an admitted delta must not self-match
     val (cand, corpusVectors) =
-      if (!loaded.bucketed) {
-        val corpusBands = loaded.bands.withColumnRenamed("vec_id", "id_a")
-        val deltaBands = DedupQueries
-          .srpBandsOf(spark, deltaV, loaded.shape)
-          .withColumnRenamed("vec_id", "id_b")
-        val deltaSide = if (micro) broadcast(deltaBands) else deltaBands
-        (deltaSide.join(corpusBands, Seq("band", "bits"))
-          .where(col("id_a") =!= col("id_b"))
-          .select(col("id_a"), col("id_b")).distinct(), loaded.vectors)
-      } else if (!micro || IndexLayout.isCached(loaded.bands)) {
+      if (!micro || IndexLayout.isCached(loaded.bands)) {
         // batch probe, or the micro CACHED regime: lazy bk equi-join;
         // micro broadcasts the delta so the corpus side streams — see
         // DedupIndex.probeLoaded's three-regime design comment. L0 leg:
         // join base and accrual separately, union RESULTS (see
         // DedupIndex.probeLoaded — unioning the inputs would erase the
         // base table's bucket partitioning)
-        val deltaBands = bucketedBandsOf(spark, deltaV, loaded.shape)
+        val deltaBands = bandsOf(spark, deltaV, loaded.shape)
           .withColumnRenamed("vec_id", "id_b")
         val deltaSide = if (micro) broadcast(deltaBands) else deltaBands
         def leg(c: DataFrame): DataFrame =
@@ -246,7 +211,7 @@ object SrpIndex extends DurableIndex {
       "corpus_id", "new_id")
   }
 
-  /** The bucketed micro probe's candidate frame, LAZY — see
+  /** The uncached micro probe's candidate frame, LAZY — see
     * [[DedupIndex.microCandidates]]: delta band rows collected and
     * re-broadcast as a local relation, corpus band scan bucket-pruned to
     * their key set (`SrpIndexBucketedSpec` pins the shape).
@@ -255,7 +220,7 @@ object SrpIndex extends DurableIndex {
       deltaV: DataFrame): DataFrame = {
     val spark = deltaV.sparkSession
     import spark.implicits._
-    val deltaBandRows = bucketedBandsOf(spark, deltaV, loaded.shape)
+    val deltaBandRows = bandsOf(spark, deltaV, loaded.shape)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val deltaSide = broadcast(deltaBandRows.toDF("bk", "id_b"))
     // L0 leg (see DedupIndex.microCandidates): the base scan keeps its

@@ -398,7 +398,7 @@ object IngestDedup {
     val cache = new VersionedCache[index.Loaded](
       () => index.currentVersion(indexDir),
       () => index.load(spark, indexDir),
-      l => cacheIfFits(spark, l.bucketed, admitting = admitId.isDefined,
+      l => cacheIfFits(spark, admitting = admitId.isDefined,
         () => index.artifactBytes(indexDir), l.cacheFrames),
       purgePending = () => index.purgePending(indexDir),
       appliedDeltas = () => index.appliedDeltas(indexDir))
@@ -671,10 +671,6 @@ object IngestDedup {
     * at 1.2–2.4 s/batch, SCALE.md); past the budget the probes
     * fall to pruned/parallel bucketed disk reads — the only option at
     * 100 TB, where no cluster pins the corpus index in memory.
-    * Directory-layout frames (the parity fallback) always persist —
-    * their probes scan the whole corpus side per batch, so memory is
-    * the right place for it, and the layout is not the corpus-scale
-    * path.
     *
     * ADMITTING STREAMS SKIP THE CACHE by default (`admitting = true`):
     * every non-empty batch's admission moves the artifact pointer, so
@@ -688,11 +684,11 @@ object IngestDedup {
     * (right when admissions are RARE relative to batches — e.g. a
     * mostly-empty firehose — so the re-materialization amortizes).
     *
-    * The budget: `spark.graft.index.cache.maxBytes` if set, else a
-    * quarter of the EXECUTORS' max storage memory ([[storageBudget]]:
-    * the driver's block manager is excluded in cluster mode — it holds
-    * no cached partitions, so counting it overestimates headroom;
-    * local mode keeps its single entry, which IS the executor) —
+    * The budget: a quarter of the EXECUTORS' max storage memory
+    * ([[storageBudget]]: the driver's block manager is excluded in
+    * cluster mode — it holds no cached partitions, so counting it
+    * overestimates headroom; local mode keeps its single entry, which
+    * IS the executor) —
     * headroom for the parquet → deserialized-columnar inflation
     * (measured ~2-4× on these tables) and for everything else the
     * storage pool holds. Max (not remaining) memory keeps the policy
@@ -703,23 +699,15 @@ object IngestDedup {
     * driver-side directory walk per version load (never per batch).
     */
   private[streaming] def cacheIfFits(spark: org.apache.spark.sql.SparkSession,
-      bucketed: Boolean, admitting: Boolean, bytes: () => Long,
+      admitting: Boolean, bytes: () => Long,
       all: => Seq[DataFrame]): Seq[DataFrame] =
-    if (!bucketed) all
-    else if (admitting && !spark.conf
+    if (admitting && !spark.conf
         .getOption("spark.graft.index.cache.admitting").contains("always"))
       Seq.empty
-    else {
-      // byteStringAsBytes: accept Spark-conventional size strings
-      // ("512m", "8g") as well as plain byte counts — a bare .toLong
-      // would kill the stream from inside foreachBatch on "1g"
-      val budget = spark.conf.getOption("spark.graft.index.cache.maxBytes")
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(storageBudget(
-          spark.sparkContext.getExecutorMemoryStatus.toMap,
-          spark.sparkContext.getConf.get("spark.driver.host", "")))
-      if (bytes() <= budget) all else Seq.empty
-    }
+    else if (bytes() <= storageBudget(
+        spark.sparkContext.getExecutorMemoryStatus.toMap,
+        spark.sparkContext.getConf.get("spark.driver.host", ""))) all
+    else Seq.empty
 
   /** Quarter of the executors' max storage memory, from
     * `getExecutorMemoryStatus` (keys are `host:port` block-manager

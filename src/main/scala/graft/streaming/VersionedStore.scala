@@ -482,8 +482,8 @@ private[graft] final class VersionedArtifact(indexDir: String) {
   /** Carry every SIDECAR directory of `cur` (a LOGICAL subdir not in
     * `tables`, e.g. `tombstones`) into `next` unless already there —
     * so lifecycle steps that enumerate only the family's tables still
-    * carry table-shaped extras. Called by [[admit]]/[[compact]]/
-    * [[compactBucketed]]; [[purgeVersionBudgeted]] takes a drop-list.
+    * carry table-shaped extras. Called by [[admit]]/[[compactBucketed]];
+    * [[purgeVersionBudgeted]] takes a drop-list.
     * Logical enumeration: under the manifest carrier a sidecar carried
     * by reference has no physical subdir in `cur`.
     */
@@ -538,13 +538,13 @@ private[graft] final class VersionedArtifact(indexDir: String) {
 
   /** Build-time artifact properties (`_meta.txt`, `k=v` lines inside each
     * version dir — atomic with the pointer swap, carried verbatim through
-    * [[admit]]/[[compact]]): the parameters a PROBE must replay exactly
-    * as the BUILD chose them (an LSH index's band shape, a quantizer's
+    * [[admit]]/[[compactBucketed]]): the parameters a PROBE must replay
+    * exactly as the BUILD chose them (an LSH index's band shape, a quantizer's
     * codebook config). Probing with different parameters than the
     * artifact was built with silently degrades to garbage candidates, so
-    * the artifact itself is the source of truth. Empty for artifacts
-    * written before metadata existed — readers supply their legacy
-    * default.
+    * the artifact itself is the source of truth. Empty for a version
+    * without a `_meta.txt`, which the index faces refuse to read or
+    * write (`IndexLayout.checkedMeta`).
     */
   def meta: Map[String, String] =
     currentDir.map(readMeta).getOrElse(Map.empty)
@@ -565,7 +565,7 @@ private[graft] final class VersionedArtifact(indexDir: String) {
     * sidecar part-file names — the sidecar is append-only and
     * link-carried, so names identify the set), the rest are
     * `table/bucket` slices already rewritten against that set. Carried
-    * verbatim through [[admitAll]]/[[compact]]/[[compactBucketed]] (a
+    * verbatim through [[admitAll]]/[[compactBucketed]] (a
     * sliced purge must survive interleaved admissions); a NEW tombstone
     * admission changes the fingerprint and the next slice RESTARTS from
     * zero — re-rewriting an already-clean bucket is a correct no-op,
@@ -741,71 +741,16 @@ private[graft] final class VersionedArtifact(indexDir: String) {
     }
   }
 
-  /** Compact the artifact's small files: every [[admit]] appends a part
-    * file per write task into each table — a daily-delta loop accretes a
-    * file set that grows with admission COUNT, whose per-file open/footer
-    * cost (and listing tax at cluster scale) comes to dominate the probe.
-    * Rewrites ONLY tables holding more than `maxFiles` parquet files
-    * (`rewrite(srcTablePath, targetTableDir)` is the caller's
-    * read-coalesce-write), hard-links every other table, CARRIES the
-    * admitted-delta set (compaction must not reset idempotence — a
-    * retried delta after compact is still a no-op), and commits with the
-    * atomic pointer swap. Same single-writer contract as [[admit]]; same
-    * multiset guarantee as `CdcHistoryTable.compact` — content is
-    * preserved row-for-row, only the file layout changes. Returns the
-    * number of tables rewritten.
-    */
-  def compact(tables: Seq[String], maxFiles: Int)(
-      rewrite: (String, File) => Unit): Int =
-    compact(tables, (_: String) => maxFiles)(rewrite)
-
-  /** [[compact]] with a PER-TABLE file-count threshold — what the
-    * bucketed layout needs: its compacted steady state is one file PER
-    * BUCKET, so a flat count (the directory layout's 64) would flag a
-    * 1024-bucket table as permanently fat and rewrite the whole corpus
-    * table on every maintenance call. Bucketed callers pass
-    * `buckets(t) + slack` (slack = allowed accrual files beyond the
-    * floor) so the skip test measures ACCRUAL, not size.
-    */
-  def compact(tables: Seq[String], threshold: String => Int)(
-      rewrite: (String, File) => Unit): Int = {
-    val curV = currentVersion.getOrElse(
-      throw new IllegalStateException(s"no artifact at $indexDir — build first"))
-    val cur = versionDir(curV)
-    // table-GRANULAR compaction hands the caller a source DIRECTORY to
-    // re-read, which a manifest-carried table does not have — the
-    // bucketed (file-list) compact below is the carrier-complete path
-    require(!isManifest(cur),
-      "table-granular compact() reads whole table dirs — a manifest-" +
-        "carried artifact must use compactBucketed (file-list rewrites)")
-    def parquetCount(t: String): Int =
-      Option(new File(cur, t).listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val fat = tables.filter(t => parquetCount(t) > threshold(t))
-    if (fat.isEmpty) 0
-    else {
-      val next = versionDir(curV + 1)
-      VersionedStore.clearStale(next)
-      val carry = carryOf(cur, next)
-      tables.filterNot(fat.contains).foreach(t => carry.tree(t))
-      carryExtras(carry, cur, next, tables)
-      fat.foreach(t => rewrite(new File(cur, t).toString, new File(next, t)))
-      writeDeltas(next, readDeltas(cur))
-      writeMeta(next, readMeta(cur))
-      carryPurge(cur, next)
-      carry.commit()
-      require(currentVersion.contains(curV),
-        s"concurrent admission detected at $indexDir (version moved past " +
-          s"$curV) — the artifact requires a single writer")
-      VersionedStore.swapPointer(indexDir, curV + 1)
-      fat.length
-    }
-  }
-
-  /** BUCKET-GRANULAR compaction for the bucketed index layout — the
+  /** Compact the artifact's small files, BUCKET-GRANULARLY — the
     * difference between an O(admitted bytes) maintenance call and an
-    * O(corpus) one. Table-granular [[compact]] rewrites every fat table
-    * whole, but on the bucketed layout almost all of a fat table's
+    * O(corpus) one. Every [[admit]] appends files into its tables, so an
+    * admission loop accretes a file set that grows with admission COUNT
+    * (per-file open/footer cost and listing tax). Only tables holding
+    * more than `threshold(table)` files compact; callers pass
+    * `buckets(t) + slack` (the compacted steady state is one file PER
+    * BUCKET, so a flat count would flag a 1024-bucket table as
+    * permanently fat), so the skip test measures ACCRUAL, not size.
+    * Rewriting a fat table whole would be wrong too: almost all of its
     * bytes sit in the per-bucket BASE files the build wrote (one big
     * file per bucket); the accrual that tripped the threshold is the
     * small one-file-per-touched-bucket admission appends. Measured on
@@ -841,9 +786,12 @@ private[graft] final class VersionedArtifact(indexDir: String) {
     * does); the kept base files are hard-linked in AFTERWARDS, so the
     * steady state is ≤ 2 files per bucket — callers' thresholds stay
     * `buckets + slack` and simply fire more often, each firing folding
-    * only the accrual since the last. Same deltaId carry, meta carry,
-    * single-writer tripwire, and atomic pointer swap as [[compact]];
-    * same multiset guarantee. Returns the number of tables compacted.
+    * only the accrual since the last. CARRIES the admitted-delta set
+    * (compaction must not reset idempotence — a retried delta after
+    * compact is still a no-op) and the meta, keeps [[admit]]'s
+    * single-writer tripwire and atomic pointer swap, and preserves
+    * content row-for-row (the multiset guarantee of
+    * `CdcHistoryTable.compact`). Returns the number of tables compacted.
     */
   def compactBucketed(tables: Seq[String], threshold: String => Int)(
       rewrite: (String, Seq[File], File) => Unit): Int = {
@@ -916,66 +864,44 @@ private[graft] final class VersionedArtifact(indexDir: String) {
     * carry. Deltas and meta carry — idempotence of prior admissions
     * must survive a purge. Same single-writer tripwire and atomic
     * pointer swap as every lifecycle step here.
-    */
-  def purgeVersion(rewriteTables: Seq[String], linkTables: Seq[String],
-      dropExtras: Set[String])(rewrite: (String, String, File) => Unit)
-      : Unit =
-    purgeVersionSelective(rewriteTables, linkTables, dropExtras,
-      _ => None) { (t, files, tgt) =>
-      // whole-table path: the caller's rewrite reads the table dir
-      rewrite(t, files.head.getParentFile.toString, tgt)
-    }
-
-  /** [[purgeVersion]] with BUCKET-selective rewrites: for a table whose
-    * bucket key IS its document-id column (the bucketed layout's
-    * signatures/vectors/sets), the buckets holding tombstoned rows are
-    * computable from the tombstone ids with the same `pmod(hash, n)`
-    * the writer used — `affected(table)` returns their 5-digit bucket
-    * names and only THOSE buckets' files rewrite; every other file
-    * hard-links. Purge there is O(affected buckets' bytes) ≈
-    * O(|tombstones| × bucket size), not O(table). `None` = rewrite the
-    * whole table (band/posting tables, where deleted rows spread across
-    * all buckets by construction). A file whose name carries no bucket
-    * id joins the rewrite set — rewriting is always correct.
-    * Unbudgeted: everything pending rewrites in this one call.
-    */
-  def purgeVersionSelective(rewriteTables: Seq[String],
-      linkTables: Seq[String], dropExtras: Set[String],
-      affected: String => Option[Set[String]])(
-      rewrite: (String, Seq[File], File) => Unit): Unit = {
-    purgeVersionBudgeted(rewriteTables, linkTables, dropExtras, affected,
-      budget = 0)(rewrite)
-    ()
-  }
-
-  /** [[purgeVersionSelective]] under a BUCKET BUDGET — what keeps the
-    * auto-purge from stalling the admitting stream it runs inside
-    * (r17 verdict #1: the contain face's token-keyed tables rewrite
-    * whole, 31.2 s vs an 11.4 s plain-admit batch at the 100×
-    * rehearsal the moment the ratio tripped). Each call commits ONE
-    * version in which at most `budget` bucket-slices of the pending
-    * rewrite work fold (anti-joined by the caller's `rewrite`) while
-    * everything else — including pending-but-not-selected buckets —
+    *
+    * BUCKET-selective: for a table whose bucket key IS its document-id
+    * column (signatures/vectors/sets), the buckets holding tombstoned
+    * rows are computable from the tombstone ids with the same
+    * `pmod(hash, n)` the writer used — `affected(table)` returns their
+    * 5-digit bucket names and only THOSE buckets' files rewrite; every
+    * other file hard-links, so purge there is O(affected buckets'
+    * bytes). `None` = rewrite the whole table (band/posting tables,
+    * where deleted rows spread across all buckets by construction). A
+    * file whose name carries no bucket id joins the rewrite set —
+    * rewriting is always correct.
+    *
+    * Under a BUCKET BUDGET — what keeps the auto-purge from stalling the
+    * admitting stream it runs inside (r17 verdict #1: the contain face's
+    * token-keyed tables rewrite whole, 31.2 s vs an 11.4 s plain-admit
+    * batch at the 100× rehearsal the moment the ratio tripped). Each call
+    * commits ONE version in which at most `budget` bucket-slices of the
+    * pending rewrite work fold (anti-joined by the caller's `rewrite`)
+    * while everything else — including pending-but-not-selected buckets —
     * hard-links; `_purge.txt` records the slices done so the next call
-    * continues instead of repeating. The slice that exhausts the
-    * pending set is the FINAL one: it drops `dropExtras` (the sidecar)
-    * and writes no progress file. `budget <= 0` = unlimited (the whole
-    * purge in one call). Returns true iff this call COMPLETED the
-    * purge.
+    * continues instead of repeating. The slice that exhausts the pending
+    * set is the FINAL one: it drops `dropExtras` (the sidecar) and writes
+    * no progress file. `budget <= 0` = unlimited (the whole purge in one
+    * call). Returns true iff this call COMPLETED the purge.
     *
     * Correctness while sliced: the sidecar stays until the final slice,
     * so every probe keeps its logical tombstone filter — a half-purged
     * artifact answers identically to an unpurged one. The work list is
-    * keyed by FILE-NAME bucket ids, so a whole-rewrite table (`affected
-    * = None`) slices naturally at bucket granularity; files without a
+    * keyed by FILE-NAME bucket ids, so a whole-rewrite table (`affected =
+    * None`) slices naturally at bucket granularity; files without a
     * bucket id (L0 accrual) form a per-table `raw` slice. Two priced
     * edges: (1) a new tombstone admission mid-purge changes the
-    * fingerprint and restarts the progress (see `_purge.txt` notes);
-    * (2) rows ADMITTED mid-purge into an already-done slice are
-    * post-tombstone data and do not rewrite — a caller re-admitting an
-    * id it has taken down, before the purge completes, keeps that copy
-    * physically (it still reads as deleted until the sidecar drops, and
-    * a re-delete purges it).
+    * fingerprint and restarts the progress (see `_purge.txt` notes); (2)
+    * rows ADMITTED mid-purge into an already-done slice are
+    * post-tombstone data and do not rewrite — a caller re-admitting an id
+    * it has taken down, before the purge completes, keeps that copy
+    * physically (it still reads as deleted until the sidecar drops, and a
+    * re-delete purges it).
     */
   def purgeVersionBudgeted(rewriteTables: Seq[String],
       linkTables: Seq[String], dropExtras: Set[String],

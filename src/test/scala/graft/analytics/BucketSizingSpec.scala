@@ -63,10 +63,10 @@ class BucketSizingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory(p).toString
     val floor = Bucketing.indexBuckets(spark, 0L).toString
     val dIdx = tmp("sz-dedup")
-    DedupIndex.build(spark, docs, dIdx, bucketed = true)
+    DedupIndex.build(spark, docs, dIdx)
     DedupIndex.load(spark, dIdx)
     val cIdx = tmp("sz-contain")
-    ContainIndex.build(spark, docs, cIdx, bucketed = true)
+    ContainIndex.build(spark, docs, cIdx)
     ContainIndex.load(spark, cIdx)
     for ((idx, t) <- Seq(dIdx -> "bands", dIdx -> "signatures",
         cIdx -> "tokens", cIdx -> "prefix", cIdx -> "sets", cIdx -> "df"))
@@ -75,7 +75,7 @@ class BucketSizingSpec extends SparkSpec {
           "toy corpus")
     // explicit count still wins
     val dIdx8 = tmp("sz-dedup8")
-    DedupIndex.build(spark, docs, dIdx8, bucketed = true, buckets = 8)
+    DedupIndex.build(spark, docs, dIdx8, buckets = 8)
     DedupIndex.load(spark, dIdx8)
     assert(numBuckets(dIdx8, "bands") === "8")
     // empty corpus: the SRP auto-sizer reads dims from a first() —
@@ -84,7 +84,7 @@ class BucketSizingSpec extends SparkSpec {
       .table(spark, "/root/testdata/sf0.001", "embeddings")
       .select($"vec_id", $"embedding").filter(lit(false))
     val sIdx = tmp("sz-srp-empty")
-    SrpIndex.build(spark, noVecs, sIdx, bucketed = true)
+    SrpIndex.build(spark, noVecs, sIdx)
     SrpIndex.load(spark, sIdx)
     assert(numBuckets(sIdx, "vectors") === floor)
   }

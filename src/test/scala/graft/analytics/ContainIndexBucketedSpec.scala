@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The UNIFIED bucketed containment artifact ([[ContainIndex.build]]
-  * with `bucketed = true`): ordered-pair parity with the directory
-  * artifact, the exchange-free corpus plan (every corpus table read in
+/** The bucketed containment artifact ([[ContainIndex.build]]):
+  * ordered-pair parity with the independent in-session face, the
+  * exchange-free corpus plan (every corpus table read in
   * place — the bucketed batch probe verifies BOTH directions over ONE
   * corpus `sets` scan, r22, so the doc_id-bucketed table never
   * re-shuffles AND never re-reads), the admission lifecycle on the
@@ -28,24 +28,24 @@ class ContainIndexBucketedSpec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
 
-  test("bucketed containment probe: pair parity with the directory " +
-      "artifact, and the corpus sets verify without an Exchange") {
+  test("bucketed containment probe: pair parity with the in-session " +
+      "face, and the corpus sets verify without an Exchange") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (corpus, delta) = fixture()
-      val plainIdx = java.nio.file.Files
-        .createTempDirectory("graft-contain-dir").toString
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-contain-bidx").toString
-      ContainIndex.build(spark, corpus, plainIdx, bucketed = false)
-      ContainIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 8)
+      ContainIndex.build(spark, corpus, bIdx, buckets = 8)
 
       val bucketed = ContainIndex.probe(spark, bIdx, delta)
       val got = triples(bucketed)
-      val plain = triples(ContainIndex.probe(spark, plainIdx, delta))
-      assert(plain.nonEmpty, "fixture must contain cross-split pairs")
-      assert(got === plain,
-        "bucketed containment probe diverged from the directory artifact")
+      // the same % 5 split, ranked by live df (frozen-df parity is the
+      // prefix pigeonhole's order-independence)
+      val inSession =
+        triples(DedupQueries.containmentIncrementalInSession(spark, dir))
+      assert(inSession.nonEmpty, "fixture must contain cross-split pairs")
+      assert(got === inSession,
+        "bucketed containment probe diverged from the in-session face")
 
       // final adaptive plan only (the appended initial plan would
       // double-count)
@@ -88,9 +88,10 @@ class ContainIndexBucketedSpec extends SparkSpec {
       .createTempDirectory("graft-contain-blife").toString
     // 64 buckets: a tiny doc's ≤ 57 distinct 16-char shingle hashes can
     // cover at most 57 buckets, so the pruned set is provably proper
-    ContainIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 64)
+    ContainIndex.build(spark, corpus, bIdx, buckets = 64)
     val loaded = ContainIndex.load(spark, bIdx)
-    assert(loaded.bucketed)
+    assert(loaded.buckets === Seq("tokens", "prefix", "sets", "df")
+      .map(_ -> 64).toMap)
     val micro = ContainIndex.probeLoaded(loaded, delta, micro = true)
     val microTriples = triples(micro)
     assert(microTriples === triples(ContainIndex.probeLoaded(loaded,

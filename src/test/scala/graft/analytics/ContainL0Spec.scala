@@ -71,8 +71,8 @@ class ContainL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // demand SelectedBucketsCount < 64 (the ContainIndexBucketedSpec
     // trick)
     ContainIndex.build(spark, docs.filter($"doc_id" % 5 < 3), idx,
-      bucketed = true, buckets = 64)
-    val tasks = IndexLayout.appendTasks(spark)
+      buckets = 64)
+    val tasks = IndexLayout.AppendTasks
 
     val tokensBase = topLevel(idx, "tokens")
     val prefixBase = topLevel(idx, "prefix")

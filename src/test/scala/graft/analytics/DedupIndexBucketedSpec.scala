@@ -4,15 +4,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The UNIFIED bucketed artifact ([[DedupIndex.build]] with
-  * `bucketed = true`): one artifact family carrying BOTH halves of the
-  * 100 TB index story — the versioned-admission lifecycle (deltaId
-  * idempotence, hard-link carry, compaction behind the atomic swap) AND
-  * the bucketed managed-table probe shape (corpus side read in place,
-  * only the delta exchanges; micro probes bucket-prune the scan).
-  * Pinned here: (1) pair parity with the directory artifact, (2) the
-  * exchange-free corpus plan, (3) the lifecycle on the bucketed layout,
-  * (4) bucket pruning in the micro probe.
+/** The bucketed artifact ([[DedupIndex.build]]): one artifact family
+  * carrying BOTH halves of the 100 TB index story — the
+  * versioned-admission lifecycle (deltaId idempotence, hard-link carry,
+  * compaction behind the atomic swap) AND the bucketed managed-table
+  * probe shape (corpus side read in place, only the delta exchanges;
+  * micro probes bucket-prune the scan). Pinned here: (1) pair parity
+  * with the independent in-session face, (2) the exchange-free corpus
+  * plan, (3) the lifecycle on the bucketed layout, (4) bucket pruning in
+  * the micro probe.
   */
 class DedupIndexBucketedSpec extends SparkSpec {
 
@@ -28,24 +28,23 @@ class DedupIndexBucketedSpec extends SparkSpec {
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("bucketed artifact probe: pair parity with the directory " +
-      "artifact, corpus sides join without an Exchange") {
+  test("bucketed artifact probe: pair parity with the in-session " +
+      "face, corpus sides join without an Exchange") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (corpus, delta) = fixture()
-      val plainIdx = java.nio.file.Files
-        .createTempDirectory("graft-dedup-dir").toString
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-dedup-bidx").toString
-      DedupIndex.build(spark, corpus, plainIdx, bucketed = false)
-      DedupIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 8)
+      DedupIndex.build(spark, corpus, bIdx, buckets = 8)
 
       val bucketed = DedupIndex.probe(spark, bIdx, delta)
       val got = pairs(bucketed)
-      val plain = pairs(DedupIndex.probe(spark, plainIdx, delta))
-      assert(plain.nonEmpty, "fixture must contain cross-split pairs")
-      assert(got === plain,
-        "bucketed artifact probe diverged from the directory artifact")
+      // the same % 5 split, at the artifact's (default Corpus) shape
+      val inSession = pairs(DedupQueries
+        .incrementalInSession(spark, dir, DedupIndex.Shape.Corpus))
+      assert(inSession.nonEmpty, "fixture must contain cross-split pairs")
+      assert(got === inSession,
+        "bucketed artifact probe diverged from the in-session face")
 
       // plan shape, final adaptive plan only (the appended initial plan
       // would double-count): the candidate join's only bk exchange is
@@ -78,18 +77,15 @@ class DedupIndexBucketedSpec extends SparkSpec {
     val bIdx = java.nio.file.Files
       .createTempDirectory("graft-dedup-blife").toString
     // non-default Oracle shape: probes take no shape argument, so parity
-    // with an Oracle-shaped directory artifact proves the probe replayed
+    // with the Oracle-shaped in-session face proves the probe replayed
     // the artifact-recorded shape (a Corpus-banded delta against an
     // Oracle-banded corpus matches only on 64-bit collisions)
     DedupIndex.build(spark, corpus, bIdx, DedupIndex.Shape.Oracle,
-      bucketed = true, buckets = 4)
+      buckets = 4)
     assert(DedupIndex.shapeOf(bIdx) === DedupIndex.Shape.Oracle)
-    val plainIdx = java.nio.file.Files
-      .createTempDirectory("graft-dedup-dlife").toString
-    DedupIndex.build(spark, corpus, plainIdx, DedupIndex.Shape.Oracle,
-      bucketed = false)
     val before = pairs(DedupIndex.probe(spark, bIdx, delta))
-    assert(before === pairs(DedupIndex.probe(spark, plainIdx, delta)))
+    assert(before === pairs(DedupQueries.incrementalInSession(spark, dir,
+      DedupIndex.Shape.Oracle)))
     assert(before.nonEmpty)
 
     // admit a synthetic near-dup of a corpus doc; idempotence: the retry
@@ -109,9 +105,11 @@ class DedupIndexBucketedSpec extends SparkSpec {
     val after = pairs(DedupIndex.probe(spark, bIdx, probeDoc))
     assert(after.exists(_._1 == 900001L),
       s"admitted doc not probed against: $after")
-    // directory artifact given the same admission must agree
-    DedupIndex.append(spark, admitted, plainIdx, "delta-1")
-    assert(after === pairs(DedupIndex.probe(spark, plainIdx, probeDoc)))
+    // the in-session engine over the same corpus plus the admission
+    // must agree
+    assert(after === pairs(DedupQueries.incrementalPairs(
+      DedupQueries.signaturesOf(corpus.unionByName(admitted)),
+      DedupQueries.signaturesOf(probeDoc), DedupIndex.Shape.Oracle)))
 
     // compaction: force a rewrite (maxFiles = 0), probe multiset
     // unchanged, deltas carried, layout still bucketed (probe plan
@@ -136,9 +134,9 @@ class DedupIndexBucketedSpec extends SparkSpec {
       .createTempDirectory("graft-dedup-bprune").toString
     // 64 buckets ≫ the 32 band keys a 1-doc micro-batch carries, so the
     // pruned set is provably proper (k ≤ 32 < 64)
-    DedupIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 64)
+    DedupIndex.build(spark, corpus, bIdx, buckets = 64)
     val loaded = DedupIndex.load(spark, bIdx)
-    assert(loaded.bucketed)
+    assert(loaded.buckets === Map("signatures" -> 64, "bands" -> 64))
     val micro = DedupIndex.probeLoaded(loaded, delta, micro = true)
     val microPairs = pairs(micro)
     assert(microPairs === pairs(DedupIndex.probeLoaded(loaded, delta)),

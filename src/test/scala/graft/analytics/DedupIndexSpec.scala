@@ -44,7 +44,7 @@ class DedupIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
 
   test("default build is the corpus-scale 32×8/256 shape, RECORDED in " +
       "the artifact and replayed by probe at pair parity; shape survives " +
-      "admit and compact; a pre-metadata artifact reads back 16×4/128") {
+      "admit and compact") {
     import spark.implicits._
     val docs = graft.GraftSession.table(spark, dir, "documents")
       .select($"doc_id", $"text")
@@ -75,15 +75,39 @@ class DedupIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     DedupIndex.compact(spark, idx, maxFiles = 1)
     assert(DedupIndex.shapeOf(idx) === DedupIndex.Shape.Corpus,
       "compact dropped the recorded band shape")
-    // legacy: an artifact without metadata (r12) reads back the 16×4/128
-    // shape — the only one that revision ever wrote
+  }
+
+  test("an artifact whose meta lacks layout=bucketed fails LOUDLY, " +
+      "naming the index dir: load, append, compact, purge and shapeOf " +
+      "throw instead of guessing a layout") {
+    import spark.implicits._
+    val docs = graft.GraftSession.table(spark, dir, "documents")
+      .select($"doc_id", $"text")
+    val idx = java.nio.file.Files.createTempDirectory("graft-dedup-nometa")
+      .toString
+    DedupIndex.build(spark, docs.filter($"doc_id" % 5 < 3), idx)
+    // a tombstone, so purge has work and must reach the layout check
+    assert(DedupIndex.delete(spark, idx,
+      docs.filter($"doc_id" % 5 === 0).select($"doc_id").limit(2), "td-1"))
     val metaFiles = new java.io.File(idx).listFiles()
       .filter(_.isDirectory).map(v => new java.io.File(v, "_meta.txt"))
       .filter(_.exists())
     assert(metaFiles.nonEmpty)
     metaFiles.foreach(f => assert(f.delete()))
-    assert(DedupIndex.shapeOf(idx) === DedupIndex.Shape.Oracle,
-      "pre-metadata artifact must read back as the legacy oracle shape")
+    def loud(op: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException] { body; () }
+      assert(e.getMessage.contains(idx),
+        s"$op's error does not name the index dir: ${e.getMessage}")
+    }
+    loud("load") { DedupIndex.load(spark, idx) }
+    loud("append") {
+      DedupIndex.append(spark, docs.filter($"doc_id" % 5 === 3), idx, "d1")
+    }
+    loud("compact") { DedupIndex.compact(spark, idx, maxFiles = 0) }
+    loud("purge") { DedupIndex.purge(spark, idx) }
+    loud("shapeOf") { DedupIndex.shapeOf(idx) }
+    assert(!DedupIndex.appliedDeltas(idx).contains("d1"),
+      "the refused append was recorded")
   }
 
   test("probe-then-admit: an appended delta becomes corpus for the next " +

@@ -10,8 +10,8 @@ import graft.SparkSpec
   * was spec-proven on synthetic tables, but no production artifact ever
   * executed through `_carry.txt` resolution). Pinned here:
   *
-  *   1. The `spark.graft.index.carrier=manifest` conf is recorded at
-  *      BUILD and rides the artifact (probes/admits never re-read it).
+  *   1. The `manifestCarrier = true` build argument is recorded at
+  *      BUILD and rides the artifact (probes/admits never take it).
   *   2. An admission carries untouched files as REFERENCES — the new
   *      version holds a `_carry.txt` and ZERO copied/linked base bytes.
   *   3. Probe parity: build+admit on the manifest carrier answers
@@ -28,11 +28,6 @@ class DedupManifestCarrierSpec extends SparkSpec {
   private def docs = graft.GraftSession.table(spark, dir, "documents")
     .select(col("doc_id"), col("text"))
 
-  private def withManifest[T](body: => T): T = {
-    spark.conf.set(DedupIndex.CarrierConf, "manifest")
-    try body finally spark.conf.unset(DedupIndex.CarrierConf)
-  }
-
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -47,12 +42,11 @@ class DedupManifestCarrierSpec extends SparkSpec {
     val day1 = docs.filter(col("doc_id") % 5 === 3)
     val delta = docs.filter(col("doc_id") % 5 === 4)
 
-    withManifest {
-      DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle)
-    }
-    // the conf is OFF here — the artifact's meta must carry the choice
+    DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
+      manifestCarrier = true)
+    // admits take no carrier — the artifact's meta must carry the choice
     assert(new graft.streaming.VersionedArtifact(mIdx).isManifestCurrent,
-      "build under the conf must record carrier=manifest in the artifact")
+      "a manifest build must record carrier=manifest in the artifact")
     DedupIndex.append(spark, day1, mIdx, "m-day1")
 
     val v0 = new File(mIdx, "v0")
@@ -104,9 +98,8 @@ class DedupManifestCarrierSpec extends SparkSpec {
       .createTempDirectory("graft-dedup-manifest-purge").toString
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
     val delta = docs.filter(col("doc_id") % 5 === 4)
-    withManifest {
-      DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle)
-    }
+    DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
+      manifestCarrier = true)
     val before = pairs(DedupIndex.probe(spark, mIdx, delta))
     assert(before.nonEmpty, "fixture must produce cross-split pairs")
     // tombstone a corpus id that actually pairs (an arbitrary slice may
@@ -150,9 +143,8 @@ class DedupManifestCarrierSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val idx = java.nio.file.Files
       .createTempDirectory("graft-manifest-stream").toString
-    withManifest {
-      DedupIndex.build(spark, docs.filter(col("doc_id") % 5 =!= 4), idx)
-    }
+    DedupIndex.build(spark, docs.filter(col("doc_id") % 5 =!= 4), idx,
+      manifestCarrier = true)
     val delta = docs.filter(col("doc_id") % 5 === 4)
       .as[graft.streaming.IngestDoc].collect().sortBy(_.doc_id)
     val seed = delta.head
@@ -204,9 +196,8 @@ class DedupManifestCarrierSpec extends SparkSpec {
     val (srpM, srpL) = (
       java.nio.file.Files.createTempDirectory("graft-srp-m").toString,
       java.nio.file.Files.createTempDirectory("graft-srp-l").toString)
-    withManifest {
-      SrpIndex.build(spark, vecs.filter($"vec_id" % 5 < 3), srpM)
-    }
+    SrpIndex.build(spark, vecs.filter($"vec_id" % 5 < 3), srpM,
+      manifestCarrier = true)
     assert(new graft.streaming.VersionedArtifact(srpM).isManifestCurrent)
     SrpIndex.append(spark, vecs.filter($"vec_id" % 5 === 3), srpM, "d1")
     SrpIndex.build(spark, vecs.filter($"vec_id" % 5 < 3), srpL)
@@ -220,9 +211,8 @@ class DedupManifestCarrierSpec extends SparkSpec {
     val (cM, cL) = (
       java.nio.file.Files.createTempDirectory("graft-cont-m").toString,
       java.nio.file.Files.createTempDirectory("graft-cont-l").toString)
-    withManifest {
-      ContainIndex.build(spark, docs.filter($"doc_id" % 5 < 3), cM)
-    }
+    ContainIndex.build(spark, docs.filter($"doc_id" % 5 < 3), cM,
+      manifestCarrier = true)
     assert(new graft.streaming.VersionedArtifact(cM).isManifestCurrent)
     ContainIndex.append(spark, docs.filter($"doc_id" % 5 === 3), cM, "d1")
     ContainIndex.build(spark, docs.filter($"doc_id" % 5 < 3), cL)

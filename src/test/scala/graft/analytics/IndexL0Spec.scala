@@ -76,7 +76,7 @@ class IndexL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // 64 buckets: a one-doc micro delta has ≤ 16 band keys (Oracle
     // shape), so the pruning assertion can demand a proper subset
     DedupIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx,
-      shape = DedupIndex.Shape.Oracle, bucketed = true, buckets = 64)
+      shape = DedupIndex.Shape.Oracle, buckets = 64)
     val delta = docs.filter($"doc_id" % 5 === 4)
     val bandsDir = new File(DedupIndex.tablePath(idx, "bands"))
     val baseNames = parquetNames(bandsDir)
@@ -93,7 +93,7 @@ class IndexL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       "bands gained top-level bucketed files on admission — the L0 " +
         "path must not touch the base")
     val l0 = parquetNames(new File(afterDir, "_l0"))
-    assert(l0.nonEmpty && l0.size <= IndexLayout.appendTasks(spark),
+    assert(l0.nonEmpty && l0.size <= IndexLayout.AppendTasks,
       s"bands L0 admission wrote ${l0.size} files")
 
     val withL0 = pairSet(DedupIndex.probe(spark, idx, delta))
@@ -154,7 +154,7 @@ class IndexL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     // Narrow: 8 bands — a one-vector micro delta has ≤ 8 band keys of
     // 64 buckets, a provably proper subset for the pruning pin
     SrpIndex.build(spark, vecs.filter($"vec_id" % 5 =!= 4), idx,
-      DedupQueries.Srp.Narrow, bucketed = true, buckets = 64)
+      DedupQueries.Srp.Narrow, buckets = 64)
     val delta = vecs.filter($"vec_id" % 5 === 4)
     val baseNames = parquetNames(new File(SrpIndex.tablePath(idx, "bands")))
 
@@ -166,7 +166,7 @@ class IndexL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
       "bands gained top-level bucketed files on admission — the L0 " +
         "path must not touch the base")
     val l0 = parquetNames(new File(afterDir, "_l0"))
-    assert(l0.nonEmpty && l0.size <= IndexLayout.appendTasks(spark),
+    assert(l0.nonEmpty && l0.size <= IndexLayout.AppendTasks,
       s"bands L0 admission wrote ${l0.size} files")
 
     val withL0 = pairSet(SrpIndex.probe(spark, idx, delta))
@@ -223,7 +223,7 @@ class IndexL0Spec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     val idx = java.nio.file.Files
       .createTempDirectory("graft-l0-cutover").toString
     DedupIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx,
-      shape = DedupIndex.Shape.Oracle, bucketed = true, buckets = 64)
+      shape = DedupIndex.Shape.Oracle, buckets = 64)
     val delta = docs.filter($"doc_id" % 5 === 4)
     val bandsDir = new File(DedupIndex.tablePath(idx, "bands"))
     val baseNames = parquetNames(bandsDir)

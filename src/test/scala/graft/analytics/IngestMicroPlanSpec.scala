@@ -5,11 +5,11 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 
 /** Plan-shape contract of the streaming ingest probes' `micro = true`
-  * mode on the DIRECTORY layout (`bucketed = false` pinned on every
-  * build here; the bucketed default's micro shape — pruned bucket
-  * reads — is pinned by the `*BucketedSpec` suites): a micro-batch
-  * delta BROADCASTS into every corpus join, so the cached corpus tables
-  * STREAM from their in-memory scans — zero sort-merge or shuffled-hash
+  * mode in the CACHED regime (every loaded frame persisted here, as the
+  * streaming faces' cache-if-fits does; the uncached regime's micro
+  * shape — pruned bucket reads — is pinned by the `*BucketedSpec`
+  * suites): a micro-batch delta BROADCASTS into every corpus join, so
+  * the cached corpus tables STREAM from their in-memory scans — zero sort-merge or shuffled-hash
   * joins anywhere in the per-batch plan, which is what keeps per-trigger
   * cost free of corpus-sized exchange/sort (measured ×2.6 on the
   * containment face at 10× corpus, `IngestProbe`/SCALE.md). Auto
@@ -48,10 +48,9 @@ class IngestMicroPlanSpec extends SparkSpec {
         .select($"doc_id", $"text")
       val idx = java.nio.file.Files
         .createTempDirectory("graft-micro-didx").toString
-      DedupIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx,
-        bucketed = false)
+      DedupIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx)
       val loaded = DedupIndex.load(spark, idx)
-      loaded.signatures.persist(); loaded.bands.persist()
+      loaded.cacheFrames.foreach(_.persist())
       try {
         val delta = docs.filter($"doc_id" % 5 === 4)
         val micro = DedupIndex.probeLoaded(loaded, delta, micro = true)
@@ -62,7 +61,7 @@ class IngestMicroPlanSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(batch.nonEmpty, "fixture must contain cross-split pairs")
         assert(microPairs === batch, "micro probe diverged from batch probe")
-      } finally { loaded.signatures.unpersist(); loaded.bands.unpersist(); () }
+      } finally { loaded.cacheFrames.foreach(_.unpersist()); () }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -75,11 +74,9 @@ class IngestMicroPlanSpec extends SparkSpec {
         .select($"doc_id", $"text")
       val idx = java.nio.file.Files
         .createTempDirectory("graft-micro-cidx").toString
-      ContainIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx,
-        bucketed = false)
+      ContainIndex.build(spark, docs.filter($"doc_id" % 5 =!= 4), idx)
       val loaded = ContainIndex.load(spark, idx)
-      val cached = Seq(loaded.tokens, loaded.prefix, loaded.sets, loaded.df)
-      cached.foreach(_.persist())
+      loaded.cacheFrames.foreach(_.persist())
       try {
         val delta = docs.filter($"doc_id" % 5 === 4)
         val micro = ContainIndex.probeLoaded(loaded, delta, micro = true)
@@ -90,7 +87,7 @@ class IngestMicroPlanSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(batch.nonEmpty, "fixture must contain cross-split pairs")
         assert(microPairs === batch, "micro probe diverged from batch probe")
-      } finally { cached.foreach(_.unpersist()); () }
+      } finally { loaded.cacheFrames.foreach(_.unpersist()); () }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -105,9 +102,9 @@ class IngestMicroPlanSpec extends SparkSpec {
         .createTempDirectory("graft-micro-sidx").toString
       // oracle-matched Narrow so the sf0.001 fixture has pairs to compare
       SrpIndex.build(spark, vecs.filter($"vec_id" % 5 =!= 4), idx,
-        DedupQueries.Srp.Narrow, bucketed = false)
+        DedupQueries.Srp.Narrow)
       val loaded = SrpIndex.load(spark, idx)
-      loaded.vectors.persist(); loaded.bands.persist()
+      loaded.cacheFrames.foreach(_.persist())
       try {
         val delta = vecs.filter($"vec_id" % 5 === 4)
         val micro = SrpIndex.probeLoaded(loaded, delta, micro = true)
@@ -118,7 +115,7 @@ class IngestMicroPlanSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(batch.nonEmpty, "fixture must contain cross-split pairs")
         assert(microPairs === batch, "micro probe diverged from batch probe")
-      } finally { loaded.vectors.unpersist(); loaded.bands.unpersist(); () }
+      } finally { loaded.cacheFrames.foreach(_.unpersist()); () }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

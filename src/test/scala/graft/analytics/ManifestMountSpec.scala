@@ -34,11 +34,6 @@ class ManifestMountSpec extends SparkSpec {
   private def docs = graft.GraftSession.table(spark, dir, "documents")
     .select(col("doc_id"), col("text"))
 
-  private def withManifest[T](body: => T): T = {
-    spark.conf.set(DedupIndex.CarrierConf, "manifest")
-    try body finally spark.conf.unset(DedupIndex.CarrierConf)
-  }
-
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -87,12 +82,10 @@ class ManifestMountSpec extends SparkSpec {
         .createTempDirectory("graft-mount-m").toString
       val lIdx = java.nio.file.Files
         .createTempDirectory("graft-mount-l").toString
-      withManifest {
-        DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
-          bucketed = true, buckets = 8)
-      }
+      DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
+        buckets = 8, manifestCarrier = true)
       DedupIndex.build(spark, corpus, lIdx, DedupIndex.Shape.Oracle,
-        bucketed = true, buckets = 8)
+        buckets = 8)
       DedupIndex.append(spark, day1, mIdx, "d1")
       DedupIndex.append(spark, day1, lIdx, "d1")
 
@@ -151,11 +144,10 @@ class ManifestMountSpec extends SparkSpec {
     val mIdx = java.nio.file.Files
       .createTempDirectory("graft-mount-prune").toString
     // 64 buckets >> the 32 band keys a 1-doc micro-batch carries
-    withManifest {
-      DedupIndex.build(spark, corpus, mIdx, bucketed = true, buckets = 64)
-    }
+    DedupIndex.build(spark, corpus, mIdx, buckets = 64,
+      manifestCarrier = true)
     val loaded = DedupIndex.load(spark, mIdx)
-    assert(loaded.bucketed)
+    assert(loaded.buckets === Map("signatures" -> 64, "bands" -> 64))
     val microPairs = pairs(DedupIndex.probeLoaded(loaded, delta,
       micro = true))
     assert(microPairs === pairs(DedupIndex.probeLoaded(loaded, delta)),
@@ -179,6 +171,9 @@ class ManifestMountSpec extends SparkSpec {
   test("L0 accrual on a mounted manifest artifact reads as its own " +
       "leg, with pair parity against the link twin") {
     spark.conf.set("spark.graft.index.l0.cutover", "0") // force L0
+    // no auto broadcast, so the probe's corpus joins need the bucketing
+    // and the plan reports it
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val corpus = docs.filter(col("doc_id") % 5 < 3)
       val day1 = docs.filter(col("doc_id") % 5 === 3)
@@ -187,24 +182,29 @@ class ManifestMountSpec extends SparkSpec {
         .createTempDirectory("graft-mount-l0m").toString
       val lIdx = java.nio.file.Files
         .createTempDirectory("graft-mount-l0l").toString
-      withManifest {
-        DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
-          bucketed = true, buckets = 8)
-      }
+      DedupIndex.build(spark, corpus, mIdx, DedupIndex.Shape.Oracle,
+        buckets = 8, manifestCarrier = true)
       DedupIndex.build(spark, corpus, lIdx, DedupIndex.Shape.Oracle,
-        bucketed = true, buckets = 8)
+        buckets = 8)
       DedupIndex.append(spark, day1, mIdx, "d1")
       DedupIndex.append(spark, day1, lIdx, "d1")
       val mLoaded = DedupIndex.load(spark, mIdx)
-      assert(mLoaded.bucketed, "mounted manifest load must read bucketed")
       assert(mLoaded.l0Frames.nonEmpty,
         "forced-L0 admission must surface an L0 leg on the mount")
-      val mPairs = pairs(DedupIndex.probeLoaded(mLoaded, delta))
+      val mProbe = DedupIndex.probeLoaded(mLoaded, delta)
+      val mPairs = pairs(mProbe)
+      // the mounted base tables read bucketed: both corpus scans
+      // (bands + signatures) report it in the executed plan
+      val plan = mProbe.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      assert("Bucketed: true".r.findAllMatchIn(plan).length >= 2,
+        s"mounted manifest load must read bucketed:\n$plan")
       assert(mPairs === pairs(DedupIndex.probe(spark, lIdx, delta)),
         "L0-on-mount probe diverged from the link twin")
       assert(mPairs.nonEmpty, "fixture must produce cross-split pairs")
     } finally {
       spark.conf.unset("spark.graft.index.l0.cutover")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       ()
     }
   }

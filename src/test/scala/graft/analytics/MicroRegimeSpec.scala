@@ -59,7 +59,7 @@ class MicroRegimeSpec extends SparkSpec {
       val (corpus, delta) = fixture()
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-regime-cached").toString
-      DedupIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 8)
+      DedupIndex.build(spark, corpus, bIdx, buckets = 8)
       val loaded = DedupIndex.load(spark, bIdx)
       loaded.signatures.persist(); loaded.bands.persist()
       try {
@@ -90,7 +90,7 @@ class MicroRegimeSpec extends SparkSpec {
     val bIdx = java.nio.file.Files
       .createTempDirectory("graft-regime-unprunable").toString
     DedupIndex.build(spark, corpus, bIdx, shape = DedupIndex.Shape.Oracle,
-      bucketed = true, buckets = 2)
+      buckets = 2)
     val loaded = DedupIndex.load(spark, bIdx)
     assert(!IndexLayout.isCached(loaded.bands))
     val cand = DedupIndex.microCandidates(loaded,
@@ -116,7 +116,7 @@ class MicroRegimeSpec extends SparkSpec {
       // table reads unfiltered (the 17-24 s/batch INSET pathology's fix)
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-regime-contain").toString
-      ContainIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 2)
+      ContainIndex.build(spark, corpus, bIdx, buckets = 2)
       val loaded = ContainIndex.load(spark, bIdx)
       val (n2oF, o2nF) = ContainIndex.microCandidateFrames(loaded, delta)
       Seq("new-in-old" -> n2oF, "old-in-new" -> o2nF).foreach {
@@ -145,7 +145,7 @@ class MicroRegimeSpec extends SparkSpec {
       val (corpus, delta) = fixture()
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-regime-ccached").toString
-      ContainIndex.build(spark, corpus, bIdx, bucketed = true, buckets = 8)
+      ContainIndex.build(spark, corpus, bIdx, buckets = 8)
       val loaded = ContainIndex.load(spark, bIdx)
       val frames = Seq(loaded.tokens, loaded.prefix, loaded.sets, loaded.df)
       frames.foreach(_.persist())
@@ -180,7 +180,7 @@ class MicroRegimeSpec extends SparkSpec {
         .createTempDirectory("graft-regime-semb").toString
       // oracle-matched Narrow so the sf0.001 fixture has pairs
       SrpIndex.build(spark, corpus, bIdx, DedupQueries.Srp.Narrow,
-        bucketed = true, buckets = 8)
+        buckets = 8)
       val loaded = SrpIndex.load(spark, bIdx)
       loaded.vectors.persist(); loaded.bands.persist()
       try {

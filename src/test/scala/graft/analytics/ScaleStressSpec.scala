@@ -32,6 +32,28 @@ class ScaleStressSpec extends SparkSpec {
       .parquet("/root/testdata/sf0.001/embeddings.parquet").count())
   }
 
+  test("TPC-H tables are written full width: every table keeps its " +
+      "source schema, fact tables scale by the copy count, and nation, " +
+      "region and part are copied unchanged") {
+    val src = "/root/testdata/sf0.001"
+    def fields(path: String) =
+      spark.read.parquet(path).schema.map(f => f.name -> f.dataType)
+    Seq("lineitem" -> 3, "orders" -> 3, "customer" -> 3, "supplier" -> 3,
+        "nation" -> 1, "region" -> 1, "part" -> 1).foreach {
+      case (t, factor) =>
+        val out = s"$outDir/$t.parquet"
+        assert(new java.io.File(out).exists(), s"$t was not written")
+        assert(fields(out) === fields(s"$src/$t.parquet"),
+          s"$t lost its source schema")
+        assert(spark.read.parquet(out).count() ===
+          factor * spark.read.parquet(s"$src/$t.parquet").count(),
+          s"$t row count is not $factor× its source")
+    }
+    // offset keys keep copies disjoint: one orderkey per order row
+    val ord = spark.read.parquet(s"$outDir/orders.parquet")
+    assert(ord.select("o_orderkey").distinct().count() === ord.count())
+  }
+
   test("the char map is a bijection: within-copy similarity structure is " +
       "EXACTLY preserved (same shingle-set size per doc)") {
     val docs = spark.read.parquet(s"$outDir/documents.parquet")

@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The UNIFIED bucketed SRP artifact ([[SrpIndex.build]] with
-  * `bucketed = true`): pair parity with the directory artifact, the
-  * exchange-free corpus plan (both corpus tables read in place), the
+/** The bucketed SRP artifact ([[SrpIndex.build]]): pair parity with
+  * the independent in-session face, the exchange-free corpus plan (both corpus tables read in place), the
   * admission lifecycle on the bucketed layout, and micro bucket
   * pruning — the embedding member of the one-artifact-family story
   * (see `DedupIndexBucketedSpec`).
@@ -30,8 +29,6 @@ class SrpIndexBucketedSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val (corpus, delta) = fixture()
-      val plainIdx = java.nio.file.Files
-        .createTempDirectory("graft-srp-dir").toString
       val bIdx = java.nio.file.Files
         .createTempDirectory("graft-srp-bidx").toString
       // Narrow on BOTH faces: parity needs same-shape banding, and the
@@ -39,18 +36,18 @@ class SrpIndexBucketedSpec extends SparkSpec {
       // claim is layout, not shape (probes take no shape argument, so
       // parity also proves the probe replayed the artifact-recorded
       // Narrow rather than the Wide build default)
-      SrpIndex.build(spark, corpus, plainIdx, DedupQueries.Srp.Narrow,
-        bucketed = false)
       SrpIndex.build(spark, corpus, bIdx, DedupQueries.Srp.Narrow,
-        bucketed = true, buckets = 8)
+        buckets = 8)
       assert(SrpIndex.shapeOf(bIdx) === DedupQueries.Srp.Narrow)
 
       val bucketed = SrpIndex.probe(spark, bIdx, delta)
       val got = pairs(bucketed)
-      val plain = pairs(SrpIndex.probe(spark, plainIdx, delta))
-      assert(plain.nonEmpty, "fixture must contain cross-split pairs")
-      assert(got === plain,
-        "bucketed SRP probe diverged from the directory artifact")
+      // the same % 5 split at the Narrow shape
+      val inSession = pairs(DedupQueries.embeddingIncrementalInSession(
+        spark, dir, DedupQueries.Srp.Narrow))
+      assert(inSession.nonEmpty, "fixture must contain cross-split pairs")
+      assert(got === inSession,
+        "bucketed SRP probe diverged from the in-session face")
 
       // count on the FINAL adaptive plan only — AdaptiveSparkPlan's
       // string appends the initial plan, which would double every match
@@ -87,9 +84,9 @@ class SrpIndexBucketedSpec extends SparkSpec {
       .createTempDirectory("graft-srp-blife").toString
     // 64 buckets ≫ the 8 band keys a 1-vector micro-batch carries
     SrpIndex.build(spark, corpus, bIdx, DedupQueries.Srp.Narrow,
-      bucketed = true, buckets = 64)
+      buckets = 64)
     val loaded = SrpIndex.load(spark, bIdx)
-    assert(loaded.bucketed)
+    assert(loaded.buckets === Map("vectors" -> 64, "bands" -> 64))
     val micro = SrpIndex.probeLoaded(loaded, delta, micro = true)
     val microPairs = pairs(micro)
     assert(microPairs === pairs(SrpIndex.probeLoaded(loaded, delta)),

@@ -50,7 +50,7 @@ class SrpIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
 
   test("default build is the corpus-scale Wide shape, RECORDED in the " +
       "artifact and replayed by probe at pair parity; shape survives " +
-      "admit and compact; a pre-metadata artifact reads back Narrow") {
+      "admit and compact") {
     import spark.implicits._
     val idx = java.nio.file.Files.createTempDirectory("graft-srp-wide")
       .toString
@@ -77,15 +77,6 @@ class SrpIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     SrpIndex.compact(spark, idx, maxFiles = 1)
     assert(SrpIndex.shapeOf(idx) === DedupQueries.Srp.Wide,
       "compact dropped the recorded band shape")
-    // legacy: an artifact without metadata (r12) reads back Narrow — the
-    // only shape that revision ever wrote
-    val metaFiles = new java.io.File(idx).listFiles()
-      .filter(_.isDirectory).map(v => new java.io.File(v, "_meta.txt"))
-      .filter(_.exists())
-    assert(metaFiles.nonEmpty)
-    metaFiles.foreach(f => assert(f.delete()))
-    assert(SrpIndex.shapeOf(idx) === DedupQueries.Srp.Narrow,
-      "pre-metadata artifact must read back as the legacy Narrow shape")
   }
 
   test("probe-then-admit: an admitted delta becomes corpus; re-probe has " +

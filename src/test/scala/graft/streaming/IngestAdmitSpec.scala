@@ -518,18 +518,18 @@ class IngestAdmitSpec extends SparkSpec {
   test("admitting streams skip the corpus cache (every admission would " +
       "re-materialize it); conf opts back in") {
     // by-name `all`: the skip must not even EVALUATE the frame list
-    val skipped = IngestDedup.cacheIfFits(spark, bucketed = true,
+    val skipped = IngestDedup.cacheIfFits(spark,
       admitting = true, bytes = () => 0L,
       all = fail("admitting face evaluated its cache frames"))
     assert(skipped.isEmpty)
-    // non-admitting bucketed face under the byte budget still caches
+    // non-admitting face under the byte budget still caches
     import spark.implicits._
     val f = Seq(1L).toDF("x")
-    assert(IngestDedup.cacheIfFits(spark, bucketed = true,
+    assert(IngestDedup.cacheIfFits(spark,
       admitting = false, bytes = () => 0L, all = Seq(f)) === Seq(f))
     // explicit opt-in for rare-admission streams
     spark.conf.set("spark.graft.index.cache.admitting", "always")
-    try assert(IngestDedup.cacheIfFits(spark, bucketed = true,
+    try assert(IngestDedup.cacheIfFits(spark,
       admitting = true, bytes = () => 0L, all = Seq(f)) === Seq(f))
     finally spark.conf.unset("spark.graft.index.cache.admitting")
   }

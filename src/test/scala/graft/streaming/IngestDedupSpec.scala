@@ -199,16 +199,12 @@ class IngestDedupSpec extends SparkSpec {
       .createTempDirectory("graft-ingest-srp").toString
     // oracle-matched Narrow (the oracled face's artifact shape) — the
     // default-Wide lifecycle is pinned in SrpIndexSpec; here the claim
-    // is parity with the oracled in-session face. DIRECTORY layout
-    // pinned: that layout persists its frames UNCONDITIONALLY (no
-    // cache-if-fits byte check), so this test exercises that leg of the
-    // VersionedCache lifecycle; bucketed streaming (cache-if-fits —
-    // cached at fixture sizes, pruned/parallel scans past the budget)
-    // is covered by the text and containment tests above and
-    // MicroRegimeSpec's plan pins
+    // is parity with the oracled in-session face. Default layout and
+    // bucket sizing: cache-if-fits persists the frames at fixture sizes
+    // (the pruned/parallel scans past the budget are MicroRegimeSpec's)
     graft.analytics.SrpIndex.build(
       spark, vecs.filter($"vec_id" % 5 =!= 4), idx,
-      graft.analytics.DedupQueries.Srp.Narrow, bucketed = false)
+      graft.analytics.DedupQueries.Srp.Narrow)
     val delta = vecs.filter($"vec_id" % 5 === 4)
       .as[IngestVec].collect().sortBy(_.vec_id)
     val got = java.util.concurrent.ConcurrentHashMap
