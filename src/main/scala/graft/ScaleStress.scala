@@ -236,15 +236,9 @@ object StoreProbe {
         .withColumn("event_id", $"event_id" + k * 1000000000L))
       .reduce(_ unionByName _)
     val dir = java.nio.file.Files.createTempDirectory("store-probe").toString
-    // SPARK_GRAFT_STORE_TARGET: per-bucket byte target for auto-sizing
-    // (0 = fixed constructor count, the r12-comparable configuration;
-    // unset = the production default ~256 MB)
-    val target = sys.env.get("SPARK_GRAFT_STORE_TARGET").map(_.toLong)
-      .getOrElse(graft.streaming.CdcServingTable.DefaultTargetBucketBytes)
     val store = new graft.streaming.CdcServingTable(dir,
       (for { t <- types.toSeq; k <- 0 until copies }
-        yield s"app.${t}_$k" -> "user_id").toMap,
-      autoSizeTargetBytes = target)
+        yield s"app.${t}_$k" -> "user_id").toMap)
     val t0 = System.nanoTime()
     store.merge(envelopes(seedRows))
     val seedSec = (System.nanoTime() - t0) / 1e9

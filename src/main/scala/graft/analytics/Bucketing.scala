@@ -80,49 +80,6 @@ object Bucketing {
       sizedBuckets(estimatedBytes, IndexTargetBucketBytes, maxBuckets = cap))
   }
 
-  /** Guard for table identifiers interpolated into SQL text by the
-    * shared helpers below: each dot-separated part must be a plain
-    * identifier (letters/digits/underscore). A backtick, quote, or
-    * semicolon in an index-family table name would otherwise parse wrong
-    * or inject — every family reuses these helpers, so the check lives
-    * here once.
-    */
-  private def validIdentifier(table: String): String = {
-    require(table.nonEmpty &&
-      table.split('.').forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")),
-      s"table name must be dot-separated plain identifiers " +
-        s"([A-Za-z_][A-Za-z0-9_]*), got: $table")
-    table
-  }
-
-  /** Record `props` on a managed table — the managed-table twin of the
-    * directory artifacts' `_meta.txt`, ONE definition for every index
-    * family that rides configuration on TBLPROPERTIES.
-    */
-  def setTableProps(spark: SparkSession, table: String,
-      props: Map[String, String]): Unit =
-    if (props.nonEmpty) {
-      validIdentifier(table)
-      // escape for Spark SQL string literals: current callers pass only
-      // integers, but a shared helper must not break (or truncate) on
-      // the first quote-carrying value a future family records. Known
-      // limit: under legacy spark.sql.parser.escapedStringLiterals=true
-      // the parser keeps literals un-unescaped, so quote/backslash
-      // values would round-trip altered — record such values through a
-      // catalog API, not this SQL path
-      def q(s: String): String =
-        s.replace("\\", "\\\\").replace("'", "\\'")
-      val kv = props.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'${q(k)}' = '${q(v)}'" }.mkString(", ")
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($kv)")
-      ()
-    }
-
-  /** Read a managed table's TBLPROPERTIES as a map. */
-  def tableProps(spark: SparkSession, table: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES ${validIdentifier(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-
   /** Write `df` as a managed parquet table bucketed (and sorted) by `key`. */
   def writeBucketed(
       df: DataFrame,

@@ -136,22 +136,27 @@ object ContainIndex extends DurableIndex {
     * corpus-sized job on every ingest. Re-freshen df with a periodic
     * [[build]] when probe cost drifts.
     *
-    * WRITE SHAPE — L0 ACCRUAL, the standard LSM/lakehouse trade:
-    * `tokens`/`prefix` delta rows land as a fixed handful of UNBUCKETED
-    * parquet files under the table's `_l0` subdir
-    * ([[IndexLayout.AppendTasks]] files each — underscore dirs are
-    * invisible to the registered bucketed table, so the base files'
-    * bucket contract holds), and `sets` appends at the
-    * bucket modulus (its rows touch ≤ |delta| buckets — already
-    * delta-bounded). Per-admission file count is therefore independent
-    * of the corpus's bucket count — the pre-r18 bucketed append wrote
-    * one file per touched bucket per table (~3 × buckets ≈ 192
-    * files/batch at the 100× rehearsal's 64 buckets, and the admission
-    * bottleneck at a 100 TB deployment's thousands of buckets). Probes
-    * read L0 as a separate delta-sized leg unioned AFTER the base joins
-    * (base pruning intact — see `probeRaw.overCorpus`);
-    * `compactBucketed` counts L0 toward the accrual threshold and folds
-    * it into the buckets, so `compactEvery` bounds the L0 leg's size.
+    * WRITE SHAPE — ADAPTIVE ([[IndexLayout.fanoutAppend]]): `tokens`/
+    * `prefix` delta rows append at the bucket modulus while the table's
+    * bucket count is at most [[IndexLayout.l0CutoverFactor]] ×
+    * [[IndexLayout.AppendTasks]] (16 × 8 = 128 buckets by default), and
+    * past that cutover land as L0 ACCRUAL, the standard LSM/lakehouse
+    * trade: a fixed handful of UNBUCKETED parquet files under the table's
+    * `_l0` subdir ([[IndexLayout.AppendTasks]] files each — underscore
+    * dirs are invisible to the registered bucketed table, so the base
+    * files' bucket contract holds). Fixture-sized artifacts
+    * sit below the cutover and take the modulus path;
+    * `spark.graft.index.l0.cutover` ≤ 0 forces L0 at any size. `sets`
+    * always appends at the bucket modulus (its rows touch ≤ |delta|
+    * buckets — already delta-bounded). Past the cutover the
+    * per-admission file count is independent of the corpus's bucket
+    * count, where a modulus append writes one file per touched bucket
+    * per table (the admission bottleneck at a 100 TB deployment's
+    * thousands of buckets). Probes read L0 as a separate delta-sized leg
+    * unioned AFTER the base joins (base pruning intact — see
+    * `probeRaw.overCorpus`); `compactBucketed` counts L0 toward the
+    * accrual threshold and folds it into the buckets, so `compactEvery`
+    * bounds the L0 leg's size.
     */
   def append(spark: SparkSession, docs: DataFrame, indexDir: String,
       deltaId: String): Boolean = {

@@ -5,6 +5,52 @@ import org.apache.spark.sql.functions._
 
 import graft.model.MQEvent
 
+/** Shared CDC-envelope keying: reduce a batch of [[MQEvent]]s to one keyed
+  * change row per event — `(tbl, pk, version triple, action, after_json)` —
+  * under a per-`db.table` primary-key configuration. Both materializers
+  * consume this projection: [[CdcServingTable]] merges it (current state),
+  * [[CdcHistoryTable]] appends it (full history). Tables without a
+  * configured pk, and rows whose image lacks the pk column, are dropped
+  * filter-first — they never reach a shuffle.
+  */
+private[streaming] object CdcKeyed {
+
+  /** Column layout of a keyed change row — also the store schema of both
+    * materializers. Declared explicitly on every store read: `tbl` is a
+    * PARTITION column in both stores, and inference would happily type a
+    * numeric-looking `tbl=1.2` directory as DOUBLE.
+    */
+  val schema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("tbl", StringType), StructField("pk", StringType),
+      StructField("ver_ts", LongType), StructField("ver_seg", StringType),
+      StructField("ver_pos", LongType),
+      StructField("action", StringType),
+      StructField("after_json", StringType)))
+  }
+
+  def changes(envelopes: Dataset[MQEvent],
+      pkOf: Map[String, String]): DataFrame = {
+    val pkLit = typedlit(pkOf)
+    envelopes.toDF()
+      .withColumn("tbl", concat_ws(".", col("database"), col("table")))
+      .withColumn("pk_col", element_at(pkLit, col("tbl")))
+      .filter(col("pk_col").isNotNull)
+      // delete carries only the before image; its pk comes from there
+      .withColumn("pk", element_at(
+        when(col("action") === "delete", col("before")).otherwise(col("after")),
+        col("pk_col")))
+      .filter(col("pk").isNotNull)
+      .select(col("tbl"), col("pk"),
+        col("eventHeader.timestamp").as("ver_ts"),
+        coalesce(col("eventHeader.segment"), lit("")).as("ver_seg"),
+        col("eventHeader.logPos").as("ver_pos"),
+        col("action"),
+        to_json(col("after")).as("after_json"))
+  }
+}
+
 /** CDC → queryable CURRENT-STATE table — the downstream-consumer half the
   * reference promises but stubs out (`internal/mq_manager/{nsq,es,mongodb}`
   * are `panic("implement me")`): every one of those sinks exists to keep an
@@ -49,67 +95,28 @@ import graft.model.MQEvent
   * into a rewrite, never a duplicate), with every untouched
   * directory subtree carried into the new version as hard links
   * ([[VersionedStore.linkUntouchedTree]] — zero data copied). The bucket
-  * level is what keeps a HOT table affordable: the r11 layout pruned by
-  * table only, so a trickle of changes to a 10 TB table rewrote the whole
-  * table every micro-batch; with `buckets` sub-partitions the rewrite is
-  * the touched k/buckets fraction (same granularity argument as
+  * level is what keeps a HOT table affordable: a trickle of changes to a
+  * 10 TB table rewrites the touched k/buckets fraction of it, not the
+  * whole table (same granularity argument as
   * [[EventStreams.ParquetUpsertStore]]). A quiet table costs nothing per
   * merge no matter how large the store grows; a table format's
   * partition-pruned MERGE replaces the link step as a configuration
   * change. The only driver-side materialization is the touched
   * (table, bucket) list — bounded by |tables| × buckets, never by row
   * count.
-  */
-/** Shared CDC-envelope keying: reduce a batch of [[MQEvent]]s to one keyed
-  * change row per event — `(tbl, pk, version triple, action, after_json)` —
-  * under a per-`db.table` primary-key configuration. Both materializers
-  * consume this projection: [[CdcServingTable]] merges it (current state),
-  * [[CdcHistoryTable]] appends it (full history). Tables without a
-  * configured pk, and rows whose image lacks the pk column, are dropped
-  * filter-first — they never reach a shuffle.
-  */
-private[streaming] object CdcKeyed {
-
-  /** Column layout of a keyed change row — also the store schema of both
-    * materializers. Declared explicitly on every store read: `tbl` is a
-    * PARTITION column in both layouts, and inference would happily type a
-    * numeric-looking `tbl=1.2` directory as DOUBLE.
-    */
-  val schema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("tbl", StringType), StructField("pk", StringType),
-      StructField("ver_ts", LongType), StructField("ver_seg", StringType),
-      StructField("ver_pos", LongType),
-      StructField("action", StringType),
-      StructField("after_json", StringType)))
-  }
-
-  def changes(envelopes: Dataset[MQEvent],
-      pkOf: Map[String, String]): DataFrame = {
-    val pkLit = typedlit(pkOf)
-    envelopes.toDF()
-      .withColumn("tbl", concat_ws(".", col("database"), col("table")))
-      .withColumn("pk_col", element_at(pkLit, col("tbl")))
-      .filter(col("pk_col").isNotNull)
-      // delete carries only the before image; its pk comes from there
-      .withColumn("pk", element_at(
-        when(col("action") === "delete", col("before")).otherwise(col("after")),
-        col("pk_col")))
-      .filter(col("pk").isNotNull)
-      .select(col("tbl"), col("pk"),
-        col("eventHeader.timestamp").as("ver_ts"),
-        coalesce(col("eventHeader.segment"), lit("")).as("ver_seg"),
-        col("eventHeader.logPos").as("ver_pos"),
-        col("action"),
-        to_json(col("after")).as("after_json"))
-  }
-}
-
-/** @param buckets      bucket count for tables NOT yet recorded in the
+  *
+  * Layout: ONE on-disk layout — parquet files under `v<N>/tbl=<t>/pkb=<b>`
+  * plus the per-version `_BUCKETS` (bucket counts) and `_BYTES` (byte
+  * totals) sidecars, committed by the `_CURRENT` pointer swap. A current
+  * version without `_BUCKETS` (parquet directly under `tbl=` dirs, or
+  * `pkb=` dirs hashed with an unrecorded modulus) is refused by every
+  * read and merge, naming its dir: its rows could be neither pruned nor
+  * re-hashed safely.
+  *
+  * @param buckets      bucket count for tables NOT yet recorded in the
   *                     store's per-version `_BUCKETS` sidecar (i.e. new
   *                     tables; with [[autoSizeTargetBytes]] unset this is
-  *                     every table's count, as before)
+  *                     every table's count)
   * @param autoSizeTargetBytes when > 0, per-table bucket counts are SIZED
   *                     from the table's observed on-disk bytes (the
   *                     [[graft.analytics.Bucketing]] ~128–512 MB/bucket
@@ -136,26 +143,37 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
   private val bucketedSchema =
     storeSchema.add("pkb", org.apache.spark.sql.types.LongType)
 
-  /** Per-table bucket counts of a committed version, from its `_BUCKETS`
+  /** Version `v`'s dir, checked to be in the store's one layout: its
+    * `_BUCKETS` sidecar is present. Without it the writer cannot know
+    * what modulus the version's files were hashed with (or whether they
+    * sit under `pkb=` dirs at all), so a read could mis-type the
+    * partitions and a merge could mis-prune its base read and carry a
+    * stale duplicate of every key it updates. One stat, no listing.
+    */
+  private def checkedVersion(v: Long): java.io.File = {
+    val ver = new java.io.File(dir, s"v$v")
+    if (new java.io.File(ver, "_BUCKETS").isFile) ver
+    else throw new IllegalStateException(
+      s"CDC serving store version $ver records no _BUCKETS sidecar (an " +
+        "r11 tbl=-only or r12 pre-sidecar layout, or a deleted sidecar) — " +
+        "replay or bootstrap into a fresh store dir")
+  }
+
+  /** Per-table bucket counts of a [[checkedVersion]], from its `_BUCKETS`
     * sidecar (`tbl<TAB>count` lines, written INSIDE the version dir so it
     * commits atomically with the pointer swap — a store-level sidecar
     * could go stale across a crash window and mis-prune the next merge's
     * base read, silently resurrecting the duplicate-row bug the sidecar
-    * exists to prevent). None = pre-sidecar store (r12): the writer
-    * cannot know what modulus its files were hashed with, so the next
-    * merge re-buckets the whole store once (same treatment as the r11
-    * tbl-only legacy layout).
+    * exists to prevent).
     */
-  private def storedBuckets(ver: java.io.File): Option[Map[String, Int]] = {
-    val f = new java.io.File(ver, "_BUCKETS")
-    if (!f.exists()) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
+  private def storedBuckets(ver: java.io.File): Map[String, Int] =
+    new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(ver, "_BUCKETS").toPath),
       java.nio.charset.StandardCharsets.UTF_8)
       .split("\n").filter(_.nonEmpty).map { line =>
         val i = line.lastIndexOf('\t')
         line.substring(0, i) -> line.substring(i + 1).toInt
-      }.toMap)
-  }
+      }.toMap
 
   private def writeBuckets(ver: java.io.File,
       counts: Map[String, Int]): Unit = {
@@ -173,7 +191,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     else Option(f.listFiles()).getOrElse(Array.empty).map(walkBytes).sum
 
   /** Fallback full-subtree walk of one table's partition dir — paid only
-    * for versions written before the `_BYTES` sidecar existed (the next
+    * when the version's `_BYTES` sidecar is missing or torn (the next
     * merge records totals and retires the walk).
     */
   private def tableBytes(ver: java.io.File, tblDirName: String): Long =
@@ -241,11 +259,10 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
 
   /** Deterministic pk-hash bucket — the sub-table rewrite granularity:
     * a micro-batch touching k of a hot table's buckets rewrites k/buckets
-    * of THAT table, not the whole table (the r11 layout pruned by table
-    * only, so one hot 10 TB table meant an O(table) rewrite per batch).
-    * The modulus is PER TABLE (the version's recorded count, constructor
-    * default for tables not in the map) — a reopened store always hashes
-    * with the counts its files were written with, never the constructor's.
+    * of THAT table, not the whole table. The modulus is PER TABLE (the
+    * version's recorded count, constructor default for tables not in the
+    * map) — a reopened store always hashes with the counts its files were
+    * written with, never the constructor's.
     */
   private def bucketColFor(
       counts: Map[String, Int]): org.apache.spark.sql.Column = {
@@ -259,25 +276,12 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     pmod(xxhash64(col("pk")), base)
   }
 
-  /** Whether `ver` still holds the r11 layout (parquet files directly
-    * under `tbl=` dirs, no `pkb=` level). Mixed depth cannot occur: the
-    * first merge over a legacy version migrates the WHOLE store (below),
-    * so every version is entirely one layout or the other.
-    */
-  private def isLegacy(ver: java.io.File): Boolean =
-    Option(ver.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
-      .exists(d => Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-
   /** Full store content incl. tombstones (for merge + forensics),
-    * logical columns only — both layouts read identically.
+    * logical columns only.
     */
   def raw(spark: SparkSession): DataFrame = currentVersion match {
     case Some(v) =>
-      val ver = new java.io.File(dir, s"v$v")
-      val sch = if (isLegacy(ver)) storeSchema else bucketedSchema
-      spark.read.schema(sch).parquet(ver.toString)
+      spark.read.schema(bucketedSchema).parquet(checkedVersion(v).toString)
         .select(storeSchema.fieldNames.map(col).toIndexedSeq: _*)
     case None =>
       spark.createDataFrame(
@@ -371,14 +375,9 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
     sc.setLocalProperty(CdcServingTable.MergeTag, dir)
     try {
       val prev = currentVersion
-      val prevDir = prev.map(pv => new java.io.File(dir, s"v$pv"))
-      val legacy = prevDir.exists(isLegacy)
-      val stored = prevDir.flatMap(storedBuckets)
-      // a bucketed store with NO recorded counts was written by a
-      // revision that hashed with an unknowable constructor constant —
-      // re-bucket everything once, like the legacy-layout migration
-      val rebucketAll = legacy || (prev.isDefined && stored.isEmpty)
-      val prevCounts = stored.getOrElse(Map.empty[String, Int])
+      val prevDir = prev.map(checkedVersion)
+      val prevCounts = prevDir.map(storedBuckets)
+        .getOrElse(Map.empty[String, Int])
       // ONE driver-side collect per merge (was two jobs — r19 plan
       // audit: the family's cost is commit/small-job dominated, so a
       // whole job per merge is real money): per-table row counts + byte
@@ -421,7 +420,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
       if (touchedTbls.nonEmpty) {
         // sizing inputs read sidecar-first: one file instead of a
         // full-tree walk per touched table per merge (ADVICE r13); a
-        // pre-sidecar version walks once and is recorded below
+        // missing or torn `_BYTES` walks once and is recorded below
         val prevByteMap: Map[String, Long] =
           prevDir.flatMap(storedBytes).getOrElse(Map.empty)
         def prevTableBytes(t: String): Long =
@@ -433,7 +432,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // moved ≥ 2× from the recorded count are fully re-bucketed in
         // this merge (quiet tables never resize — no unprompted rewrites)
         val resized: Map[String, Int] =
-          if (autoSizeTargetBytes <= 0 || rebucketAll || prevDir.isEmpty)
+          if (autoSizeTargetBytes <= 0 || prevDir.isEmpty)
             Map.empty
           else touchedTbls.flatMap { t =>
             prevCounts.get(t).flatMap { cur =>
@@ -451,22 +450,10 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // from max(previous on-disk bytes, THIS batch's estimated bytes)
         // — a brand-new trickle table lands at 1 bucket (doubling as it
         // grows), a bootstrap-sized initial load lands at the count its
-        // snapshot asks for, and on the one-time no-sidecar/legacy
-        // migration rewrite every existing table gets the count its
-        // observed bytes ask for, not the constructor constant
-        val migratedTbls: Seq[String] =
-          if (rebucketAll && prevDir.isDefined)
-            Option(prevDir.get.listFiles())
-              .getOrElse(Array.empty[java.io.File])
-              .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
-              .map(d => ExternalCatalogUtils
-                .unescapePathName(d.getName.stripPrefix("tbl=")))
-              .toSeq
-          else Seq.empty
+        // snapshot asks for
         val seeded: Map[String, Int] =
           if (autoSizeTargetBytes <= 0) Map.empty
-          else (migratedTbls ++ touchedTbls).distinct
-            .filterNot(prevCounts.contains)
+          else touchedTbls.filterNot(prevCounts.contains)
             .map { t =>
               t -> sizedBuckets(math.max(prevTableBytes(t),
                 tblStats.getOrElse(t, 0L)))
@@ -478,7 +465,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // above computed the sets under the PREVIOUS counts, which equal
         // the settled ones except for seeded/resized tables — recompute
         // only those (and only when the list will be consulted at all:
-        // bootstrap and migration merges read the base whole)
+        // a merge into an empty store reads no base)
         lazy val touched: Map[String, Seq[Long]] = {
           // RESIZED tables are excluded: they are read whole below (old
           // pkb values hashed with the old modulus) and never consulted
@@ -507,17 +494,12 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         }
         // partition pruning: a DNF of (tbl = t AND pkb IN bs) over the
         // (tbl, pkb)-partitioned read — untouched tables' directories and
-        // untouched BUCKETS of touched tables are never scanned. A store
-        // still in the r11 tbl-only layout (or without recorded counts)
-        // is migrated in ONE full rewrite (no per-table mixing — mixed
-        // partition depth in one read is a Spark error, and partial
-        // migration would strand untouched rows in files the bucket-level
-        // link step skips). A RESIZED table reads whole: its old pkb
-        // values were hashed with the old modulus.
+        // untouched BUCKETS of touched tables are never scanned. A
+        // RESIZED table reads whole: its old pkb values were hashed with
+        // the old modulus.
         lap("settle-counts")
         val base = prev match {
           case None => raw(spark) // empty frame, storeSchema
-          case Some(_) if rebucketAll => raw(spark) // full migration read
           case Some(pv) =>
             // conjunctive (tbl IN ts) AND (pkb IN bs) rather than the
             // exact per-table DNF: planning a tables×buckets-term
@@ -567,21 +549,19 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         // 1-2 tasks instead of 2 × the session constant, a bootstrap-sized
         // batch still fans out to every core. The bytes are the batch's
         // plus the base it rewrites: each plain table's recorded total ×
-        // touched buckets ÷ its bucket count, a resized table whole, the
-        // whole store on a migration — a few rows touching k large
-        // buckets must not funnel k buckets through one reducer. The r20
+        // touched buckets ÷ its bucket count, a resized table whole — a
+        // few rows touching k large buckets must not funnel k buckets
+        // through one reducer. The r20
         // caution about capping at the OUTPUT-GROUP count (pmod
         // collisions ran the big write ×2 slower) does not apply: this
         // cap scales with bytes, so only tiny rewrites collapse, and
         // their groups are tiny too.
-        val baseBytes =
-          if (rebucketAll) migratedTbls.map(prevTableBytes).sum
-          else statRows.map { r =>
-            val t = r.getString(0)
-            if (resized.contains(t)) prevTableBytes(t)
-            else prevCounts.get(t).fold(0L)(n =>
-              prevTableBytes(t) * r.getSeq[Long](3).size / n)
-          }.sum
+        val baseBytes = statRows.map { r =>
+          val t = r.getString(0)
+          if (resized.contains(t)) prevTableBytes(t)
+          else prevCounts.get(t).fold(0L)(n =>
+            prevTableBytes(t) * r.getSeq[Long](3).size / n)
+        }.sum
         val estBytes = tblStats.values.sum + baseBytes
         val aqeOn = estBytes >= CdcServingTable.AqeMinBytes
         val writeParts = math.max(1L, math.min(
@@ -613,7 +593,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
               .unescapePathName(d.getName.stripPrefix("tbl=")) ->
               bucketDirBytes(d)).toMap
         lap("rewrittenBytes")
-        if (!rebucketAll) prevDir.foreach(pd =>
+        prevDir.foreach(pd =>
           VersionedStore.linkUntouchedTree(pd, nextDir,
             // a resized table is fully rewritten under its NEW modulus —
             // linking its leftover old-modulus bucket dirs in would
@@ -622,8 +602,7 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
             skipTop = resized.keySet.map(t =>
               "tbl=" + ExternalCatalogUtils.escapePathName(t))))
         // counts for EVERY table present in the new version (carried
-        // tables keep their recorded count; anything else — new tables,
-        // and the whole store on a migration rewrite — was hashed with
+        // tables keep their recorded count; new tables were hashed with
         // the settled `counts` map or its constructor-default fallback)
         val allTbls = Option(nextDir.listFiles()).getOrElse(Array.empty)
           .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
@@ -632,16 +611,16 @@ final class CdcServingTable(dir: String, pkOf: Map[String, String],
         writeBuckets(nextDir,
           allTbls.map(t => t -> counts.getOrElse(t, buckets)).toMap)
         // byte totals for every table in the new version, incrementally:
-        // fully-rewritten tables (resize/migration/new) total their own
-        // fresh subtree; partially-rewritten tables adjust the previous
-        // total by the rewritten buckets' before/after bytes (prev-side
-        // walks bounded by those same dirs); carried tables keep their
-        // recorded total (sidecar-first, one-time walk for pre-sidecar
-        // versions)
+        // resized tables total their own fresh subtree; every other
+        // rewritten table adjusts the previous total (0 for a new table)
+        // by the rewritten buckets' before/after bytes (prev-side walks
+        // bounded by those same dirs); carried tables keep their recorded
+        // total (sidecar-first, one-time walk when `_BYTES` is missing or
+        // torn)
         writeBytes(nextDir, allTbls.map { t =>
           val rw = rewrittenBytes.getOrElse(t, Map.empty)
           val total =
-            if (rebucketAll || resized.contains(t)) rw.values.sum
+            if (resized.contains(t)) rw.values.sum
             else if (rw.isEmpty) prevTableBytes(t)
             else {
               val tblDirName = "tbl=" + ExternalCatalogUtils.escapePathName(t)
@@ -763,77 +742,23 @@ final class CdcHistoryTable(dir: String, pkOf: Map[String, String]) {
   /** The changelog directory is VERSIONED with the same `_CURRENT`
     * pointer as the serving snapshot — appends land in the current
     * version, and [[compact]] commits a rewritten version atomically.
+    * That is the changelog's one layout: `tbl=*` partition dirs directly
+    * under `log/` (the flat pre-versioned layout) are refused by every
+    * read and write, naming the dir — reading past them would serve a
+    * log missing those rows, and the next append would start a version
+    * beside them.
     */
-  private def currentDir: Option[java.io.File] =
-    VersionedStore.currentVersion(logRoot)
-      .map(v => new java.io.File(logRoot, s"v$v"))
-
-  /** The flat pre-versioned `tbl=*` partition dirs, if any. */
-  private def flatDirs: Array[java.io.File] =
-    Option(new java.io.File(logRoot).listFiles())
+  private def currentDir: Option[java.io.File] = {
+    val flat = Option(new java.io.File(logRoot).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(d => d.isDirectory && d.getName.startsWith("tbl="))
-
-  /** READ-ONLY resolution: every directory that can hold committed log
-    * rows, TORN STATES INCLUDED. Never mutates: a forensic/read-only
-    * consumer (or a reader racing the writer's first append) must not
-    * trigger the destructive moves of [[adoptFlatLayout]] — adoption is
-    * a WRITE-path action — but it must still see the data an
-    * interrupted adoption left behind:
-    *   - pointer present → that version dir (plus any flat `tbl=*` dirs
-    *     a crash stranded outside it);
-    *   - no pointer but `v0` exists → a crash landed BETWEEN the moves
-    *     and the pointer swap: read v0 AND the not-yet-moved flat dirs
-    *     (reading "no pointer" as "empty" would silently vanish the
-    *     moved history until the next write heals the pointer);
-    *   - neither → the flat pre-versioned dirs alone.
-    * The flat dirs are read with `basePath = logRoot` so their `tbl=`
-    * path segments still parse as the partition column.
-    */
-  private def readFrames(
-      spark: SparkSession): Seq[DataFrame] = {
-    val unpointedV0 = {
-      val v0 = new java.io.File(logRoot, "v0")
-      if (currentDir.isEmpty && v0.isDirectory) Some(v0) else None
-    }
-    val ver = currentDir.orElse(unpointedV0)
-    val flats = flatDirs
-    Seq(
-      ver.map(d =>
-        spark.read.schema(CdcKeyed.schema).parquet(d.toString)),
-      if (flats.nonEmpty)
-        Some(spark.read.option("basePath", logRoot)
-          .schema(CdcKeyed.schema)
-          .parquet(flats.map(_.toString).toIndexedSeq: _*))
-      else None
-    ).flatten
-  }
-
-  /** MIGRATION (WRITE PATH ONLY): a changelog written by the
-    * pre-versioned revision lives flat at `<dir>/log/tbl=*` with no
-    * `_CURRENT` pointer. Reading "no pointer" as "empty log" would
-    * silently vanish existing audit history (and the next append would
-    * start a fresh v0 beside the stranded files) — so the first WRITE
-    * ([[append]]/[[compact]], both on the single-writer loop) adopts the
-    * flat partition dirs as v0: move them under `log/v0` and swap the
-    * pointer. Idempotent (after adoption the pointer resolves; a crashed
-    * adoption's already-moved dirs are absent from the flat list on
-    * retry) and same-filesystem rename, so no data is copied. Read paths
-    * never call this — see [[readFrames]].
-    */
-  private def adoptFlatLayout(): Option[java.io.File] = {
-    val flat = flatDirs
-    if (flat.isEmpty) None
-    else {
-      val v0 = new java.io.File(logRoot, "v0")
-      v0.mkdirs()
-      flat.foreach { d =>
-        java.nio.file.Files.move(d.toPath,
-          new java.io.File(v0, d.getName).toPath)
-      }
-      VersionedStore.swapPointer(logRoot, 0L)
-      Some(v0)
-    }
+    if (flat.nonEmpty) throw new IllegalStateException(
+      s"CDC history changelog at $logRoot holds flat pre-versioned " +
+        s"partition dirs (${flat.map(_.getName).sorted.mkString(", ")}) — " +
+        "move them under log/v0 and write 0 to log/_CURRENT, or replay " +
+        "into a fresh history dir")
+    VersionedStore.currentVersion(logRoot)
+      .map(v => new java.io.File(logRoot, s"v$v"))
   }
 
   /** Append one batch of envelopes to the changelog. A sink ACTION (the
@@ -841,7 +766,7 @@ final class CdcHistoryTable(dir: String, pkOf: Map[String, String]) {
     */
   def append(envelopes: Dataset[MQEvent]): Unit = {
     val keyed = CdcKeyed.changes(envelopes, pkOf)
-    val tgt = currentDir.orElse(adoptFlatLayout()).getOrElse {
+    val tgt = currentDir.getOrElse {
       val v0 = new java.io.File(logRoot, "v0")
       v0.mkdirs()
       VersionedStore.swapPointer(logRoot, 0L)
@@ -851,11 +776,11 @@ final class CdcHistoryTable(dir: String, pkOf: Map[String, String]) {
   }
 
   /** The raw changelog as appended (redelivered duplicates included). */
-  def changelog(spark: SparkSession): DataFrame = readFrames(spark) match {
-    case Seq() =>
+  def changelog(spark: SparkSession): DataFrame = currentDir match {
+    case Some(d) => spark.read.schema(CdcKeyed.schema).parquet(d.toString)
+    case None =>
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], CdcKeyed.schema)
-    case frames => frames.reduce(_ unionByName _)
   }
 
   /** Compact the changelog's small files. Each micro-batch append leaves
@@ -889,7 +814,7 @@ final class CdcHistoryTable(dir: String, pkOf: Map[String, String]) {
     * [[CdcServingTable.merge]]).
     */
   def compact(spark: SparkSession, maxFiles: Int, pruneKeep: Int): Int = {
-    val rewritten = currentDir.orElse(adoptFlatLayout()) match {
+    val rewritten = currentDir match {
       case None => 0
       case Some(cur) =>
         // partition dir names carry Spark's path ESCAPING (space, '%', ':'

@@ -371,7 +371,7 @@ private final class Carry(cur: File, next: File, manifest: Boolean) {
   * racing inside the window can still interleave; don't run two.
   *
   * Reader contract: resolve the version ONCE per read via
-  * [[snapshotPaths]] (per-table pointer reads could straddle an
+  * [[snapshot]] (per-table pointer reads could straddle an
   * admission and mix versions), and [[prune]] keeps ≥ 2 versions by
   * default so a reader holding last version's paths survives one
   * admission; consume lazy frames before pruning deeper.
@@ -405,16 +405,10 @@ private[graft] final class VersionedArtifact(indexDir: String) {
     cur
   }
 
-  /** All `tables` paths resolved against ONE pointer read. */
-  def snapshotPaths(tables: Seq[String]): Map[String, String] = {
-    val cur = requireDirReads(requireDir)
-    tables.map(t => t -> new File(cur, t).toString).toMap
-  }
-
   /** The current version's SIDECAR dir `name` (a table-shaped extra the
     * lifecycle carries but the family doesn't list in its `Tables` —
-    * e.g. the tombstone set), if present. Resolved against one pointer
-    * read like [[snapshotPaths]]; callers needing sidecar + tables from
+    * e.g. the tombstone set), if present. Resolved against its own
+    * pointer read; callers needing sidecar + tables from
     * the SAME version must use [[snapshot]] instead — two independent
     * pointer reads can straddle a PURGE, pairing pre-purge table paths
     * (deleted rows present) with an already-dropped sidecar (no
@@ -428,7 +422,7 @@ private[graft] final class VersionedArtifact(indexDir: String) {
   /** Everything a reader needs — meta, table paths, and the sidecar —
     * resolved against ONE pointer read, so no lifecycle step (admission,
     * compaction, purge) can hand a load a mixed version. The per-field
-    * accessors ([[meta]]/[[snapshotPaths]]/[[extraPath]]) each re-read
+    * accessors ([[meta]]/[[tablePath]]/[[extraPath]]) each re-read
     * the pointer; a purge swapping between a table read and a sidecar
     * read would serve pre-purge tables WITHOUT their tombstone filter —
     * the one sidecar race that is NOT benign.

@@ -183,101 +183,67 @@ class CdcHistorySpec extends SparkSpec {
       "rewrite must actually collapse the files, not write an empty version")
   }
 
-  test("flat pre-versioned changelog layout is adopted as v0, not read " +
-      "as empty") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("cdc-hist-flat").toString
-    // write a changelog with the versioned table, then SIMULATE the old
-    // flat layout by hoisting v0's tbl=* dirs up to log/ and deleting the
-    // pointer — the shape a previous revision left on disk
-    val t0 = new CdcHistoryTable(dir, Map("shop.orders" -> "id"))
-    t0.append(Seq(env("insert", 1, "a", 10, 1)).toDS())
-    val log = new java.io.File(s"$dir/log")
-    val v0 = new java.io.File(log, "v0")
-    v0.listFiles().filter(_.getName.startsWith("tbl=")).foreach { d =>
-      java.nio.file.Files.move(d.toPath,
-        new java.io.File(log, d.getName).toPath)
-    }
-    java.nio.file.Files.walk(v0.toPath)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => { java.nio.file.Files.delete(f); () })
-    log.listFiles().filter(_.getName.startsWith("_CURRENT"))
-      .foreach(f => { java.nio.file.Files.delete(f.toPath); () })
-    // a fresh handle over the flat layout must see the history…
-    val t1 = new CdcHistoryTable(dir, Map("shop.orders" -> "id"))
-    assert(t1.changelog(spark).count() === 1,
-      "flat-layout changelog read back empty after migration")
-    // …but a pure READ must not have mutated the layout: adoption moves
-    // files, and a read-only/forensic consumer (or a reader racing the
-    // writer) must never perform destructive moves
-    assert(!new java.io.File(log, "_CURRENT").exists(),
-      "read path performed the flat-layout adoption (moved files)")
-    assert(log.listFiles().exists(_.getName.startsWith("tbl=")),
-      "read path moved the flat partition dirs")
-    // the next APPEND (write path) adopts, and lands in the adopted
-    // version, not a fresh v0 beside stranded files
-    t1.append(Seq(env("update", 1, "a2", 12, 2)).toDS())
-    assert(new java.io.File(log, "_CURRENT").exists(),
-      "write path did not adopt the flat layout")
-    assert(!log.listFiles().exists(_.getName.startsWith("tbl=")),
-      "write path left stranded flat partition dirs beside the version")
-    assert(t1.changelog(spark).count() === 2)
-    val h = t1.history(spark).collect()
-    assert(h.length === 2, "adopted history rows lost after append")
+  /** Asserts `body` throws the changelog's layout refusal, naming `dir`. */
+  private def refusesLayout(dir: String)(body: => Any): Unit = {
+    val ex = intercept[IllegalStateException] { body }
+    assert(ex.getMessage.contains(dir), s"refusal names no dir: $ex")
   }
 
-  test("torn flat-layout adoption: reads see the moved AND unmoved rows " +
-      "in every crash state") {
+  /** The flat pre-versioned layout byte-for-byte: keyed rows appended
+    * straight under `<dir>/log`, partitioned by tbl, no pointer.
+    */
+  private def writeFlat(dir: String, envs: Seq[MQEvent]): java.io.File = {
+    import spark.implicits._
+    val log = new java.io.File(dir, "log")
+    CdcKeyed.changes(envs.toDS(),
+      Map("shop.orders" -> "id", "shop.users" -> "id"))
+      .write.mode("append").partitionBy("tbl").parquet(log.toString)
+    log
+  }
+
+  test("flat pre-versioned changelog layout fails loudly: changelog, " +
+      "append and compact name the log dir and move nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cdc-hist-flat").toString
+    val log = writeFlat(dir, Seq(env("insert", 1, "a", 10, 1)))
+    val flatBefore = log.list().filter(_.startsWith("tbl=")).toSet
+    assert(flatBefore === Set("tbl=shop.orders"))
+    val t = new CdcHistoryTable(dir, Map("shop.orders" -> "id"))
+    refusesLayout(log.toString) { t.changelog(spark) }
+    refusesLayout(log.toString) { t.history(spark) }
+    refusesLayout(log.toString) {
+      t.append(Seq(env("update", 1, "a2", 12, 2)).toDS())
+    }
+    refusesLayout(log.toString) { t.compact(spark, maxFiles = 0) }
+    assert(log.list().filter(_.startsWith("tbl=")).toSet === flatBefore,
+      "a refused call moved the flat partition dirs")
+    assert(!log.list().exists(n => n.startsWith("_CURRENT") ||
+      n.startsWith("v")), "a refused call started a version")
+  }
+
+  test("torn flat-layout adoption fails loudly: with one dir under an " +
+      "unpointed v0 and one still flat, reads and writes name the log dir") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-hist-torn").toString
-    // two tables in the flat pre-versioned layout
-    val t0 = new CdcHistoryTable(dir,
+    val log = writeFlat(dir, Seq(env("insert", 1, "a", 10, 1),
+      env("insert", 2, "b", 11, 2).copy(table = "users")))
+    // an adoption interrupted mid-move: one partition dir already inside
+    // an unpointed v0, the other still flat
+    val v0 = new java.io.File(log, "v0"); assert(v0.mkdirs())
+    Files.move(new java.io.File(log, "tbl=shop.orders").toPath,
+      new java.io.File(v0, "tbl=shop.orders").toPath)
+    val t = new CdcHistoryTable(dir,
       Map("shop.orders" -> "id", "shop.users" -> "id"))
-    t0.append(Seq(env("insert", 1, "a", 10, 1),
-      env("insert", 2, "b", 11, 2).copy(table = "users")).toDS())
-    val log = new java.io.File(s"$dir/log")
-    val v0 = new java.io.File(log, "v0")
-    val flats = v0.listFiles().filter(_.getName.startsWith("tbl="))
-    assert(flats.length === 2, "fixture needs two partition dirs")
-    flats.foreach { d =>
-      java.nio.file.Files.move(d.toPath,
-        new java.io.File(log, d.getName).toPath)
+    refusesLayout(log.toString) { t.changelog(spark) }
+    refusesLayout(log.toString) { t.asOf(spark, 20) }
+    refusesLayout(log.toString) {
+      t.append(Seq(env("update", 1, "a2", 12, 3)).toDS())
     }
-    java.nio.file.Files.walk(v0.toPath)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => { java.nio.file.Files.delete(f); () })
-    log.listFiles().filter(_.getName.startsWith("_CURRENT"))
-      .foreach(f => { java.nio.file.Files.delete(f.toPath); () })
-
-    // CRASH STATE 1 — mid-move: one dir already inside an unpointed v0,
-    // the other still flat. The old readDir handed spark.read the log
-    // root (v0 + tbl=* siblings → conflicting partition structure).
-    val midV0 = new java.io.File(log, "v0"); midV0.mkdirs()
-    val moved = log.listFiles()
-      .filter(_.getName.startsWith("tbl=")).head
-    java.nio.file.Files.move(moved.toPath,
-      new java.io.File(midV0, moved.getName).toPath)
-    val t1 = new CdcHistoryTable(dir,
-      Map("shop.orders" -> "id", "shop.users" -> "id"))
-    assert(t1.changelog(spark).count() === 2,
-      "mid-move crash state lost rows on read")
-
-    // CRASH STATE 2 — all dirs moved, pointer swap never happened: the
-    // old readDir resolved None and served an EMPTY changelog
-    log.listFiles().filter(_.getName.startsWith("tbl=")).foreach { d =>
-      java.nio.file.Files.move(d.toPath,
-        new java.io.File(midV0, d.getName).toPath)
-    }
-    assert(new CdcHistoryTable(dir,
-      Map("shop.orders" -> "id", "shop.users" -> "id"))
-      .changelog(spark).count() === 2,
-      "unpointed-v0 crash state read back empty")
-
-    // the next WRITE heals: pointer lands, rows intact
-    t1.append(Seq(env("update", 1, "a2", 12, 3)).toDS())
-    assert(new java.io.File(log, "_CURRENT").exists(),
-      "write path did not heal the torn adoption")
-    assert(t1.changelog(spark).count() === 3)
+    refusesLayout(log.toString) { t.compact(spark, maxFiles = 0) }
+    assert(!new java.io.File(log, "_CURRENT").exists(),
+      "a refused write pointed the torn v0")
+    assert(new java.io.File(log, "tbl=shop.users").isDirectory,
+      "a refused write moved the still-flat dir")
   }
 
   test("tables without a configured pk never reach the log") {

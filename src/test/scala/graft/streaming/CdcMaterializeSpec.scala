@@ -168,41 +168,36 @@ class CdcMaterializeSpec extends SparkSpec {
     assert(rows("1").contains("n1b"))
   }
 
-  test("r11 tbl-only layout is migrated (one full rewrite), not lost or " +
-      "mixed") {
+  /** Asserts `body` throws the store's layout refusal, naming `dir`. */
+  private def refusesLayout(dir: String)(body: => Any): Unit = {
+    val ex = intercept[IllegalStateException] { body }
+    assert(ex.getMessage.contains(dir), s"refusal names no dir: $ex")
+  }
+
+  test("r11 tbl-only layout fails loudly: raw, snapshot and merge name " +
+      "the version dir and leave the store as found") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-serve-legacy").toString
-    val t = new CdcServingTable(dir, Map("shop.orders" -> "id"))
-    t.merge(Seq(env("insert", 1, "a", 10, 1), env("insert", 2, "b", 11, 2)).toDS())
-    // SIMULATE the r11 layout: hoist each bucket's files up to the tbl=
-    // dir and drop the pkb= level (partition columns are not in the data
-    // files, so the flattened files ARE the legacy layout byte-for-byte)
-    val tblDir = new java.io.File(dir, "v0/tbl=shop.orders")
-    tblDir.listFiles().filter(_.getName.startsWith("pkb=")).foreach { b =>
-      b.listFiles().filter(_.isFile).foreach { f =>
-        if (f.getName.endsWith(".parquet"))
-          Files.move(f.toPath, new java.io.File(tblDir,
-            s"b${b.getName.stripPrefix("pkb=")}-${f.getName}").toPath)
-        else assert(f.delete()) // crc sidecars: renaming breaks their
-        // hidden-dot prefix and Spark would read them as data files
-      }
-      assert(b.delete(), s"could not drop legacy-sim dir $b")
+    val pk = Map("shop.orders" -> "id")
+    // the r11 layout byte-for-byte: keyed rows partitioned by tbl only,
+    // no pkb= level, no sidecars, committed by the pointer
+    val v0 = new java.io.File(dir, "v0")
+    CdcKeyed.changes(Seq(env("insert", 1, "a", 10, 1),
+      env("insert", 2, "b", 11, 2)).toDS(), pk)
+      .write.partitionBy("tbl").parquet(v0.toString)
+    VersionedStore.swapPointer(dir, 0L)
+    val t = new CdcServingTable(dir, pk)
+    refusesLayout(v0.toString) { t.raw(spark) }
+    refusesLayout(v0.toString) { t.snapshot(spark) }
+    refusesLayout(v0.toString) {
+      t.merge(Seq(env("update", 1, "a2", 12, 3)).toDS())
     }
-    // the tbl dir's own crc sidecars from the bucketed write are stale now
-    Option(tblDir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.endsWith(".crc"))
-      .foreach(f => { f.delete(); () })
-    // reads over the legacy layout still serve
-    assert(liveRows(t).keySet === Set("1", "2"))
-    // the next merge migrates the WHOLE store to the bucketed layout
-    t.merge(Seq(env("update", 1, "a2", 12, 3)).toDS())
-    val rows = liveRows(t)
-    assert(rows.keySet === Set("1", "2"), "migration lost a quiet key")
-    assert(rows("1").contains("a2"))
-    val v1tbl = new java.io.File(dir, "v1/tbl=shop.orders")
-    assert(v1tbl.listFiles().forall(f =>
-      f.isDirectory && f.getName.startsWith("pkb=")),
-      "migrated version must be fully bucketed (no mixed depth)")
+    assert(VersionedStore.currentVersion(dir).contains(0L) &&
+      !new java.io.File(dir, "v1").exists(),
+      "a refused merge committed a version")
+    assert(new java.io.File(v0, "tbl=shop.orders").listFiles()
+      .forall(f => !f.getName.startsWith("pkb=")),
+      "a refused merge rewrote the legacy version")
   }
 
   test("bootstrap: snapshot with source versions + overlapping replay " +
@@ -355,27 +350,26 @@ class CdcMaterializeSpec extends SparkSpec {
   }
 
   test("a bucketed store WITHOUT recorded counts (pre-sidecar revision) " +
-      "is re-bucketed whole on the next merge, then carries counts") {
+      "fails loudly: reads and merges name the version dir") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-serve-nosidecar").toString
     val t4 = new CdcServingTable(dir, Map("shop.orders" -> "id"),
       buckets = 4, autoSizeTargetBytes = 0L)
     t4.merge((1L to 16L).map(i => env("insert", i, s"n$i", 10, i)).toDS())
-    // simulate an r12 store: bucketed layout, no _BUCKETS sidecar
+    // simulate an r12 store: bucketed layout, no _BUCKETS sidecar — the
+    // modulus its files were hashed with is unknowable
     assert(new java.io.File(dir, "v0/_BUCKETS").delete())
+    val v0 = new java.io.File(dir, "v0").toString
     val t16 = new CdcServingTable(dir, Map("shop.orders" -> "id"),
       buckets = 16, autoSizeTargetBytes = 0L)
-    t16.merge(Seq(env("update", 1, "u1", 20, 99)).toDS())
-    // the migration rewrite hashed EVERY row with the new modulus and
-    // recorded it — no mod-4 dirs can survive into the mod-16 layout
-    // unrewritten, and the update must win cleanly
-    assert(new java.io.File(dir, "v1/_BUCKETS").isFile,
-      "migrated version must record its bucket counts")
-    val rows = liveRows(t16)
-    assert(rows.keySet === (1L to 16L).map(_.toString).toSet)
-    assert(rows("1").contains("u1"))
-    (1L to 16L).foreach(i => assert(rawRowsFor(t16, i.toString) === 1L,
-      s"key $i duplicated by the no-sidecar migration"))
+    refusesLayout(v0) { t16.raw(spark) }
+    refusesLayout(v0) { t16.snapshot(spark) }
+    refusesLayout(v0) {
+      t16.merge(Seq(env("update", 1, "u1", 20, 99)).toDS())
+    }
+    assert(VersionedStore.currentVersion(dir).contains(0L) &&
+      !new java.io.File(dir, "v1").exists(),
+      "a refused merge committed a version")
   }
 
   test("auto-sizing: a touched table re-buckets to its byte-sized " +
@@ -425,26 +419,32 @@ class CdcMaterializeSpec extends SparkSpec {
       "quiet table's layout changed without being touched")
   }
 
+  /** Version `v`'s recorded `_BYTES` totals, asserted present. */
+  private def bytesSidecar(dir: String, v: Int): Map[String, Long] = {
+    val f = new java.io.File(dir, s"v$v/_BYTES")
+    assert(f.isFile, s"v$v has no _BYTES sidecar")
+    new String(java.nio.file.Files.readAllBytes(f.toPath))
+      .split("\n").filter(_.nonEmpty).map { line =>
+        val i = line.lastIndexOf('\t')
+        line.substring(0, i) -> line.substring(i + 1).toLong
+      }.toMap
+  }
+
+  /** Version `v`'s per-table parquet bytes, from a fresh walk. */
+  private def walkedBytes(dir: String, v: Int): Map[String, Long] =
+    Option(new java.io.File(dir, s"v$v").listFiles())
+      .getOrElse(Array.empty).filter(d => d.isDirectory &&
+        d.getName.startsWith("tbl=")).map { d =>
+        d.getName.stripPrefix("tbl=") ->
+          parquetFilesUnder(d).map(_.length).sum
+      }.toMap
+
   test("_BYTES sidecar: recorded per-table totals equal a fresh walk " +
       "after partial merges, resizes, and a pre-sidecar reopen") {
     import spark.implicits._
     val dir = Files.createTempDirectory("cdc-serve-bytes").toString
-    def sidecar(v: Int): Map[String, Long] = {
-      val f = new java.io.File(dir, s"v$v/_BYTES")
-      assert(f.isFile, s"v$v has no _BYTES sidecar")
-      new String(java.nio.file.Files.readAllBytes(f.toPath))
-        .split("\n").filter(_.nonEmpty).map { line =>
-          val i = line.lastIndexOf('\t')
-          line.substring(0, i) -> line.substring(i + 1).toLong
-        }.toMap
-    }
-    def walked(v: Int): Map[String, Long] =
-      Option(new java.io.File(dir, s"v$v").listFiles())
-        .getOrElse(Array.empty).filter(d => d.isDirectory &&
-          d.getName.startsWith("tbl=")).map { d =>
-          d.getName.stripPrefix("tbl=") ->
-            parquetFilesUnder(d).map(_.length).sum
-        }.toMap
+    def sidecar(v: Int): Map[String, Long] = bytesSidecar(dir, v)
+    def walked(v: Int): Map[String, Long] = walkedBytes(dir, v)
     val t = new CdcServingTable(dir,
       Map("shop.orders" -> "id", "shop.audit" -> "id"),
       buckets = 4, autoSizeTargetBytes = 1L << 30)
@@ -473,6 +473,31 @@ class CdcMaterializeSpec extends SparkSpec {
       buckets = 4, autoSizeTargetBytes = 512L)
     t3.merge(Seq(env("update", 4, "u4", 50, 400)).toDS())
     assert(sidecar(4) === walked(4), "resize-rewrite totals wrong")
+  }
+
+  test("_BYTES sidecar: a malformed line (no tab) falls back to the walk, " +
+      "and the next merge records totals equal to a fresh walk") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cdc-serve-badbytes").toString
+    val t = new CdcServingTable(dir,
+      Map("shop.orders" -> "id", "shop.audit" -> "id"),
+      buckets = 4, autoSizeTargetBytes = 1L << 30)
+    t.merge(((1L to 16L).map(i => env("insert", i, s"n$i", 10, i)) :+
+      env("insert", 50, "log", 10, 50).copy(table = "audit")).toDS())
+    val seeded = bytesSidecar(dir, 0)
+    assert(seeded.keySet === Set("shop.orders", "shop.audit"))
+    // a torn write: a line with no tab after the valid ones — the whole
+    // sidecar is distrusted, never half-read
+    val f = new java.io.File(dir, "v0/_BYTES")
+    Files.write(f.toPath, (new String(Files.readAllBytes(f.toPath)) +
+      "\nshop.orders 999").getBytes)
+    // orders touched (prev total from the walk), audit carried (its
+    // total from the walk alone)
+    t.merge(Seq(env("update", 1, "u1", 20, 99)).toDS())
+    assert(bytesSidecar(dir, 1) === walkedBytes(dir, 1),
+      "totals recorded over a malformed sidecar drifted from the walk")
+    assert(bytesSidecar(dir, 1)("shop.audit") === seeded("shop.audit"))
+    assert(liveRows(t)("1").contains("u1"))
   }
 
   test("auto-sizing seeds a NEW table from its first batch's bytes: a " +

@@ -214,7 +214,6 @@ class ManifestCarrierSpec extends SparkSpec {
     art.build({ ver =>
       writeParquet(0L until 10L, new File(ver, "alpha/base_00000.parquet"))
     }, buildMeta = VersionedArtifact.ManifestMeta)
-    intercept[IllegalArgumentException] { art.snapshotPaths(Seq("alpha")) }
     intercept[IllegalArgumentException] { art.snapshot(Seq("alpha"), "t") }
     intercept[IllegalArgumentException] { art.extraPath("tombstones") }
     intercept[IllegalArgumentException] { art.tablePath("alpha") }
